@@ -1343,8 +1343,9 @@ def _q_json_valid_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_events_verdict_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verdict machinery (posexplode_outer single-scan counting + static
-    rule_id cross, validate.py:200-243) under the hash oracle: the
+    """Verdict machinery (posexplode_outer single-scan counting, one
+    per-bucket aggregate with a count_if per static rule_id unpivoted by
+    inline — ``validate.verdicts_from``) under the hash oracle: the
     table-level per-rule rollup."""
     return _events_run(spark, sf_dir).summary().select(
         "rule_id", "pass",
@@ -1813,6 +1814,10 @@ def _jaccard_pairs05(spark: SparkSession, sf_dir: str) -> DataFrame:
                .persist(StorageLevel.MEMORY_AND_DISK))
         out.count()
         band.unpersist()
+        # jaccard_pairs persists its result only when it builds its own
+        # sets, so this is a no-op today; it keeps `out` the pass's only
+        # resident cache if that policy changes (as _simhash_pairs_cached)
+        rep_pairs.unpersist()
         _PAIRS05_CACHE[key] = out
     return _PAIRS05_CACHE[key]
 

@@ -314,3 +314,31 @@ def test_run_incremental_rule_change_revalidates_all(spark, small_df,
                                       buckets_per_job=4),
                          prev_run_id="a")
     assert sorted(r2.buckets_processed) == list(range(4))
+
+
+def test_repeated_rule_ids_one_verdict_per_bucket(spark, tmp_path):
+    """Two same-named leaves report under one rule_id: the run counts
+    every row once and writes one verdict (and one observer event) per
+    (bucket, rule_id), also for buckets that received no rows."""
+    df = spark.range(40).select(
+        (F.col("id") / 2).cast("long").alias("conv_id"),
+        (F.col("id") % 2).cast("int").alias("turn_idx"),
+        F.repeat(F.lit("x"), (F.col("id") % 5).cast("int")).alias("text"))
+    cfg = ValidationConfig(num_buckets=64)
+    rs = RuleSet({"text": R.max_length(3) & R.max_length(2)}, cfg)
+    assert rs.rule_ids() == ["text.max_length", "text.max_length"]
+    events = []
+    res = run_checkpointed(
+        df, rs, RunnerConfig(work_dir=str(tmp_path / "w"), run_id="r1"),
+        observer=events.extend)
+
+    assert res.rows_checked == 40
+    v = res.verdicts
+    assert v.count() == 64
+    assert v.select("partition_id", "rule_id").distinct().count() == 64
+    tot = v.agg(F.sum("rows_checked"), F.sum("violation_count")).first()
+    # lengths 0..4 repeat 8 times: 8 rows fail max_length(3), 16 fail (2)
+    assert tuple(tot) == (40, 24)
+    assert validate(df, rs).violations.count() == 24
+    assert len(events) == 64
+    assert len({(e.partition_id, e.rule_id) for e in events}) == 64

@@ -42,7 +42,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .validate import BUCKET_COL, RuleSet, bucket_expr, verdicts_from
+from .validate import (BUCKET_COL, RuleSet, bucket_expr, verdicts_from,
+                       violations_from)
 
 STATE_SCHEMA = (
     "run_id string, rule_set_hash string, partition_id int, status string, "
@@ -141,7 +142,8 @@ def run_checkpointed(
     spark = df.sparkSession
     vcfg = ruleset.config
     rsh = rule_set_hash(ruleset)
-    rule_ids = ruleset.rule_ids()
+    # repeated ids (same-named leaves) share one verdict row per bucket
+    rule_ids = list(dict.fromkeys(ruleset.rule_ids()))
 
     done = _completed_buckets(spark, cfg, rsh)
     all_buckets = list(range(vcfg.num_buckets))
@@ -169,7 +171,7 @@ def run_checkpointed(
             errs = sub.select(*keys, BUCKET_COL, errors_col.alias("_errors"))
             errs = errs.persist()
             try:
-                viol = _explode_violations(errs, keys).withColumns({
+                viol = violations_from(errs, keys).withColumns({
                     "run_id": F.lit(cfg.run_id),
                     "rule_set_hash": F.lit(rsh),
                 })
@@ -195,21 +197,20 @@ def run_checkpointed(
             finally:
                 errs.unpersist()
 
-            seen = {r[BUCKET_COL] for r in verd}
+            rows_by_bucket = {r[BUCKET_COL]: r["rows_checked"] for r in verd}
             state_rows = [
-                (cfg.run_id, rsh, int(r[BUCKET_COL]), "done", r["rule_id"],
-                 int(r["violation_count"]), int(r["rows_checked"]),
+                (cfg.run_id, rsh, r[BUCKET_COL], "done", r["rule_id"],
+                 r["violation_count"], r["rows_checked"],
                  cfg.snapshot_id, time.time())
                 for r in verd
+            ] + [
+                # buckets with zero rows in this batch are still complete
+                (cfg.run_id, rsh, b, "done", rid, 0, 0, cfg.snapshot_id,
+                 time.time())
+                for b in batch if b not in rows_by_bucket for rid in rule_ids
             ]
-            # buckets with zero rows in this batch are still complete
-            for b in batch:
-                if b not in seen:
-                    for rid in rule_ids:
-                        state_rows.append((cfg.run_id, rsh, b, "done", rid,
-                                           0, 0, cfg.snapshot_id, time.time()))
-            total_rows += sum(int(r["rows_checked"]) for r in verd) // max(len(rule_ids), 1)
-            (spark.createDataFrame(state_rows, STATE_SCHEMA)
+            total_rows += sum(rows_by_bucket.values())
+            (_local_frame(spark, state_rows, STATE_SCHEMA)
              .coalesce(1).write.mode("append").parquet(cfg.state_path))
             if observer is not None:
                 from .observer import VerdictEvent
@@ -409,25 +410,6 @@ def run_incremental(
     )
 
 
-def _explode_violations(errs: DataFrame, keys: Sequence[str]) -> DataFrame:
-    e = F.col("_e")
-    return (
-        errs
-        .select(*keys, BUCKET_COL, F.explode("_errors").alias("_e"))
-        .select(
-            e["rule_id"].alias("rule_id"),
-            *keys,
-            e["field_path"].alias("field_path"),
-            e["message"].alias("message"),
-            e["code"].alias("code"),
-            e["severity"].alias("severity"),
-            e["expected"].alias("expected"),
-            e["actual"].alias("actual"),
-            F.col(BUCKET_COL),
-        )
-    )
-
-
 def _clear_bucket_partitions(spark: SparkSession, cfg: RunnerConfig,
                              rsh: str, buckets: Sequence[int]) -> None:
     """Remove the sink partition dirs about to be (re)written — the
@@ -454,12 +436,27 @@ def _empty_violations(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     diff_runs/unions across runs never hit type mismatches."""
     key_ddl = ", ".join(
         f"{k} {df.schema[k].dataType.simpleString()}" for k in keys)
-    return df.sparkSession.createDataFrame(
-        [],
+    return _local_frame(
+        df.sparkSession, [],
         f"rule_id string, {key_ddl}, field_path array<string>, "
         "message string, code string, severity string, expected string, "
         f"actual string, run_id string, rule_set_hash string, {BUCKET_COL} int",
     )
+
+
+def _local_frame(spark: SparkSession, rows: Sequence[tuple],
+                 ddl: str) -> DataFrame:
+    """Python-side ``rows`` as a DataFrame of schema ``ddl``. Shipped as a
+    ``pyarrow.Table``, they reach the JVM as a local relation; a Python
+    list would become a pickled Python RDD (an ``ExistingRDD`` scan)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = DataType.fromDDL(ddl)
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                 schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 def history_anomalies(state: DataFrame, k_sigma: float = 3.0,

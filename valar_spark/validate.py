@@ -145,7 +145,7 @@ class ValidationRun:
     ``violations`` and ``verdicts`` are independent DataFrames over the same
     compiled projection; Spark recomputes the (cheap, codegen'd) scan for
     each unless :meth:`persist` is called. The checkpointing runner instead
-    writes violations once and derives verdicts from the sink — see
+    persists each batch's projection and derives both from it — see
     ``runner.py``.
     """
 
@@ -179,25 +179,7 @@ class ValidationRun:
 
     @property
     def violations(self) -> DataFrame:
-        # no size(...)>0 pre-filter: explode of an empty array already emits
-        # nothing, and a filter would duplicate the whole compiled rule
-        # expression into a second (and scan-pushed third) evaluation
-        e = F.col("_e")
-        return (
-            self._errs
-            .select(*self.keys, BUCKET_COL, F.explode("_errors").alias("_e"))
-            .select(
-                e["rule_id"].alias("rule_id"),
-                *self.keys,
-                BUCKET_COL,
-                e["field_path"].alias("field_path"),
-                e["message"].alias("message"),
-                e["code"].alias("code"),
-                e["severity"].alias("severity"),
-                e["expected"].alias("expected"),
-                e["actual"].alias("actual"),
-            )
-        )
+        return violations_from(self._errs, self.keys)
 
     @property
     def verdicts(self) -> DataFrame:
@@ -262,49 +244,58 @@ class ValidationRun:
             F.round(F.col("cost_sec") / F.lit(max(total, 1e-9)), 4))
 
 
+def violations_from(errs: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """One row per ValidationError of a frame with an ``_errors`` array
+    column: ``(rule_id, <keys>, partition_id, field_path, message, code,
+    severity, expected, actual)``."""
+    # no size(...)>0 pre-filter: explode of an empty array already emits
+    # nothing, and a filter would duplicate the whole compiled rule
+    # expression into a second (and scan-pushed third) evaluation
+    e = F.col("_e")
+    fields = ("field_path", "message", "code", "severity", "expected",
+              "actual")
+    return (
+        errs.select(*keys, BUCKET_COL, F.explode("_errors").alias("_e"))
+        .select(e["rule_id"].alias("rule_id"), *keys, BUCKET_COL,
+                *[e[f].alias(f) for f in fields])
+    )
+
+
 def verdicts_from(errs: DataFrame, rule_ids: Sequence[str], bucket_col: str = BUCKET_COL) -> DataFrame:
     """(partition_id, rule_id, pass, violation_count, rows_checked) from a
-    frame with an ``_errors`` array column. Rules with zero violations still
-    appear (pass=true) — the static rule_id list is crossed with the
-    observed buckets.
+    frame with an ``_errors`` array column: one row per observed bucket and
+    distinct static rule id, so rules with zero violations still appear
+    (pass=true); errors under other rule ids are not counted.
 
-    ONE scan of ``errs``: ``posexplode_outer`` keeps a marker row for
-    error-free rows, so per-bucket row counts and per-(bucket, rule)
-    violation counts come out of a single groupBy (a source row is counted
-    once via its first exploded position). The round-1 shape scanned the
-    compiled rule projection twice — 2× the whole validation pass for any
-    caller that didn't persist."""
-    spark = errs.sparkSession
-    ex = errs.select(
-        bucket_col, F.posexplode_outer("_errors").alias("_pos", "_e"))
-    first_of_row = (F.col("_pos") == 0) | F.col("_pos").isNull()
+    ONE scan, ONE aggregate, no join: ``posexplode_outer`` keeps a marker
+    row for error-free rows, so one ``groupBy(bucket)`` counts each source
+    row once (its first exploded position) beside one ``count_if`` per rule
+    id, and ``inline`` unpivots those columns into rows. ``count_if`` on
+    the exploded rows is code-generated; a per-rule ``filter`` over the
+    array would be an interpreted higher-order function."""
+    rids = list(dict.fromkeys(rule_ids))
+    rid = F.col("_e")["rule_id"]
     g = (
-        ex.groupBy(bucket_col,
-                   F.coalesce(F.col("_e")["rule_id"], F.lit("\u0000"))
-                   .alias("rule_id"))
-        .agg(F.count("_e").alias("violation_count"),
-             F.sum(first_of_row.cast("long")).alias("_first_rows"))
+        errs.select(bucket_col,
+                    F.posexplode_outer("_errors").alias("_pos", "_e"))
+        .groupBy(bucket_col)
+        .agg(F.count_if(F.coalesce(F.col("_pos") == 0, F.lit(True)))
+             .alias("rows_checked"),
+             *[F.count_if(rid == F.lit(r)).alias(f"_v{i}")
+               for i, r in enumerate(rids)])
     )
-    # g is ≤ buckets × (rules+1) rows — the rollups below are driver-cheap
-    per_bucket = g.groupBy(bucket_col).agg(
-        F.sum("_first_rows").alias("rows_checked"))
-    viol = g.filter(F.col("rule_id") != "\u0000").select(
-        bucket_col, "rule_id", "violation_count")
-    # rule_ids may repeat (two same-named leaves on one column report under
-    # one id) — dedupe so the cross join can't double verdict rows/counts
-    rules_df = spark.createDataFrame(
-        [(r,) for r in dict.fromkeys(rule_ids)], "rule_id string")
+    # the cast types the array even when there are no rule ids
+    # (``inline(array())`` fails analysis) — the result is then empty
+    per_rule = F.array(*[
+        F.struct(F.lit(r).alias("rule_id"),
+                 F.col(f"_v{i}").alias("violation_count"))
+        for i, r in enumerate(rids)
+    ]).cast("array<struct<rule_id:string,violation_count:bigint>>")
     return (
-        per_bucket.crossJoin(F.broadcast(rules_df))
-        .join(viol, [bucket_col, "rule_id"], "left")
-        .select(
-            F.col(bucket_col),
-            "rule_id",
-            F.coalesce("violation_count", F.lit(0)).alias("violation_count"),
-            "rows_checked",
-        )
-        .withColumn("pass", F.col("violation_count") == 0)
-        .select(bucket_col, "rule_id", "pass", "violation_count", "rows_checked")
+        g.select(bucket_col, "rows_checked", F.inline(per_rule))
+        .select(bucket_col, "rule_id",
+                (F.col("violation_count") == 0).alias("pass"),
+                "violation_count", "rows_checked")
     )
 
 
