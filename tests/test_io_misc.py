@@ -865,3 +865,134 @@ def test_stream_special_token_flags_matches_batch_census(spark, tmp_path):
               for r in special_token_leakage(df).collect()}
     assert census == {"stop_token": 1, "chatml_marker": 1,
                       "role_prefix": 1}
+
+
+@pytest.mark.parametrize("bad", ["30 min", "30minutes", "thirty seconds",
+                                 "30 seconds later", "0 seconds",
+                                 "-5 minutes", ""])
+@pytest.mark.parametrize("monitor", ["stream_tool_echo", "stream_verbosity",
+                                     "stream_transition_violations"])
+def test_streaming_close_after_malformed_names_units(spark, monitor, bad):
+    """A malformed close_after fails when the monitor is built, with a
+    ValueError that lists the accepted units — not a KeyError or a tuple
+    unpack error from inside the parser."""
+    from valar_spark import streaming
+
+    df = spark.createDataFrame(
+        [], "conv_id string, turn_idx int, role string, text string")
+    kw = {"terminal": ["assistant"]} \
+        if monitor == "stream_transition_violations" else {}
+    with pytest.raises(ValueError, match="second, seconds, minute") as ei:
+        getattr(streaming, monitor)(df, close_after=bad, **kw)
+    assert repr(bad) in str(ei.value)
+    # the same monitor accepts the documented format
+    getattr(streaming, monitor)(df, close_after="90 seconds", **kw)
+
+
+def test_stream_tool_echo_idle_eviction_never_false_flags(spark, tmp_path):
+    """Idle eviction through the shared walker: conv A's tool turn is
+    evicted after close_after of silence, so A's echoing assistant turn
+    arriving later re-opens A with no previous turn and is NOT flagged,
+    while a control conversation C that pairs tool -> echo inside the
+    same micro-batch IS flagged. The test waits on the state-store row
+    count for the eviction and polls the sink, as processAllAvailable
+    never settles while processing-time timeouts are armed."""
+    import time as _time
+
+    from valar_spark.streaming import stream_tool_echo
+
+    tool_out = "result: 42 items found in the index at position seven"
+    schema = "conv_id string, turn_idx int, role string, text string"
+    src = str(tmp_path / "evict_src")
+    spark.createDataFrame(
+        [("A", 0, "user", "please search"), ("A", 1, "tool", tool_out)],
+        schema).coalesce(1).write.mode("overwrite").parquet(f"{src}/b1")
+    stream = spark.readStream.schema(schema).parquet(f"{src}/b*")
+    q = (stream_tool_echo(stream, close_after="2 seconds")
+         .writeStream.format("memory").queryName("evict_mem")
+         .option("checkpointLocation", str(tmp_path / "evict_ck"))
+         .trigger(processingTime="1 second")
+         .outputMode("append").start())
+
+    def state_rows():
+        p = q.lastProgress
+        return (p["stateOperators"][0]["numRowsTotal"]
+                if p and p["stateOperators"] else None)
+
+    try:
+        deadline = _time.time() + 60
+        seen_a = False
+        while _time.time() < deadline:
+            n = state_rows()
+            seen_a = seen_a or n == 1
+            if seen_a and n == 0:
+                break
+            _time.sleep(0.5)
+        assert seen_a and state_rows() == 0, "A was never evicted"
+        spark.createDataFrame(
+            [("A", 2, "assistant", "The tool said: " + tool_out),
+             ("C", 0, "tool", tool_out),
+             ("C", 1, "assistant", "Echo: " + tool_out)],
+            schema).coalesce(1).write.mode("overwrite").parquet(f"{src}/b2")
+        rows = []
+        deadline = _time.time() + 60
+        while _time.time() < deadline:
+            rows = spark.sql("SELECT * FROM evict_mem").collect()
+            if rows:
+                break
+            _time.sleep(1)
+    finally:
+        q.stop()
+    assert [(r["conv"], r["turn_idx"]) for r in rows] == [("C", 1)]
+
+
+def test_stream_verdict_counts_match_batch_groupby(spark, tmp_path):
+    """Watermarked verdict counts: once the watermark passes, every
+    (window, bucket, rule_id) count in the append stream equals a batch
+    groupBy over the violations of the same rows."""
+    import time as _time
+
+    from valar_spark.streaming import stream_verdict_counts
+
+    rules = {"text": R.non_empty(), "turn_idx": R.non_negative()}
+    schema = "conv_id string, turn_idx int, text string, ts timestamp"
+
+    def frame(rows):
+        return spark.createDataFrame(
+            rows, "conv_id string, turn_idx int, text string, ts string"
+        ).select("conv_id", "turn_idx", "text",
+                 F.col("ts").cast("timestamp"))
+
+    data = frame([
+        (f"c{i % 7}", -1 if i % 5 == 0 else i, "" if i % 3 == 0 else "ok",
+         f"2026-01-01 00:0{i % 4}:{(7 * i) % 60:02d}")
+        for i in range(60)])
+    # a clean row far ahead in event time: pushes the watermark past
+    # every data window so append mode emits them all
+    flush = frame([("c0", 999, "ok", "2026-01-01 00:30:00")])
+    src = str(tmp_path / "vc_src")
+    data.coalesce(1).write.mode("overwrite").parquet(f"{src}/b1")
+    _time.sleep(1.1)  # file-source orders by mtime
+    flush.coalesce(1).write.mode("overwrite").parquet(f"{src}/b2")
+
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", "1").parquet(f"{src}/b*"))
+    q = (stream_verdict_counts(stream, rules).writeStream
+         .format("memory").queryName("vc_mem")
+         .option("checkpointLocation", str(tmp_path / "vc_ck"))
+         .outputMode("append").start())
+    q.processAllAvailable()
+    q.stop()
+
+    def key(r):
+        return (r["window"]["start"], r["partition_id"], r["rule_id"])
+
+    got = {key(r): r["violation_count"]
+           for r in spark.sql("SELECT * FROM vc_mem").collect()}
+    want = {key(r): r["violation_count"] for r in (
+        validate(data, rules, keys=("conv_id", "turn_idx", "ts"))
+        .violations
+        .groupBy(F.window("ts", "1 minute"), "partition_id", "rule_id")
+        .agg(F.count(F.lit(1)).alias("violation_count"))
+        .collect())}
+    assert len(want) > 4 and got == want

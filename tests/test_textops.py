@@ -1303,3 +1303,23 @@ def test_vocab_growth_curve(spark):
     assert got[0] == (5, 3, 3, 100.0, 3)
     assert got[1] == (5, 3, 1, round(100.0 / 3, 4), 4)
     assert len(got) == 2
+
+
+@pytest.mark.parametrize("key_bits,ids", [
+    (32, [3, 1 << 16]), (32, [-1, 2]),
+    (64, [0, 1 << 31]), (64, [-5, 7]),
+])
+def test_pair_blob_emit_rejects_ids_outside_key_width(key_bits, ids):
+    # a posting list outside the packed-key id domain must raise instead
+    # of emitting overflowed/truncated pair keys
+    import pandas as pd
+
+    from valar_spark.textops import _pair_emit_blob_batches
+
+    batch = pd.DataFrame({"_ids": [[0, 1], ids]})
+    with pytest.raises(ValueError, match=f"{key_bits}-bit keys"):
+        list(_pair_emit_blob_batches(4, key_bits)(iter([batch])))
+    # the largest in-domain ids still pass
+    top = (1 << 16) - 1 if key_bits == 32 else (1 << 31) - 1
+    ok = pd.DataFrame({"_ids": [[0, top]]})
+    assert list(_pair_emit_blob_batches(4, key_bits)(iter([ok])))

@@ -3271,27 +3271,6 @@ def text_equality_mismatches(
     )
 
 
-def text_equality_violations(
-    df: DataFrame,
-    expected: DataFrame,
-    keys: Sequence[str] = ("conv_id", "turn_idx"),
-    text_col: str = "text",
-    rule_id: str = "dataset.text_equality",
-) -> DataFrame:
-    bad = text_equality_mismatches(df, expected, keys, text_col)
-    return _as_violations(
-        bad,
-        rule_id,
-        E.CODE_TEXT_MISMATCH,
-        F.lit("per-turn text differs from reference under stable "
-              f"({', '.join(keys)}) ordering"),
-        keys=keys,
-        field_path=[text_col],
-        expected=F.col("_expected_text"),
-        actual=F.col(text_col),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Snapshot reconciliation — keyed diff between two table versions
 # ---------------------------------------------------------------------------

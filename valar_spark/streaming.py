@@ -5,6 +5,11 @@ compiled projection applies verbatim to a streaming DataFrame: violations
 become an append-mode stream, per-bucket verdict counts a watermarked
 windowed aggregation. Batch semantics are the source of truth — streaming
 reuses the exact Column expressions, so parity holds by construction.
+
+The per-conversation stateful monitors (integrity, transition grammar,
+tool echo/grounding, parrot, corrections, verbosity) all run on one
+state-store walker, ``_per_conversation``; the four "previous turn → this
+turn" checks share its pairing layer ``_turn_pairs``.
 """
 
 from __future__ import annotations
@@ -18,7 +23,7 @@ from pyspark.sql import types as T
 
 from .config import DEFAULT, ValidationConfig
 from .rules import Rule
-from .validate import BUCKET_COL, RuleSet, bucket_expr
+from .validate import BUCKET_COL, RuleSet, bucket_expr, validate
 
 
 def stream_violations(
@@ -30,25 +35,8 @@ def stream_violations(
 ) -> DataFrame:
     """Violations as an append-only stream — attach ``.writeStream`` with
     any sink. Pure narrow projection: no state, no watermark needed."""
-    if isinstance(ruleset, dict):
-        ruleset = RuleSet(ruleset, config or DEFAULT)
-    pcols = list(partition_cols) if partition_cols else [list(keys)[0]]
-    base = stream_df.withColumn(
-        BUCKET_COL, bucket_expr(pcols, ruleset.config.num_buckets))
-    e = F.col("_e")
-    return (
-        base.select(*keys, BUCKET_COL,
-                    F.explode(ruleset.errors_column(stream_df)).alias("_e"))
-        .select(
-            e["rule_id"].alias("rule_id"), *keys, BUCKET_COL,
-            e["field_path"].alias("field_path"),
-            e["message"].alias("message"),
-            e["code"].alias("code"),
-            e["severity"].alias("severity"),
-            e["expected"].alias("expected"),
-            e["actual"].alias("actual"),
-        )
-    )
+    return validate(stream_df, ruleset, keys=keys,
+                    partition_cols=partition_cols, config=config).violations
 
 
 def stream_verdict_counts(
@@ -410,6 +398,119 @@ def stream_curate_to_sink(
 
 _NO_TS = -(1 << 62)  # sentinel: no comparable predecessor (start / null ts)
 
+_CLOSE_UNIT_MS = {
+    "millisecond": 1, "milliseconds": 1,
+    "second": 1000, "seconds": 1000,
+    "minute": 60_000, "minutes": 60_000,
+    "hour": 3_600_000, "hours": 3_600_000}
+
+
+def _close_ms(close_after: str | None) -> int | None:
+    """``close_after`` (``"<qty> <unit>"``) in milliseconds; None stays
+    None (no idle eviction). Anything else raises a ValueError naming the
+    accepted units, at plan time rather than inside a micro-batch."""
+    if close_after is None:
+        return None
+    try:
+        qty, unit = close_after.split()
+        ms = int(float(qty) * _CLOSE_UNIT_MS[unit])
+    except (ValueError, KeyError, OverflowError):
+        ms = 0
+    if ms <= 0:
+        raise ValueError(
+            f"close_after must be '<positive number> <unit>' with unit one "
+            f"of {', '.join(_CLOSE_UNIT_MS)}; got {close_after!r}")
+    return ms
+
+
+def _per_conversation(stream_df, conv_col, step, out_ddl, state_ddl,
+                      close_ms, on_close=None):
+    """The one state-store walker behind every per-conversation monitor:
+    ``groupBy(conv_col).applyInPandasWithState`` in append mode. Each
+    conversation's micro-batch rows arrive as ONE frame (Arrow hands a
+    large group over in chunks; per-chunk processing would break any
+    in-batch ordering), and ``step(conv, state_or_None, pdf)`` returns
+    ``(new_state, rows)``. With ``close_ms`` the state is evicted after
+    that much processing-time silence; ``on_close(conv, state)`` may
+    emit rows for the closed conversation first. Output columns are the
+    names in ``out_ddl``."""
+    out_cols = [f.split()[0] for f in out_ddl.split(",")]
+
+    def fn(key, pdf_iter, state):
+        import pandas as pd
+
+        conv = key[0]
+        if state.hasTimedOut:
+            rows = on_close(conv, state.get) if on_close else None
+            state.remove()
+        else:
+            chunks = list(pdf_iter)
+            pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
+            new_state, rows = step(
+                conv, state.get if state.exists else None, pdf)
+            state.update(new_state)
+            if close_ms is not None:
+                state.setTimeoutDuration(close_ms)
+        if rows:
+            yield pd.DataFrame(rows, columns=out_cols)
+
+    return stream_df.groupBy(conv_col).applyInPandasWithState(
+        fn, out_ddl, state_ddl, "append",
+        "NoTimeout" if close_ms is None else "ProcessingTimeTimeout")
+
+
+_PAIR_STATE_DDL = {"text": "last_role string, last_text string",
+                   "idx": "last_role string, last_idx bigint"}
+
+
+def _turn_pairs(stream_df, conv_col, order_col, role_col, text_col,
+                pair, carry, check, out_ddl, close_after):
+    """Shared walker of the "previous turn → this turn" monitors: sorts
+    each conversation's micro-batch by the batch operators'
+    content-closed order ``(order_col NULLS FIRST, role, md5(text))``,
+    normalises null role/idx/text to None, and calls ``check(conv, idx,
+    text, prev)`` for every turn of role ``pair[1]`` whose predecessor
+    had role ``pair[0]`` — ``prev`` being that predecessor's text
+    (``carry="text"``) or idx (``carry="idx"``), carried across
+    micro-batches in the state store. ``check`` returns one output row
+    ``(conv, <out_ddl columns>)`` or None."""
+    import hashlib
+
+    prev_role, cur_role = pair
+    conv_t = stream_df.schema[conv_col].dataType.simpleString()
+
+    # nested, not module-level: executor closures then pickle by value and
+    # never need this package importable on the workers
+    def _md5_text(v) -> str:
+        # null hashes as "", the twin of the batch md5(coalesce(text, ''))
+        if v is None or (isinstance(v, float) and math.isnan(v)):
+            v = ""
+        return hashlib.md5(str(v).encode()).hexdigest()
+
+    def step(conv, st, pdf):
+        import pandas as pd
+
+        last_role, last = st or (None, None)
+        pdf = (pdf.assign(_h=pdf[text_col].map(_md5_text))
+               .sort_values([order_col, role_col, "_h"],
+                            na_position="first"))
+        rows = []
+        for idx, role, text in zip(pdf[order_col], pdf[role_col],
+                                   pdf[text_col]):
+            role = None if pd.isna(role) else role
+            idx = None if pd.isna(idx) else int(idx)
+            text = None if pd.isna(text) else text
+            if role == cur_role and last_role == prev_role:
+                row = check(conv, idx, text, last)
+                if row is not None:
+                    rows.append(row)
+            last_role, last = role, (text if carry == "text" else idx)
+        return (last_role, last), rows
+
+    return _per_conversation(stream_df, conv_col, step,
+                             f"conv {conv_t}, {out_ddl}",
+                             _PAIR_STATE_DDL[carry], _close_ms(close_after))
+
 
 def stream_integrity_stateful(
     stream_df: DataFrame,
@@ -435,7 +536,6 @@ def stream_integrity_stateful(
     whose batch output is the parity oracle for a single-batch stream
     (null ts neither flags nor serves as a comparison point, as with a
     null lag in the batch window)."""
-    out_cols = [conv_col, order_col, "rule_id", "code", "message"]
     conv_t = stream_df.schema[conv_col].dataType.simpleString()
     order_t = stream_df.schema[order_col].dataType.simpleString()
     out_ddl = (f"{conv_col} {conv_t}, {order_col} {order_t}, "
@@ -445,18 +545,12 @@ def stream_integrity_stateful(
     # the batch oracle handles them fine
     state_ddl = f"max_turn {order_t}, last_ts_us long, rows_seen long"
 
-    def fn(key, pdf_iter, state):
+    def step(conv, st, pdf):
         import pandas as pd
 
-        if state.exists:
-            max_turn, last_ts_us, rows_seen = state.get
-        else:
-            max_turn, last_ts_us, rows_seen = -1, _NO_TS, 0
-        conv = key[0]
+        max_turn, last_ts_us, rows_seen = st or (-1, _NO_TS, 0)
         out = []
-        chunks = [pdf for pdf in pdf_iter]
-        pdf = (pd.concat(chunks) if len(chunks) > 1 else chunks[0]) \
-            .sort_values([order_col, ts_col])
+        pdf = pdf.sort_values([order_col, ts_col])
         for turn, ts in zip(pdf[order_col], pdf[ts_col]):
             is_nat = pd.isna(ts)
             ts_us = _NO_TS if is_nat else int(pd.Timestamp(ts).value // 1000)
@@ -474,13 +568,10 @@ def stream_integrity_stateful(
                             f"{ts_col} regressed within {conv}"))
             last_ts_us = ts_us
             rows_seen += 1
-        state.update((max_turn, last_ts_us, rows_seen))
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
+        return (max_turn, last_ts_us, rows_seen), out
 
-    return stream_df.groupBy(conv_col).applyInPandasWithState(
-        fn, out_ddl, state_ddl, "append",
-        "NoTimeout")
+    return _per_conversation(stream_df, conv_col, step, out_ddl, state_ddl,
+                             None)
 
 
 def stream_transition_violations(
@@ -532,48 +623,25 @@ def stream_transition_violations(
         None if v is None else str(v) for v in initial}
     terminal_set = None if terminal is None else {
         None if v is None else str(v) for v in terminal}
-    close_ms = None
-    if terminal is not None:
-        qty, unit = close_after.split()
-        close_ms = int(float(qty) * {
-            "millisecond": 1, "milliseconds": 1,
-            "second": 1000, "seconds": 1000,
-            "minute": 60_000, "minutes": 60_000,
-            "hour": 3_600_000, "hours": 3_600_000}[unit])
     conv_t = stream_df.schema[conv_col].dataType.simpleString()
     order_t = stream_df.schema[order_col].dataType.simpleString()
-    out_cols = [conv_col, order_col, "prev_state", "state", "kind",
-                "rule_id", "code"]
     out_ddl = (f"{conv_col} {conv_t}, {order_col} {order_t}, "
                "prev_state string, state string, kind string, "
                "rule_id string, code string")
-    state_ddl = "last_state string, seen long"
 
-    def _norm(v):
-        return None if pd.isna(v) else str(v)
+    def on_close(conv, st):
+        last_state, _ = st
+        if last_state not in terminal_set:
+            return [(conv, None, None, last_state, "terminal",
+                     "dataset.illegal_transition",
+                     "validation.dataset.illegal_transition")]
 
-    def fn(key, pdf_iter, state):
-        conv = key[0]
-        if state.hasTimedOut:
-            last_state, seen = state.get
-            state.remove()
-            if terminal_set is not None and last_state not in terminal_set:
-                yield pd.DataFrame(
-                    [(conv, None, None, last_state, "terminal",
-                      "dataset.illegal_transition",
-                      "validation.dataset.illegal_transition")],
-                    columns=out_cols)
-            return
-        if state.exists:
-            last_state, seen = state.get
-        else:
-            last_state, seen = None, 0
+    def step(conv, st, pdf):
+        last_state, seen = st or (None, 0)
         out = []
-        chunks = [pdf for pdf in pdf_iter]
-        pdf = (pd.concat(chunks) if len(chunks) > 1 else chunks[0]) \
-            .sort_values([order_col])
+        pdf = pdf.sort_values([order_col])
         for turn, cur_raw in zip(pdf[order_col], pdf[state_col]):
-            cur = _norm(cur_raw)
+            cur = None if pd.isna(cur_raw) else str(cur_raw)
             if seen == 0:
                 if initial_set is not None and cur not in initial_set:
                     out.append((conv, turn, None, cur, "initial",
@@ -585,15 +653,11 @@ def stream_transition_violations(
                             "validation.dataset.illegal_transition"))
             last_state = cur
             seen += 1
-        state.update((last_state, seen))
-        if close_ms is not None:
-            state.setTimeoutDuration(close_ms)
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
+        return (last_state, seen), out
 
-    return stream_df.groupBy(conv_col).applyInPandasWithState(
-        fn, out_ddl, state_ddl, "append",
-        "NoTimeout" if close_ms is None else "ProcessingTimeTimeout")
+    return _per_conversation(
+        stream_df, conv_col, step, out_ddl, "last_state string, seen long",
+        None if terminal is None else _close_ms(close_after), on_close)
 
 
 def stream_orphan_flags(
@@ -741,65 +805,17 @@ def stream_tool_echo(
 
     Output rows mirror the batch operator: ``(conv, turn_idx,
     echo_chars, turn_chars, echo_share_pct)``."""
-    import hashlib
+    def check(conv, idx, text, last_text):
+        if (last_text is not None and len(last_text) >= min_chars
+                and text is not None and last_text in text):
+            return (conv, idx, len(last_text), len(text),
+                    round(len(last_text) * 100.0 / len(text), 4))
 
-    import pandas as pd
-
-    close_ms = None
-    if close_after is not None:
-        qty, unit = close_after.split()
-        close_ms = int(float(qty) * {
-            "millisecond": 1, "milliseconds": 1,
-            "second": 1000, "seconds": 1000,
-            "minute": 60_000, "minutes": 60_000,
-            "hour": 3_600_000, "hours": 3_600_000}[unit])
-    conv_t = stream_df.schema[conv_col].dataType.simpleString()
-    out_cols = ["conv", "turn_idx", "echo_chars", "turn_chars",
-                "echo_share_pct"]
-    out_ddl = (f"conv {conv_t}, turn_idx bigint, echo_chars bigint, "
-               "turn_chars bigint, echo_share_pct double")
-    state_ddl = "last_role string, last_text string"
-
-    def _md5(v) -> str:
-        s = "" if v is None or (isinstance(v, float) and pd.isna(v)) else v
-        return hashlib.md5(str(s).encode()).hexdigest()
-
-    def fn(key, pdf_iter, state):
-        conv = key[0]
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last_role, last_text = state.get if state.exists else (None, None)
-        chunks = [pdf for pdf in pdf_iter]
-        pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        # the batch operator's content-closed total order
-        pdf = (pdf.assign(_h=pdf[text_col].map(_md5))
-               .sort_values([order_col, role_col, "_h"],
-                            na_position="first"))
-        out = []
-        for idx, role, text in zip(pdf[order_col], pdf[role_col],
-                                   pdf[text_col]):
-            role = None if pd.isna(role) else role
-            text = None if (text is None or (isinstance(text, float)
-                                             and pd.isna(text))) else text
-            if (role == "assistant" and last_role == "tool"
-                    and last_text is not None
-                    and len(last_text) >= min_chars
-                    and text is not None and last_text in text):
-                out.append((conv,
-                            None if pd.isna(idx) else int(idx),
-                            len(last_text), len(text),
-                            round(len(last_text) * 100.0 / len(text), 4)))
-            last_role, last_text = role, text
-        state.update((last_role, last_text))
-        if close_ms is not None:
-            state.setTimeoutDuration(close_ms)
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    return stream_df.groupBy(conv_col).applyInPandasWithState(
-        fn, out_ddl, state_ddl, "append",
-        "NoTimeout" if close_ms is None else "ProcessingTimeTimeout")
+    return _turn_pairs(
+        stream_df, conv_col, order_col, role_col, text_col,
+        ("tool", "assistant"), "text", check,
+        "turn_idx bigint, echo_chars bigint, "
+        "turn_chars bigint, echo_share_pct double", close_after)
 
 
 def stream_injection_flags(
@@ -860,74 +876,30 @@ def stream_tool_grounding(
 
     Output rows mirror the batch operator: ``(conv, turn_idx,
     n_numbers, n_ungrounded, ungrounded_csv, grounded_share_pct)``."""
-    import hashlib
     import re
-
-    import pandas as pd
 
     from valar_spark.dataset_rules import NUMBER_TOKEN_PATTERN
 
     # re.ASCII pins \d to [0-9]: Python's default Unicode \d would match
     # e.g. Arabic-Indic digits that Java regex and RE2 \d do NOT
     num_re = re.compile(NUMBER_TOKEN_PATTERN, re.ASCII)
-    close_ms = None
-    if close_after is not None:
-        qty, unit = close_after.split()
-        close_ms = int(float(qty) * {
-            "millisecond": 1, "milliseconds": 1,
-            "second": 1000, "seconds": 1000,
-            "minute": 60_000, "minutes": 60_000,
-            "hour": 3_600_000, "hours": 3_600_000}[unit])
-    conv_t = stream_df.schema[conv_col].dataType.simpleString()
-    out_cols = ["conv", "turn_idx", "n_numbers", "n_ungrounded",
-                "ungrounded_csv", "grounded_share_pct"]
-    out_ddl = (f"conv {conv_t}, turn_idx bigint, n_numbers bigint, "
-               "n_ungrounded bigint, ungrounded_csv string, "
-               "grounded_share_pct double")
-    state_ddl = "last_role string, last_text string"
 
-    def _md5(v) -> str:
-        s = "" if v is None or (isinstance(v, float) and pd.isna(v)) else v
-        return hashlib.md5(str(s).encode()).hexdigest()
+    def check(conv, idx, text, last_text):
+        if last_text is None or text is None:
+            return None
+        nums = list(dict.fromkeys(num_re.findall(text)))
+        if nums:
+            tnums = set(num_re.findall(last_text))
+            ung = sorted(x for x in nums if x not in tnums)
+            return (conv, idx, len(nums), len(ung), ",".join(ung),
+                    round((len(nums) - len(ung)) * 100.0 / len(nums), 4))
 
-    def fn(key, pdf_iter, state):
-        conv = key[0]
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last_role, last_text = state.get if state.exists else (None, None)
-        chunks = [pdf for pdf in pdf_iter]
-        pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        pdf = (pdf.assign(_h=pdf[text_col].map(_md5))
-               .sort_values([order_col, role_col, "_h"],
-                            na_position="first"))
-        out = []
-        for idx, role, text in zip(pdf[order_col], pdf[role_col],
-                                   pdf[text_col]):
-            role = None if pd.isna(role) else role
-            text = None if (text is None or (isinstance(text, float)
-                                             and pd.isna(text))) else text
-            if (role == "assistant" and last_role == "tool"
-                    and last_text is not None and text is not None):
-                nums = list(dict.fromkeys(num_re.findall(text)))
-                if nums:
-                    tnums = set(num_re.findall(last_text))
-                    ung = sorted(x for x in nums if x not in tnums)
-                    out.append((conv,
-                                None if pd.isna(idx) else int(idx),
-                                len(nums), len(ung), ",".join(ung),
-                                round((len(nums) - len(ung)) * 100.0
-                                      / len(nums), 4)))
-            last_role, last_text = role, text
-        state.update((last_role, last_text))
-        if close_ms is not None:
-            state.setTimeoutDuration(close_ms)
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    return stream_df.groupBy(conv_col).applyInPandasWithState(
-        fn, out_ddl, state_ddl, "append",
-        "NoTimeout" if close_ms is None else "ProcessingTimeTimeout")
+    return _turn_pairs(
+        stream_df, conv_col, order_col, role_col, text_col,
+        ("tool", "assistant"), "text", check,
+        "turn_idx bigint, n_numbers bigint, "
+        "n_ungrounded bigint, ungrounded_csv string, "
+        "grounded_share_pct double", close_after)
 
 
 def stream_special_token_flags(
@@ -979,72 +951,24 @@ def stream_parrot(
 
     Output rows mirror the batch operator: ``(conv, turn_idx,
     user_tokens, overlap_tokens, containment_pct)``."""
-    import hashlib
     import re
 
-    import pandas as pd
-
-    close_ms = None
-    if close_after is not None:
-        qty, unit = close_after.split()
-        close_ms = int(float(qty) * {
-            "millisecond": 1, "milliseconds": 1,
-            "second": 1000, "seconds": 1000,
-            "minute": 60_000, "minutes": 60_000,
-            "hour": 3_600_000, "hours": 3_600_000}[unit])
-    conv_t = stream_df.schema[conv_col].dataType.simpleString()
-    out_cols = ["conv", "turn_idx", "user_tokens", "overlap_tokens",
-                "containment_pct"]
-    out_ddl = (f"conv {conv_t}, turn_idx bigint, user_tokens bigint, "
-               "overlap_tokens bigint, containment_pct double")
-    state_ddl = "last_role string, last_text string"
     ws = re.compile(r"\S+", re.ASCII)
 
-    def _md5(v) -> str:
-        s = "" if v is None or (isinstance(v, float) and pd.isna(v)) else v
-        return hashlib.md5(str(s).encode()).hexdigest()
+    def check(conv, idx, text, last_text):
+        if last_text is None or text is None:
+            return None
+        u = set(ws.findall(last_text.lower()))
+        ut = len(u)
+        ov = len(u & set(ws.findall(text.lower())))
+        if ut >= min_user_tokens and ov * 1.0 >= min_containment * ut:
+            return (conv, idx, ut, ov, round(ov * 100.0 / ut, 4))
 
-    def _tokset(t) -> set:
-        return set(ws.findall(t.lower())) if isinstance(t, str) else set()
-
-    def fn(key, pdf_iter, state):
-        conv = key[0]
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last_role, last_text = state.get if state.exists else (None, None)
-        chunks = [pdf for pdf in pdf_iter]
-        pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        # the batch operator's content-closed total order
-        pdf = (pdf.assign(_h=pdf[text_col].map(_md5))
-               .sort_values([order_col, role_col, "_h"],
-                            na_position="first"))
-        out = []
-        for idx, role, text in zip(pdf[order_col], pdf[role_col],
-                                   pdf[text_col]):
-            role = None if pd.isna(role) else role
-            text = None if (text is None or (isinstance(text, float)
-                                             and pd.isna(text))) else text
-            if (role == "assistant" and last_role == "user"
-                    and last_text is not None and text is not None):
-                u = _tokset(last_text)
-                ut = len(u)
-                ov = len(u & _tokset(text))
-                if ut >= min_user_tokens and ov * 1.0 >= \
-                        min_containment * ut:
-                    out.append((conv,
-                                None if pd.isna(idx) else int(idx),
-                                ut, ov, round(ov * 100.0 / ut, 4)))
-            last_role, last_text = role, text
-        state.update((last_role, last_text))
-        if close_ms is not None:
-            state.setTimeoutDuration(close_ms)
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    return stream_df.groupBy(conv_col).applyInPandasWithState(
-        fn, out_ddl, state_ddl, "append",
-        "NoTimeout" if close_ms is None else "ProcessingTimeTimeout")
+    return _turn_pairs(
+        stream_df, conv_col, order_col, role_col, text_col,
+        ("user", "assistant"), "text", check,
+        "turn_idx bigint, user_tokens bigint, "
+        "overlap_tokens bigint, containment_pct double", close_after)
 
 
 def stream_corrections(
@@ -1070,77 +994,28 @@ def stream_corrections(
 
     Output rows mirror the batch operator: ``(conv, asst_turn_idx,
     user_turn_idx, pattern)``."""
-    import hashlib
     import re
-
-    import pandas as pd
 
     from valar_spark.dataset_rules import CORRECTION_PATTERNS
 
     compiled = [(k, re.compile(p)) for k, p in CORRECTION_PATTERNS]
 
-    close_ms = None
-    if close_after is not None:
-        qty, unit = close_after.split()
-        close_ms = int(float(qty) * {
-            "millisecond": 1, "milliseconds": 1,
-            "second": 1000, "seconds": 1000,
-            "minute": 60_000, "minutes": 60_000,
-            "hour": 3_600_000, "hours": 3_600_000}[unit])
-    conv_t = stream_df.schema[conv_col].dataType.simpleString()
-    out_cols = ["conv", "asst_turn_idx", "user_turn_idx", "pattern"]
-    out_ddl = (f"conv {conv_t}, asst_turn_idx bigint, "
-               "user_turn_idx bigint, pattern string")
-    state_ddl = "last_role string, last_idx bigint"
-
-    def _md5(v) -> str:
-        s = "" if v is None or (isinstance(v, float) and pd.isna(v)) else v
-        return hashlib.md5(str(s).encode()).hexdigest()
-
-    def _label(t):
-        if not isinstance(t, str):
+    def check(conv, idx, text, last_idx):
+        if not isinstance(text, str):
             return None
         # .strip(" ") not .strip(): Spark's trim() removes ASCII spaces
         # only, and the batch-parity contract must match it exactly on
         # tab/newline-padded corrections
-        tl = t.replace("’", "'").strip(" ").lower()
+        tl = text.replace("’", "'").strip(" ").lower()
         for k, pat in compiled:
             if pat.search(tl):
-                return k
-        return None
+                return (conv, last_idx, idx, k)
 
-    def fn(key, pdf_iter, state):
-        conv = key[0]
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last_role, last_idx = state.get if state.exists else (None, None)
-        chunks = [pdf for pdf in pdf_iter]
-        pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        pdf = (pdf.assign(_h=pdf[text_col].map(_md5))
-               .sort_values([order_col, role_col, "_h"],
-                            na_position="first"))
-        out = []
-        for idx, role, text in zip(pdf[order_col], pdf[role_col],
-                                   pdf[text_col]):
-            role = None if pd.isna(role) else role
-            idx = None if pd.isna(idx) else int(idx)
-            text = None if (text is None or (isinstance(text, float)
-                                             and pd.isna(text))) else text
-            if role == "user" and last_role == "assistant":
-                lab = _label(text)
-                if lab is not None:
-                    out.append((conv, last_idx, idx, lab))
-            last_role, last_idx = role, idx
-        state.update((last_role, last_idx))
-        if close_ms is not None:
-            state.setTimeoutDuration(close_ms)
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    return stream_df.groupBy(conv_col).applyInPandasWithState(
-        fn, out_ddl, state_ddl, "append",
-        "NoTimeout" if close_ms is None else "ProcessingTimeTimeout")
+    return _turn_pairs(
+        stream_df, conv_col, order_col, role_col, text_col,
+        ("assistant", "user"), "idx", check,
+        "asst_turn_idx bigint, user_turn_idx bigint, pattern string",
+        close_after)
 
 
 def stream_verbosity(
@@ -1174,52 +1049,29 @@ def stream_verbosity(
     Columns: ``(conv, n_turns, slope, declining)``."""
     import re
 
-    import pandas as pd
-
-    close_ms = None
-    if close_after is not None:
-        qty, unit = close_after.split()
-        close_ms = int(float(qty) * {
-            "millisecond": 1, "milliseconds": 1,
-            "second": 1000, "seconds": 1000,
-            "minute": 60_000, "minutes": 60_000,
-            "hour": 3_600_000, "hours": 3_600_000}[unit])
     conv_t = stream_df.schema[conv_col].dataType.simpleString()
-    out_cols = ["conv", "n_turns", "slope", "declining"]
-    out_ddl = (f"conv {conv_t}, n_turns bigint, slope double, "
-               "declining boolean")
-    state_ddl = ("n bigint, sx bigint, sy bigint, sxy bigint, "
-                 "sxx bigint")
     ws = re.compile(r"\S+", re.ASCII)
 
-    def fn(key, pdf_iter, state):
-        conv = key[0]
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n, sx, sy, sxy, sxx = state.get if state.exists \
-            else (0, 0, 0, 0, 0)
-        for pdf in pdf_iter:
-            sel = pdf[(pdf[role_col] == role)
-                      & pdf[order_col].notna()]
-            for idx, text in zip(sel[order_col], sel[text_col]):
-                x = int(idx)
-                y = len(ws.findall(text)) if isinstance(text, str) else 0
-                n += 1
-                sx += x
-                sy += y
-                sxy += x * y
-                sxx += x * x
-        state.update((n, sx, sy, sxy, sxx))
-        if close_ms is not None:
-            state.setTimeoutDuration(close_ms)
+    def step(conv, st, pdf):
+        n, sx, sy, sxy, sxx = st or (0, 0, 0, 0, 0)
+        sel = pdf[(pdf[role_col] == role) & pdf[order_col].notna()]
+        for idx, text in zip(sel[order_col], sel[text_col]):
+            x = int(idx)
+            y = len(ws.findall(text)) if isinstance(text, str) else 0
+            n += 1
+            sx += x
+            sy += y
+            sxy += x * y
+            sxx += x * x
         den = n * sxx - sx * sx
+        rows = None
         if n >= min_turns and den > 0:
             slope = round((n * sxy - sx * sy) / den, 6)
-            yield pd.DataFrame(
-                [(conv, n, slope, slope < declining_floor)],
-                columns=out_cols)
+            rows = [(conv, n, slope, slope < declining_floor)]
+        return (n, sx, sy, sxy, sxx), rows
 
-    return stream_df.groupBy(conv_col).applyInPandasWithState(
-        fn, out_ddl, state_ddl, "append",
-        "NoTimeout" if close_ms is None else "ProcessingTimeTimeout")
+    return _per_conversation(
+        stream_df, conv_col, step,
+        f"conv {conv_t}, n_turns bigint, slope double, declining boolean",
+        "n bigint, sx bigint, sy bigint, sxy bigint, sxx bigint",
+        _close_ms(close_after))

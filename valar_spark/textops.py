@@ -742,7 +742,10 @@ def minhash_candidates(
     ``band`` supplies a precomputed (ideally caller-persisted) banding
     table from :func:`minhash_band_table`: the self-join references the
     banding subtree from BOTH sides, so without a persist the
-    shingle+minhash UDF pass runs twice."""
+    shingle+minhash UDF pass runs twice. When ``band`` is given, ``df``,
+    ``text_col``, ``id_col``, ``num_hashes``, ``bands``, ``shingle_n``
+    and ``sets`` are all IGNORED — the caller must build ``band`` with
+    the parameters it means (nothing checks that they match)."""
     if band is None:
         band = minhash_band_table(df, text_col, id_col, num_hashes, bands,
                                   shingle_n, sets=sets)
@@ -2223,6 +2226,8 @@ def _pair_emit_blob_batches(n_buckets: int, key_bits: int = 64):
 
     half = key_bits // 2
     dt = np.uint32 if key_bits == 32 else np.int64
+    # id_a << half must fit the key: 16 bits in a uint32, 31 in an int64
+    id_cap = 1 << half if key_bits == 32 else 1 << 31
 
     def gen(it):
         for pdf in it:
@@ -2231,6 +2236,11 @@ def _pair_emit_blob_batches(n_buckets: int, key_bits: int = 64):
                 a = np.sort(np.asarray(ids, dtype=np.int64))
                 if a.size < 2:
                     continue
+                if a[0] < 0 or a[-1] >= id_cap:
+                    raise ValueError(
+                        f"pair blob kernel: ids must lie in [0, {id_cap}) "
+                        f"for {key_bits}-bit keys, got a posting list "
+                        f"spanning [{a[0]}, {a[-1]}]")
                 ia, ib = np.triu_indices(a.size, k=1)
                 ks.append(((a[ia] << half) | a[ib]).astype(dt, copy=False))
             if not ks:
@@ -2263,7 +2273,15 @@ def _pair_merge_blob_batches(min_shared: int, key_bits: int = 64):
     ≥-filter drops ~99.97% of pairs on the profile corpus, so the
     kernel's output is final-result-sized.  Replaces a JVM hash
     aggregate whose ~1.7×10⁸-key state spilled (measured 50s of the 84s
-    profile query)."""
+    profile query).
+
+    Invariant: every bucket must be PARTITION-COMPLETE — all of its
+    blobs in one call of this kernel — because ``min_shared`` is applied
+    per partition.  The caller guarantees it with
+    ``repartition(col("bucket"))``; do not replace that with a rebalance
+    hint (AQE may split a skewed bucket), a coalesce or any other split,
+    or a pair whose events span partitions is dropped or emitted twice
+    with partial counts."""
     import numpy as np
     import pandas as pd
 
