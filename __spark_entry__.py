@@ -15,6 +15,8 @@ sorts columns by name before hashing.
 
 from __future__ import annotations
 
+import functools
+import inspect
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,17 +31,34 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _prune_dead_sessions(cache: dict, app_id: str) -> None:
-    """Drop cache entries from previous SparkSessions (key[0] = appId) so a
-    long-lived process that restarts sessions doesn't accumulate dead
-    persisted-DataFrame references."""
-    for k in [k for k in cache if k[0] != app_id]:
-        del cache[k]
+_SESSION_PASSES: dict[tuple, object] = {}
 
 
-_TRANSCRIPTS_CACHE: dict[tuple[str, int], DataFrame] = {}
+def _per_session(build: Callable) -> Callable:
+    """Run ``build(spark, *args)`` once per (Spark application, builder,
+    arguments) and return the stored result on every later call. Arguments
+    are bound with defaults applied, so positional, keyword and default
+    spellings of the same call share one entry. Every call first drops the
+    entries of other applications, so a long-lived process that restarts
+    sessions doesn't accumulate dead persisted-DataFrame references."""
+    sig = inspect.signature(build)
+
+    @functools.wraps(build)
+    def shared(spark: SparkSession, *args, **kwargs):
+        bound = sig.bind(spark, *args, **kwargs)
+        bound.apply_defaults()
+        app_id = spark.sparkContext.applicationId
+        for k in [k for k in _SESSION_PASSES if k[0] != app_id]:
+            del _SESSION_PASSES[k]
+        key = (app_id, build, tuple(bound.arguments.values())[1:])
+        if key not in _SESSION_PASSES:
+            _SESSION_PASSES[key] = build(*bound.args, **bound.kwargs)
+        return _SESSION_PASSES[key]
+
+    return shared
 
 
+@_per_session
 def _transcripts(spark: SparkSession, total_turns: int = 60_000) -> DataFrame:
     """Synthetic transcript table, persisted per session. The persist is a
     correctness-neutral materialization barrier: the generated ``text``
@@ -47,17 +66,13 @@ def _transcripts(spark: SparkSession, total_turns: int = 60_000) -> DataFrame:
     Catalyst inlines it into every rule reference in the validation
     projection (measured 11s for 60k turns vs ~350k turns/s from storage).
     Production validates stored tables — the barrier reproduces that."""
-    _prune_dead_sessions(_TRANSCRIPTS_CACHE, spark.sparkContext.applicationId)
-    key = (spark.sparkContext.applicationId, total_turns)
-    if key not in _TRANSCRIPTS_CACHE:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        from valar_spark.synth import synth_transcripts
+    from valar_spark.synth import synth_transcripts
 
-        _TRANSCRIPTS_CACHE[key] = synth_transcripts(
-            spark, total_turns=total_turns, seed=42
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    return _TRANSCRIPTS_CACHE[key]
+    return synth_transcripts(
+        spark, total_turns=total_turns, seed=42
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def transcript_ruleset():
@@ -1273,9 +1288,7 @@ def events_ruleset():
     }
 
 
-_EVENTS_RUN_CACHE: dict[tuple[str, str], object] = {}
-
-
+@_per_session
 def _events_run(spark: SparkSession, sf_dir: str):
     """ONE compiled validation pass per (session, table): the violations
     query and the verdict summary both consume the same `_errs`
@@ -1285,14 +1298,10 @@ def _events_run(spark: SparkSession, sf_dir: str):
     sink)."""
     from valar_spark import validate
 
-    _prune_dead_sessions(_EVENTS_RUN_CACHE, spark.sparkContext.applicationId)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EVENTS_RUN_CACHE:
-        _EVENTS_RUN_CACHE[key] = validate(
-            _mutated_events(spark, sf_dir), events_ruleset(),
-            keys=("user_id", "event_id"),
-            partition_cols=("user_id",)).persist()
-    return _EVENTS_RUN_CACHE[key]
+    return validate(
+        _mutated_events(spark, sf_dir), events_ruleset(),
+        keys=("user_id", "event_id"),
+        partition_cols=("user_id",)).persist()
 
 
 def _q_validate_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1715,9 +1724,7 @@ def _q_en_marker_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SETS_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
+@_per_session
 def _shared_sets(spark: SparkSession, sf_dir: str,
                  shingle_n: int = 3) -> DataFrame:
     """One persisted tokenize+hash pass per (session, table, shingle size),
@@ -1727,35 +1734,29 @@ def _shared_sets(spark: SparkSession, sf_dir: str,
     cached pass instead of re-reading the corpus per operator."""
     from valar_spark import textops as X
 
-    _prune_dead_sessions(_SETS_CACHE, spark.sparkContext.applicationId)
-    key = (spark.sparkContext.applicationId, sf_dir, shingle_n)
-    if key not in _SETS_CACHE:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        # copies carry text VERBATIM and the shingle hash is a pure
-        # (batch-invariant) function of the text, so the tokenize+hash
-        # UDF runs over the 50k raw docs only and the +100000 copy rows
-        # fan out in a projection — one explode duplicating even-id rows
-        # re-keyed — instead of hashing the same text a second time
-        # (round 6: a third less UDF work for every consumer of this
-        # shared pass)
-        base = X.shingle_hash_sets(_docs_spread(spark, sf_dir),
-                                   shingle_n=shingle_n)
-        out = (base.select(
-            F.explode(
-                F.when(F.col("_id") % 2 == 0,
-                       F.array(F.col("_id"), F.col("_id") + 100_000))
-                .otherwise(F.array(F.col("_id")))).alias("_eid"),
-            "_sh", "n_sh")
-            .select(F.col("_eid").alias("_id"), "_sh", "n_sh")
-            .persist(StorageLevel.MEMORY_AND_DISK))
-        _SETS_CACHE[key] = out
-    return _SETS_CACHE[key]
+    # copies carry text VERBATIM and the shingle hash is a pure
+    # (batch-invariant) function of the text, so the tokenize+hash
+    # UDF runs over the 50k raw docs only and the +100000 copy rows
+    # fan out in a projection — one explode duplicating even-id rows
+    # re-keyed — instead of hashing the same text a second time
+    # (round 6: a third less UDF work for every consumer of this
+    # shared pass)
+    base = X.shingle_hash_sets(_docs_spread(spark, sf_dir),
+                               shingle_n=shingle_n)
+    out = (base.select(
+        F.explode(
+            F.when(F.col("_id") % 2 == 0,
+                   F.array(F.col("_id"), F.col("_id") + 100_000))
+            .otherwise(F.array(F.col("_id")))).alias("_eid"),
+        "_sh", "n_sh")
+        .select(F.col("_eid").alias("_id"), "_sh", "n_sh")
+        .persist(StorageLevel.MEMORY_AND_DISK))
+    return out
 
 
-_PAIRS05_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_per_session
 def _jaccard_pairs05(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One persisted exact-Jaccard pair pass at threshold 0.5 per
     (session, table), shared by the whole near-dup family — the
@@ -1772,54 +1773,50 @@ def _jaccard_pairs05(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus; the banded path is O(candidates)."""
     from valar_spark import textops as X
 
-    _prune_dead_sessions(_PAIRS05_CACHE, spark.sparkContext.applicationId)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PAIRS05_CACHE:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        u = _docs_with_copies(spark, sf_dir)
-        sets = _shared_sets(spark, sf_dir)
-        # ---- copy-group dedup BY CONSTRUCTION (round-6): the corpus is
-        # documents ∪ exact copies of the even-id docs (+100000), i.e.
-        # the duplicate groups are {d, d+100000} for even d — known
-        # without any grouping aggregate. Only the 50k originals enter
-        # banding/verify (a third less MinHash work, half the candidate
-        # pairs and array-verify payload); a copy's signature is
-        # identical to its original's, so the rep-level LSH candidacy
-        # event is exactly the member-level one and the r3-r5
-        # banded=brute-force equality evidence carries over. The
-        # verified pair set expands back in a projection: identical sets
-        # ⇒ identical Jaccard against any third set (inter pairs inherit
-        # the original pair's value), and (d, d+100000) is exactly 1.0
-        # for non-empty sets (round(n/n, 6)); empty-set docs are
-        # excluded exactly as the verify path's |union| > 0 guard did.
-        # Natural duplicates among the originals still meet in every
-        # band and verify at 1.0 — nothing relies on copies being the
-        # only duplicates.
-        rep_sets = sets.filter(F.col("_id") < 100_000)
-        # persist the banding table PRE-PARTITIONED on the join keys: the
-        # candidate self-join references it from both sides (the minhash
-        # UDF pass ran twice without the persist), and with the cache
-        # already hash-partitioned on (band_idx, band_hash) the self-join
-        # elides BOTH exchanges — InMemoryRelation preserves its child's
-        # outputPartitioning (A/B: candidates 3.5-5.8s → 1.9-2.7s)
-        band = (X.minhash_band_table(u, num_hashes=128, bands=64,
-                                     sets=rep_sets)
-                .repartition(F.col("band_idx"), F.col("band_hash"))
-                .persist(StorageLevel.MEMORY_AND_DISK))
-        cand = X.minhash_candidates(u, num_hashes=128, bands=64, band=band)
-        rep_pairs = X.jaccard_pairs(u, threshold=0.5, candidates=cand,
-                                    sets=rep_sets)
-        out = (_expand_copy_pairs(rep_pairs, rep_sets, "jaccard", F.lit(1.0))
-               .persist(StorageLevel.MEMORY_AND_DISK))
-        out.count()
-        band.unpersist()
-        # jaccard_pairs persists its result only when it builds its own
-        # sets, so this is a no-op today; it keeps `out` the pass's only
-        # resident cache if that policy changes (as _simhash_pairs_cached)
-        rep_pairs.unpersist()
-        _PAIRS05_CACHE[key] = out
-    return _PAIRS05_CACHE[key]
+    u = _docs_with_copies(spark, sf_dir)
+    sets = _shared_sets(spark, sf_dir)
+    # ---- copy-group dedup BY CONSTRUCTION (round-6): the corpus is
+    # documents ∪ exact copies of the even-id docs (+100000), i.e.
+    # the duplicate groups are {d, d+100000} for even d — known
+    # without any grouping aggregate. Only the 50k originals enter
+    # banding/verify (a third less MinHash work, half the candidate
+    # pairs and array-verify payload); a copy's signature is
+    # identical to its original's, so the rep-level LSH candidacy
+    # event is exactly the member-level one and the r3-r5
+    # banded=brute-force equality evidence carries over. The
+    # verified pair set expands back in a projection: identical sets
+    # ⇒ identical Jaccard against any third set (inter pairs inherit
+    # the original pair's value), and (d, d+100000) is exactly 1.0
+    # for non-empty sets (round(n/n, 6)); empty-set docs are
+    # excluded exactly as the verify path's |union| > 0 guard did.
+    # Natural duplicates among the originals still meet in every
+    # band and verify at 1.0 — nothing relies on copies being the
+    # only duplicates.
+    rep_sets = sets.filter(F.col("_id") < 100_000)
+    # persist the banding table PRE-PARTITIONED on the join keys: the
+    # candidate self-join references it from both sides (the minhash
+    # UDF pass ran twice without the persist), and with the cache
+    # already hash-partitioned on (band_idx, band_hash) the self-join
+    # elides BOTH exchanges — InMemoryRelation preserves its child's
+    # outputPartitioning (A/B: candidates 3.5-5.8s → 1.9-2.7s)
+    band = (X.minhash_band_table(u, num_hashes=128, bands=64,
+                                 sets=rep_sets)
+            .repartition(F.col("band_idx"), F.col("band_hash"))
+            .persist(StorageLevel.MEMORY_AND_DISK))
+    cand = X.minhash_candidates(u, num_hashes=128, bands=64, band=band)
+    rep_pairs = X.jaccard_pairs(u, threshold=0.5, candidates=cand,
+                                sets=rep_sets)
+    out = (_expand_copy_pairs(rep_pairs, rep_sets, "jaccard", F.lit(1.0))
+           .persist(StorageLevel.MEMORY_AND_DISK))
+    out.count()
+    band.unpersist()
+    # jaccard_pairs persists its result only when it builds its own
+    # sets, so this is a no-op today; it keeps `out` the pass's only
+    # resident cache if that policy changes (as _simhash_pairs_cached)
+    rep_pairs.unpersist()
+    return out
 
 
 def _expand_copy_pairs(rep_pairs: DataFrame, rep_sets: DataFrame,
@@ -1905,41 +1902,34 @@ def _q_near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SIMHASH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_per_session
 def _simhash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One persisted simhash pair pass per (session, table) — shared by the
     full-pair query and the planted-recall gate (the production shape: sign
     once, feed every consumer)."""
     from valar_spark import textops as X
 
-    _prune_dead_sessions(_SIMHASH_PAIRS_CACHE,
-                         spark.sparkContext.applicationId)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIMHASH_PAIRS_CACHE:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        # copy-group dedup BY CONSTRUCTION (round 6, same argument as
-        # _jaccard_pairs05): copies carry identical shingle sets ⇒
-        # identical 64-bit signatures ⇒ identical chunk keys, so only
-        # the originals are signed/blocked/verified and the pair set
-        # expands back in a projection — (d, d+100000) is hamming 0 for
-        # every non-empty even doc (exactly the planted-recall
-        # construction), and inter pairs inherit the original pair's
-        # hamming (identical signatures). Empty docs stay excluded on
-        # both paths (simhash_table filters n_sh > 0).
-        sets = _shared_sets(spark, sf_dir, shingle_n=2)
-        rep_sets = sets.filter(F.col("_id") < 100_000)
-        rep_pairs = X.simhash_near_pairs(
-            _docs_with_copies(spark, sf_dir), max_hamming=3, sets=rep_sets)
-        out = (_expand_copy_pairs(rep_pairs, rep_sets, "hamming",
-                                  F.lit(0).cast("int"))
-               .persist(StorageLevel.MEMORY_AND_DISK))
-        out.count()
-        rep_pairs.unpersist()
-        _SIMHASH_PAIRS_CACHE[key] = out
-    return _SIMHASH_PAIRS_CACHE[key]
+    # copy-group dedup BY CONSTRUCTION (round 6, same argument as
+    # _jaccard_pairs05): copies carry identical shingle sets ⇒
+    # identical 64-bit signatures ⇒ identical chunk keys, so only
+    # the originals are signed/blocked/verified and the pair set
+    # expands back in a projection — (d, d+100000) is hamming 0 for
+    # every non-empty even doc (exactly the planted-recall
+    # construction), and inter pairs inherit the original pair's
+    # hamming (identical signatures). Empty docs stay excluded on
+    # both paths (simhash_table filters n_sh > 0).
+    sets = _shared_sets(spark, sf_dir, shingle_n=2)
+    rep_sets = sets.filter(F.col("_id") < 100_000)
+    rep_pairs = X.simhash_near_pairs(
+        _docs_with_copies(spark, sf_dir), max_hamming=3, sets=rep_sets)
+    out = (_expand_copy_pairs(rep_pairs, rep_sets, "hamming",
+                              F.lit(0).cast("int"))
+           .persist(StorageLevel.MEMORY_AND_DISK))
+    out.count()
+    rep_pairs.unpersist()
+    return out
 
 
 def _q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2088,9 +2078,7 @@ def _emb_with_copies(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.unionByName(near)
 
 
-_EMB_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_per_session
 def _emb_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One RHP-sketch + chunk-block + exact-verify pass per (session,
     table), shared by the pair query and semantic_dedup — the production
@@ -2098,15 +2086,11 @@ def _emb_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame is already persisted by embedding_near_dup_pairs)."""
     from valar_spark import ann
 
-    _prune_dead_sessions(_EMB_PAIRS_CACHE, spark.sparkContext.applicationId)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EMB_PAIRS_CACHE:
-        # chunk_bits auto-resolves to 8 below CHUNK_BITS_CROSSOVER (hamming
-        # ≤ 7 guarantee) — exercising the auto path keeps the oracle hash
-        # unchanged
-        _EMB_PAIRS_CACHE[key] = ann.embedding_near_dup_pairs(
-            _emb_with_copies(spark, sf_dir), threshold=0.95, max_hamming=7)
-    return _EMB_PAIRS_CACHE[key]
+    # chunk_bits auto-resolves to 8 below CHUNK_BITS_CROSSOVER (hamming
+    # ≤ 7 guarantee) — exercising the auto path keeps the oracle hash
+    # unchanged
+    return ann.embedding_near_dup_pairs(
+        _emb_with_copies(spark, sf_dir), threshold=0.95, max_hamming=7)
 
 
 def _q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2135,10 +2119,7 @@ def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("vec_id"))
 
 
-_WINNOW_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_WINNOW_FP_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@_per_session
 def _winnow_raw_prints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE winnowing-UDF pass over the UNMODIFIED documents table per
     (session, table), shared by every winnow-family gate query (VERDICT
@@ -2152,17 +2133,14 @@ def _winnow_raw_prints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from valar_spark import textops as X
 
-    _prune_dead_sessions(_WINNOW_FP_CACHE, spark.sparkContext.applicationId)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WINNOW_FP_CACHE:
-        # spread scan: the fingerprint UDF ran on ONE core without it
-        # (measured 8.8s single-task vs ~1s — see _docs_spread)
-        _WINNOW_FP_CACHE[key] = (
-            X.winnow_fingerprint_table(_docs_spread(spark, sf_dir))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    return _WINNOW_FP_CACHE[key]
+    # spread scan: the fingerprint UDF ran on ONE core without it
+    # (measured 8.8s single-task vs ~1s — see _docs_spread)
+    return (
+        X.winnow_fingerprint_table(_docs_spread(spark, sf_dir))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
 
+@_per_session
 def _winnow_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One winnow print pass per (session, table) over the
     alien-suffixed copy corpus, returning ``(pairs_min5, recall_pairs)``:
@@ -2187,98 +2165,93 @@ def _winnow_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from valar_spark import textops as X
 
-    _prune_dead_sessions(_WINNOW_PAIRS_CACHE,
-                         spark.sparkContext.applicationId)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WINNOW_PAIRS_CACHE:
-        docs = _read(spark, sf_dir, "documents")
-        even = (F.col("doc_id") % 2 == 0) & F.col("text").isNotNull()
-        suffixed = docs.select(
-            "doc_id",
-            F.when(even, F.concat(
-                F.col("text"), F.lit(" qq"),
-                F.md5(F.col("doc_id").cast("string")),
-                F.lit("zz")))
-            .otherwise(F.col("text")).alias("text"))
-        u = suffixed.unionByName(
-            suffixed.filter(even).select(
-                (F.col("doc_id") + 100_000).alias("doc_id"), "text")
-        ).repartition(spark.sparkContext.defaultParallelism)
-        # fingerprint ONLY the modified subset (the suffixed even docs —
-        # their +100000 copies have identical text, so their prints are
-        # the same rows re-keyed); untouched docs reuse the shared raw
-        # print pass. One UDF pass over n/2 docs instead of 3n/2.
-        # repartition: the one-row-group scan would otherwise feed the
-        # fingerprint UDF from a single task (see _winnow_raw_prints).
-        # Persisted: BOTH union branches below (the suffixed docs and
-        # their re-keyed +100000 copies) reference this subtree, and a
-        # pandas-UDF projection is not exchange-reusable — without the
-        # persist the UDF ran once per branch (review finding, r6).
-        fp_even = (X.winnow_fingerprint_table(
-            suffixed.join(docs.filter(even).select("doc_id"), "doc_id")
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _read(spark, sf_dir, "documents")
+    even = (F.col("doc_id") % 2 == 0) & F.col("text").isNotNull()
+    suffixed = docs.select(
+        "doc_id",
+        F.when(even, F.concat(
+            F.col("text"), F.lit(" qq"),
+            F.md5(F.col("doc_id").cast("string")),
+            F.lit("zz")))
+        .otherwise(F.col("text")).alias("text"))
+    u = suffixed.unionByName(
+        suffixed.filter(even).select(
+            (F.col("doc_id") + 100_000).alias("doc_id"), "text")
+    ).repartition(spark.sparkContext.defaultParallelism)
+    # fingerprint ONLY the modified subset (the suffixed even docs —
+    # their +100000 copies have identical text, so their prints are
+    # the same rows re-keyed); untouched docs reuse the shared raw
+    # print pass. One UDF pass over n/2 docs instead of 3n/2.
+    # repartition: the one-row-group scan would otherwise feed the
+    # fingerprint UDF from a single task (see _winnow_raw_prints).
+    # Persisted: BOTH union branches below (the suffixed docs and
+    # their re-keyed +100000 copies) reference this subtree, and a
+    # pandas-UDF projection is not exchange-reusable — without the
+    # persist the UDF ran once per branch (review finding, r6).
+    fp_even = (X.winnow_fingerprint_table(
+        suffixed.join(docs.filter(even).select("doc_id"), "doc_id")
+        .repartition(spark.sparkContext.defaultParallelism))
+        .persist(StorageLevel.MEMORY_AND_DISK))
+    prints = (
+        _winnow_raw_prints(spark, sf_dir)
+        .join(docs.filter(~even).select(F.col("doc_id").alias("_id")),
+              "_id")
+        .unionByName(fp_even)
+        .unionByName(fp_even.select(
+            (F.col("_id") + 100_000).alias("_id"), "_fp")))
+    # ONE persisted exploded-print table feeds the min_shared=5 pair
+    # pass AND the planted-recall membership below — the r6 change:
+    # the old shared pass aggregated AND PERSISTED the full
+    # min_shared=1 pair table (351M rows at sf1.0) only so the
+    # 25k-planted-pair recall gate could probe it. The pair query's
+    # own output is the ≥5 filter, so the pass now aggregates at
+    # min_shared=5 directly, and recall derives its (a, a+100000)
+    # membership from the same exploded/df-cap tables.
+    ex = prints.select("_id", F.explode("_fp").alias("h")).persist(
+        StorageLevel.MEMORY_AND_DISK)
+    cap = max(2, int(0.02 * u.count()))
+    # ONE persisted df-cap aggregate serves both the pair pass and
+    # the recall membership below (it ran once per consumer before)
+    rare = (ex.groupBy("h").agg(F.count(F.lit(1)).alias("_df"))
+            .filter(F.col("_df") <= cap).select("h")
             .persist(StorageLevel.MEMORY_AND_DISK))
-        prints = (
-            _winnow_raw_prints(spark, sf_dir)
-            .join(docs.filter(~even).select(F.col("doc_id").alias("_id")),
-                  "_id")
-            .unionByName(fp_even)
-            .unionByName(fp_even.select(
-                (F.col("_id") + 100_000).alias("_id"), "_fp")))
-        # ONE persisted exploded-print table feeds the min_shared=5 pair
-        # pass AND the planted-recall membership below — the r6 change:
-        # the old shared pass aggregated AND PERSISTED the full
-        # min_shared=1 pair table (351M rows at sf1.0) only so the
-        # 25k-planted-pair recall gate could probe it. The pair query's
-        # own output is the ≥5 filter, so the pass now aggregates at
-        # min_shared=5 directly, and recall derives its (a, a+100000)
-        # membership from the same exploded/df-cap tables.
-        ex = prints.select("_id", F.explode("_fp").alias("h")).persist(
-            StorageLevel.MEMORY_AND_DISK)
-        cap = max(2, int(0.02 * u.count()))
-        # ONE persisted df-cap aggregate serves both the pair pass and
-        # the recall membership below (it ran once per consumer before)
-        rare = (ex.groupBy("h").agg(F.count(F.lit(1)).alias("_df"))
-                .filter(F.col("_df") <= cap).select("h")
-                .persist(StorageLevel.MEMORY_AND_DISK))
-        # identical-print-set groups BY CONSTRUCTION: {d, d+100000} for
-        # the suffixed even docs (the copy carries the suffixed text
-        # verbatim), singletons otherwise — ANY identical-set partition
-        # is exact (see winnow_match_pairs), and the generic md5/array
-        # aggregate was fed from this un-persisted prints union, so it
-        # re-evaluated the whole fingerprint pass a second time (~4s at
-        # the measurement scale)
-        groups = (
-            docs.filter(even).select(
-                F.col("doc_id").alias("_rep"),
-                F.array(F.col("doc_id"), F.col("doc_id") + 100_000)
-                .alias("_members"),
-                F.lit(2).cast("long").alias("_m"))
-            .unionByName(docs.filter(~even).select(
-                F.col("doc_id").alias("_rep"),
-                F.array(F.col("doc_id")).alias("_members"),
-                F.lit(1).cast("long").alias("_m"))))
-        pairs5 = X.winnow_match_pairs(u, min_shared=5, max_df=cap,
-                                      prints=prints, exploded=ex, rare=rare,
-                                      groups=groups)
-        # pairs5 is materialized eagerly inside winnow_match_pairs, which
-        # also populates the `ex` cache — the fp_even cache has served
-        # its purpose (both union branches read it once) and can go
-        fp_even.unpersist()
-        # planted-pair recall membership: the +100000 copy carries the
-        # SAME print rows re-keyed (constructed above), so the pair
-        # (a, a+100000) shares ≥1 surviving (df ≤ cap) print iff doc a
-        # has ≥1 surviving print — the same df-cap semantics the full
-        # pair table applied, restricted to the planted diagonal instead
-        # of materializing 351M rows to probe 25k of them.
-        recall = (ex.join(rare, "h", "left_semi")
-                  .filter((F.col("_id") < 100_000)
-                          & (F.col("_id") % 2 == 0))
-                  .select("_id").distinct()
-                  .select(F.col("_id").alias("id_a"),
-                          (F.col("_id") + 100_000).alias("id_b")))
-        _WINNOW_PAIRS_CACHE[key] = (pairs5, recall)
-    return _WINNOW_PAIRS_CACHE[key]
+    # identical-print-set groups BY CONSTRUCTION: {d, d+100000} for
+    # the suffixed even docs (the copy carries the suffixed text
+    # verbatim), singletons otherwise — ANY identical-set partition
+    # is exact (see winnow_match_pairs), and the generic md5/array
+    # aggregate was fed from this un-persisted prints union, so it
+    # re-evaluated the whole fingerprint pass a second time (~4s at
+    # the measurement scale)
+    groups = (
+        docs.filter(even).select(
+            F.col("doc_id").alias("_rep"),
+            F.array(F.col("doc_id"), F.col("doc_id") + 100_000)
+            .alias("_members"),
+            F.lit(2).cast("long").alias("_m"))
+        .unionByName(docs.filter(~even).select(
+            F.col("doc_id").alias("_rep"),
+            F.array(F.col("doc_id")).alias("_members"),
+            F.lit(1).cast("long").alias("_m"))))
+    pairs5 = X.winnow_match_pairs(u, min_shared=5, max_df=cap,
+                                  prints=prints, exploded=ex, rare=rare,
+                                  groups=groups)
+    # pairs5 is materialized eagerly inside winnow_match_pairs, which
+    # also populates the `ex` cache — the fp_even cache has served
+    # its purpose (both union branches read it once) and can go
+    fp_even.unpersist()
+    # planted-pair recall membership: the +100000 copy carries the
+    # SAME print rows re-keyed (constructed above), so the pair
+    # (a, a+100000) shares ≥1 surviving (df ≤ cap) print iff doc a
+    # has ≥1 surviving print — the same df-cap semantics the full
+    # pair table applied, restricted to the planted diagonal instead
+    # of materializing 351M rows to probe 25k of them.
+    recall = (ex.join(rare, "h", "left_semi")
+              .filter((F.col("_id") < 100_000)
+                      & (F.col("_id") % 2 == 0))
+              .select("_id").distinct()
+              .select(F.col("_id").alias("id_a"),
+                      (F.col("_id") + 100_000).alias("id_b")))
+    return (pairs5, recall)
 
 
 def _q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2356,7 +2329,16 @@ def _q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "rank")
 
 
-_IVF_CACHE: dict[tuple[str, str], tuple] = {}
+@_per_session
+def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple:
+    from valar_spark import ann
+
+    # sampled numpy fit (FAISS recipe): quantizer training is fixed-cost,
+    # only the one-pass Arrow cell assignment scales with the corpus.
+    # The index is built once per (session, table) — production trains a
+    # quantizer once and serves many probes (r3 VERDICT residual #4).
+    return ann.ivf_build_sampled(_read(spark, sf_dir, "embeddings"),
+                                 nlist=8, max_iter=8)
 
 
 def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2365,15 +2347,7 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from valar_spark import ann
 
     emb = _read(spark, sf_dir, "embeddings")
-    # sampled numpy fit (FAISS recipe): quantizer training is fixed-cost,
-    # only the one-pass Arrow cell assignment scales with the corpus.
-    # The index is built once per (session, table) — production trains a
-    # quantizer once and serves many probes (r3 VERDICT residual #4).
-    _prune_dead_sessions(_IVF_CACHE, spark.sparkContext.applicationId)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_CACHE:
-        _IVF_CACHE[key] = ann.ivf_build_sampled(emb, nlist=8, max_iter=8)
-    assigned, centroids = _IVF_CACHE[key]
+    assigned, centroids = _ivf_index(spark, sf_dir)
     return ann.ivf_topk(assigned, centroids,
                         emb.filter(F.col("vec_id") < 5), k=5, nprobe=4)
 
@@ -2389,11 +2363,7 @@ def _q_ann_ivf_probe_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     from valar_spark import ann
 
     emb = _read(spark, sf_dir, "embeddings")
-    _prune_dead_sessions(_IVF_CACHE, spark.sparkContext.applicationId)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_CACHE:
-        _IVF_CACHE[key] = ann.ivf_build_sampled(emb, nlist=8, max_iter=8)
-    assigned, centroids = _IVF_CACHE[key]
+    assigned, centroids = _ivf_index(spark, sf_dir)
     return ann.ivf_topk(assigned, centroids,
                         emb.filter(F.col("vec_id") < 5), k=5,
                         nprobe=8).orderBy("query_id", "rank")

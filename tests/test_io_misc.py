@@ -140,6 +140,51 @@ def test_streaming_stateful_integrity_across_batches(spark, tmp_path):
     assert len(got) == 2
 
 
+def test_streaming_integrity_null_turn_matches_batch_rule(spark, tmp_path):
+    """A null turn_idx must not fail the micro-batch: one micro-batch of the
+    stateful monitor gives the batch rule's (conv_id, turn_idx, rule_id)
+    multiset — every null-order row is a uniqueness violation and its ts
+    still takes part in the ordering lag."""
+    from collections import Counter
+
+    from valar_spark.dataset_rules import transcript_integrity_violations
+    from valar_spark.streaming import stream_integrity_stateful
+
+    rows = [("a", None, 0), ("a", 0, 0), ("a", 1, 5),
+            ("b", 0, 0), ("b", None, 9), ("b", 1, 1),
+            ("c", 0, 0), ("c", None, None), ("c", None, 0)]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, sec int",
+    ).select("conv_id", "turn_idx",
+             F.timestamp_seconds(F.lit(1_767_225_600) + F.col("sec"))
+             .alias("ts"))
+    src = str(tmp_path / "src")
+    df.coalesce(1).write.parquet(src)
+
+    q = (stream_integrity_stateful(
+            spark.readStream.schema(df.schema).parquet(src))
+         .writeStream.format("memory").queryName("integrity_null_mem")
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .outputMode("append").start())
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    def key(c, t, r):
+        return (c, None if t is None else str(t), r)
+
+    got = Counter(key(r["conv_id"], r["turn_idx"], r["rule_id"]) for r in
+                  spark.sql("SELECT * FROM integrity_null_mem").collect())
+    want = Counter(key(r["conv_id"], r["turn_idx"], r["rule_id"]) for r in
+                   transcript_integrity_violations(df).collect())
+    assert want == Counter({("a", None, "dataset.uniqueness"): 1,
+                            ("b", None, "dataset.uniqueness"): 1,
+                            ("c", None, "dataset.uniqueness"): 2,
+                            ("b", "0", "dataset.ordering"): 1})
+    assert got == want
+
+
 def test_streaming_drift_histogram_psi(spark, tmp_path):
     """Streaming drift: windowed fixed-edge histogram over a stream reduces
     to O(bins) counts; PSI vs a static baseline histogram over the SAME

@@ -88,3 +88,40 @@ def test_security_rules_flag_bait_and_tokens(spark):
     reloaded = suite_from_json(suite_to_json(rules))
     run2 = validate(df, reloaded, keys=["id"])
     assert run2.violations.count() == 3
+
+
+def test_per_session_builds_once_per_application_and_arguments(monkeypatch):
+    """The driver's shared-pass primitive needs no JVM: one build per
+    (application, builder, bound arguments) with defaults applied, and a
+    call under a new application drops the earlier application's entries."""
+    from types import SimpleNamespace
+
+    e = _entry()
+    registry = {}
+    monkeypatch.setattr(e, "_SESSION_PASSES", registry)
+    calls = []
+
+    @e._per_session
+    def build(spark, sf_dir, shingle_n=3):
+        calls.append((spark.sparkContext.applicationId, sf_dir, shingle_n))
+        return object()
+
+    def session(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(
+            applicationId=app_id))
+
+    s1 = session("app-1")
+    first = build(s1, "d")
+    assert build(s1, "d", 3) is first
+    assert build(s1, "d", shingle_n=3) is first
+    assert build(session("app-1"), sf_dir="d") is first
+    assert calls == [("app-1", "d", 3)]
+
+    assert build(s1, "d", 2) is not first
+    assert build(s1, "e") is not first
+    assert calls[1:] == [("app-1", "d", 2), ("app-1", "e", 3)]
+    assert len(registry) == 3
+
+    assert build(session("app-2"), "d") is not first
+    assert calls[-1] == ("app-2", "d", 3)
+    assert [k[0] for k in registry] == ["app-2"]

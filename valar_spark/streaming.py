@@ -535,7 +535,9 @@ def stream_integrity_stateful(
     exactly matching ``dataset_rules.transcript_integrity_violations``,
     whose batch output is the parity oracle for a single-batch stream
     (null ts neither flags nor serves as a comparison point, as with a
-    null lag in the batch window)."""
+    null lag in the batch window). As in the batch rule, null order values
+    sort first and every one is a uniqueness violation; it leaves
+    ``max_turn`` alone, but its ts still takes part in the ordering check."""
     conv_t = stream_df.schema[conv_col].dataType.simpleString()
     order_t = stream_df.schema[order_col].dataType.simpleString()
     out_ddl = (f"{conv_col} {conv_t}, {order_col} {order_t}, "
@@ -550,11 +552,15 @@ def stream_integrity_stateful(
 
         max_turn, last_ts_us, rows_seen = st or (-1, _NO_TS, 0)
         out = []
-        pdf = pdf.sort_values([order_col, ts_col])
+        pdf = pdf.sort_values([order_col, ts_col], na_position="first")
         for turn, ts in zip(pdf[order_col], pdf[ts_col]):
             is_nat = pd.isna(ts)
             ts_us = _NO_TS if is_nat else int(pd.Timestamp(ts).value // 1000)
-            if turn <= max_turn:
+            if pd.isna(turn):
+                out.append((conv, None, "dataset.uniqueness",
+                            "validation.dataset.duplicate_key",
+                            f"{order_col} is null"))
+            elif turn <= max_turn:
                 out.append((conv, turn, "dataset.uniqueness",
                             "validation.dataset.duplicate_key",
                             f"{order_col} {turn} already seen "

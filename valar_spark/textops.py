@@ -3593,6 +3593,14 @@ def source_diversity_profile(
     SAME corpus and shingle size (``(_id, _sh)``) so one cached tokenize+
     hash pass can feed this profile alongside the near-dup operators.
 
+    Collision bound of the 64-bit gram identity: G distinct grams give
+    about G²/2⁶⁵ expected colliding pairs — about 3·10⁻⁴ at G = 10⁸,
+    0.03 at 10⁹ and 3 at 10¹⁰. Each collision undercounts
+    ``n_grams_distinct`` by one for a source that holds both grams. A
+    collision can also turn two exclusive grams of different sources into
+    one shared gram, which undercounts ``n_exclusive`` by up to 2. Counts
+    are never inflated.
+
     Columns: ``(<group_col>, n_docs, n_grams_distinct, n_exclusive,
     exclusivity_pct)``; ``n_docs`` counts ALL rows of the source (text
     or not), gram columns are 0 and ``exclusivity_pct`` NULL for
