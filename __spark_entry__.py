@@ -241,24 +241,41 @@ def _q_ordering_events_by_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bad.select("user_id", "event_id").orderBy("user_id", "event_id")
 
 
-def _q_psi_events_value_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PSI between even/odd event_id halves on fixed-width bins [0,50) x10 —
-    fixed edges so Spark and DuckDB bin identically. Null event_ids are
-    filtered on both engines (see _q_js_events_value_halves)."""
-    ev = _read(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull() & F.col("event_id").isNotNull())
-    bucket = F.least(F.greatest(F.floor(F.col("value") / 50.0), F.lit(0)),
-                     F.lit(9)).cast("int")
+def _halves(ev: DataFrame, key: F.Column) -> tuple[DataFrame, DataFrame]:
+    """Two-sided histogram of the even/odd ``event_id`` halves of ``ev``:
+    ``hist`` is ``(key, p_n, q_n)`` with the even half's count in ``p_n``
+    and the odd half's in ``q_n`` (doubles), one row per ``key`` value;
+    ``tot`` is the one row ``(pt, qt)`` of per-half totals. The halves
+    drift queries all compare these two frames."""
     side = (F.pmod(F.col("event_id"), F.lit(2)) == 0).cast("int")
     hist = (
-        ev.select(bucket.alias("bucket"), side.alias("side"))
-        .groupBy("bucket")
+        ev.select(key.alias("key"), side.alias("side"))
+        .groupBy("key")
         .agg(
             F.sum(F.col("side")).cast("double").alias("p_n"),
             F.sum(1 - F.col("side")).cast("double").alias("q_n"),
         )
     )
     tot = hist.agg(F.sum("p_n").alias("pt"), F.sum("q_n").alias("qt"))
+    return hist, tot
+
+
+def _value_halves(spark: SparkSession,
+                  sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """:func:`_halves` of the events with a value and an event_id, keyed
+    on fixed-width ``value`` bins [0,50) x10 (``drift.fixed_bucket``)."""
+    from valar_spark import drift
+
+    ev = _read(spark, sf_dir, "events").filter(
+        F.col("value").isNotNull() & F.col("event_id").isNotNull())
+    return _halves(ev, drift.fixed_bucket("value", 0.0, 50.0, 10))
+
+
+def _q_psi_events_value_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PSI between even/odd event_id halves on fixed-width bins [0,50) x10 —
+    fixed edges so Spark and DuckDB bin identically. Null event_ids are
+    filtered on both engines (see _q_js_events_value_halves)."""
+    hist, tot = _value_halves(spark, sf_dir)
     eps = 1e-6
     joined = hist.crossJoin(tot).select(
         (F.greatest(F.col("p_n") / F.col("pt"), F.lit(eps))).alias("p"),
@@ -438,20 +455,7 @@ def _q_js_events_value_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression nulls out (SUM skips the row on both halves) while a SQL
     CASE would route a null id to the ELSE half — the filter makes the
     oracle pair robust to nullable ids, not just to the current data."""
-    ev = _read(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull() & F.col("event_id").isNotNull())
-    bucket = F.least(F.greatest(F.floor(F.col("value") / 50.0), F.lit(0)),
-                     F.lit(9)).cast("int")
-    side = (F.pmod(F.col("event_id"), F.lit(2)) == 0).cast("int")
-    hist = (
-        ev.select(bucket.alias("bucket"), side.alias("side"))
-        .groupBy("bucket")
-        .agg(
-            F.sum(F.col("side")).cast("double").alias("p_n"),
-            F.sum(1 - F.col("side")).cast("double").alias("q_n"),
-        )
-    )
-    tot = hist.agg(F.sum("p_n").alias("pt"), F.sum("q_n").alias("qt"))
+    hist, tot = _value_halves(spark, sf_dir)
     pq = hist.crossJoin(tot).select(
         (F.col("p_n") / F.col("pt")).alias("p"),
         (F.col("q_n") / F.col("qt")).alias("q"),
@@ -477,14 +481,7 @@ def _q_chi2_events_type_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell division carries the same expected>0 guard as chi2_from_counts
     (a degenerate all-one-half split yields 0 contribution, not NaN)."""
     ev = _read(spark, sf_dir, "events").filter(F.col("event_id").isNotNull())
-    side = (F.pmod(F.col("event_id"), F.lit(2)) == 0).cast("int")
-    cont = (
-        ev.select(F.col("event_type").alias("cat"), side.alias("side"))
-        .groupBy("cat")
-        .agg(F.sum(F.col("side")).cast("double").alias("p_n"),
-             F.sum(1 - F.col("side")).cast("double").alias("q_n"))
-    )
-    tot = cont.agg(F.sum("p_n").alias("pt"), F.sum("q_n").alias("qt"))
+    cont, tot = _halves(ev, F.col("event_type"))
     cell = cont.crossJoin(tot).select(
         "p_n", "q_n", "pt", "qt",
         (F.col("p_n") + F.col("q_n")).alias("rowt"),
@@ -502,27 +499,14 @@ def _q_ks_events_value_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binned two-sample KS between even/odd event_id halves on the same
     fixed-width bins as the PSI query: D = max |ECDF_p - ECDF_q| at bin
     edges. The cumulative window runs over ≤10 post-aggregation rows —
-    fixed-size regardless of input scale (drift.py:99 ks_binned is the
+    fixed-size regardless of input scale (drift.ks_binned is the
     library form; this is its oracle-checkable fixed-bin projection).
     Null event_ids are filtered on both engines (see
     _q_js_events_value_halves)."""
     from pyspark.sql.window import Window
 
-    ev = _read(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull() & F.col("event_id").isNotNull())
-    bucket = F.least(F.greatest(F.floor(F.col("value") / 50.0), F.lit(0)),
-                     F.lit(9)).cast("int")
-    side = (F.pmod(F.col("event_id"), F.lit(2)) == 0).cast("int")
-    hist = (
-        ev.select(bucket.alias("bucket"), side.alias("side"))
-        .groupBy("bucket")
-        .agg(
-            F.sum(F.col("side")).cast("double").alias("p_n"),
-            F.sum(1 - F.col("side")).cast("double").alias("q_n"),
-        )
-    )
-    tot = hist.agg(F.sum("p_n").alias("pt"), F.sum("q_n").alias("qt"))
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
+    hist, tot = _value_halves(spark, sf_dir)
+    w = Window.orderBy("key").rowsBetween(Window.unboundedPreceding, 0)
     cum = hist.select(
         F.sum("p_n").over(w).alias("cp"),
         F.sum("q_n").over(w).alias("cq"),
@@ -546,21 +530,8 @@ def _q_emd_events_value_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     _q_js_events_value_halves)."""
     from pyspark.sql.window import Window
 
-    ev = _read(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull() & F.col("event_id").isNotNull())
-    bucket = F.least(F.greatest(F.floor(F.col("value") / 50.0), F.lit(0)),
-                     F.lit(9)).cast("int")
-    side = (F.pmod(F.col("event_id"), F.lit(2)) == 0).cast("int")
-    hist = (
-        ev.select(bucket.alias("bucket"), side.alias("side"))
-        .groupBy("bucket")
-        .agg(
-            F.sum(F.col("side")).cast("double").alias("p_n"),
-            F.sum(1 - F.col("side")).cast("double").alias("q_n"),
-        )
-    )
-    tot = hist.agg(F.sum("p_n").alias("pt"), F.sum("q_n").alias("qt"))
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
+    hist, tot = _value_halves(spark, sf_dir)
+    w = Window.orderBy("key").rowsBetween(Window.unboundedPreceding, 0)
     cum = hist.select(
         F.sum("p_n").over(w).alias("cp"),
         F.sum("q_n").over(w).alias("cq"),

@@ -3,6 +3,8 @@ cross-checked against independent computations."""
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
 from valar_spark import dataset_rules as D
@@ -128,6 +130,95 @@ def test_drift_violation_row(spark):
     ok = drift.DriftResult(statistic=0.01, threshold=0.2, bins=10,
                            n_current=100, n_baseline=100)
     assert drift.drift_violation_row(spark, ok, "text_len", "psi").count() == 0
+
+
+def test_drift_violation_row_plan_has_no_python_rdd(spark):
+    """The violation row reaches the JVM as a local relation, not as a
+    parallelized Python list (an ``ExistingRDD`` scan)."""
+    r = drift.DriftResult(statistic=0.5, threshold=0.2, bins=10,
+                          n_current=100, n_baseline=100)
+    for res in (r, drift.DriftResult(0.01, 0.2, 10, 100, 100)):
+        v = drift.drift_violation_row(spark, res, "text_len", "psi")
+        plan = v._jdf.queryExecution().toString()
+        assert "ExistingRDD" not in plan and "LogicalRDD" not in plan
+    assert drift.drift_violation_row(spark, r, "text_len", "ks").first()[
+        "field_path"] == ["text_len"]
+
+
+def _one_sided_reference(current, baseline, col, psi_bins, ks_bins):
+    """psi and ks_binned as two one-sided ``histogram`` calls per
+    statistic, each binned count checked against a Python count of the
+    edges strictly below every non-null value."""
+    def hist(df, edges):
+        got = drift.histogram(df, col, edges)
+        want = [0] * (len(edges) + 1)
+        for (v,) in df.select(col).collect():
+            if v is not None:
+                want[sum(float(v) > e for e in edges)] += 1
+        assert got == want
+        return got
+
+    edges = drift.quantile_edges(baseline, col, psi_bins)
+    psi = drift.psi_from_counts(hist(current, edges), hist(baseline, edges))
+    both = baseline.select(col).unionAll(current.select(col))
+    edges = drift.quantile_edges(both, col, ks_bins)
+    p_counts, q_counts = hist(current, edges), hist(baseline, edges)
+    n_p, n_q = sum(p_counts), sum(q_counts)
+    d, cp, cq = 0.0, 0, 0
+    for pc, qc in zip(p_counts, q_counts):
+        cp += pc
+        cq += qc
+        d = max(d, abs(cp / max(n_p, 1) - cq / max(n_q, 1)))
+    thr = (1.358 * math.sqrt((n_p + n_q) / max(n_p * n_q, 1))
+           if n_p and n_q else 1.0)
+    return psi, drift.DriftResult(d, thr, len(edges) + 1, n_p, n_q)
+
+
+def _jobs_of(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-drift-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "drift call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_two_sided_drift_equals_one_sided_histograms(spark):
+    """psi and ks_binned count both sides in one aggregate: their results
+    equal the one-sided reference on a tie-heavy integer column, on a
+    column with nulls on both sides, and on sides of different integral
+    types; each call runs at most 4 Spark jobs (edges, then the one
+    two-sided aggregate)."""
+    ids = spark.range(3_000)
+    ties_base = ids.select((F.col("id") % 7).cast("int").alias("v"))
+    ties_cur = ids.select(
+        F.when(F.col("id") % 3 == 0, F.lit(6))
+        .otherwise(F.col("id") % 5).cast("int").alias("v"))
+    nulls_base = ids.select(
+        F.when(F.col("id") % 4 == 0, F.lit(None))
+        .otherwise(F.col("id") * 0.37).alias("v"))
+    nulls_cur = ids.select(
+        F.when(F.col("id") % 9 == 1, F.lit(None))
+        .otherwise(F.col("id") * 0.41 + 50).alias("v"))
+    int_base = ids.select((F.col("id") % 97).cast("int").alias("v"))
+    long_cur = ids.select((F.col("id") % 83 + 20).cast("bigint").alias("v"))
+    cases = [(ties_cur, ties_base), (nulls_cur, nulls_base),
+             (long_cur, int_base), (int_base, long_cur)]
+    for cur, base in cases:
+        want_psi, want_ks = _one_sided_reference(cur, base, "v", 10, 16)
+        got_psi, jobs = _jobs_of(spark, lambda: drift.psi(cur, base, "v"))
+        assert got_psi == want_psi and jobs <= 4
+        got_ks, jobs = _jobs_of(
+            spark, lambda: drift.ks_binned(cur, base, "v", bins=16))
+        assert got_ks == want_ks and jobs <= 4
+    # the tie-heavy column really collapses duplicate edges
+    assert len(drift.quantile_edges(ties_base, "v", 10)) < 9
 
 
 def test_psi_from_counts_length_guard():

@@ -298,6 +298,51 @@ def test_run_incremental_carries_unchanged(spark, small_df, tmp_path):
     assert len(carried_snap) >= 1  # carried rows exist under the new run
 
 
+def test_run_incremental_rerun_after_crash_carries_once(spark, small_df,
+                                                        tmp_path):
+    """An incremental run that crashes after its first batch and is run
+    again ends with exactly the result of an uninterrupted validation:
+    the re-run does not carry the unchanged buckets a second time."""
+    from valar_spark.runner import diff_runs, run_incremental
+    from valar_spark.validate import bucket_expr
+
+    cfg = ValidationConfig(num_buckets=4, salt=2)
+    rs = RuleSet(RULES, cfg)
+    work = str(tmp_path / "w")
+    run_incremental(small_df, rs, RunnerConfig(work_dir=work, run_id="a",
+                                               buckets_per_job=1))
+
+    # day-2 snapshot: blank the text of one conversation in each of two
+    # buckets, so the re-run has a dirty bucket left to validate
+    firsts = (small_df.select("conv_id", bucket_expr(["conv_id"], 4)
+                              .alias("b"))
+              .groupBy("b").agg(F.min("conv_id").alias("c"))
+              .orderBy("b").limit(2).collect())
+    targets = [r["c"] for r in firsts]
+    day2 = small_df.withColumn(
+        "text", F.when(F.col("conv_id").isin(targets), F.lit(""))
+        .otherwise(F.col("text")))
+
+    class Crash(Exception):
+        pass
+
+    def crash_after_first_batch(events):
+        raise Crash()
+
+    cfg_b = RunnerConfig(work_dir=work, run_id="b", buckets_per_job=1)
+    with pytest.raises(Crash):
+        run_incremental(day2, rs, cfg_b, prev_run_id="a",
+                        observer=crash_after_first_batch)
+    res = run_incremental(day2, rs, cfg_b, prev_run_id="a")
+    assert len(res.buckets_processed) == 1
+    assert sorted(res.buckets_processed + res.buckets_skipped) == [0, 1, 2, 3]
+
+    only_run, only_direct = diff_runs(res.violations,
+                                      validate(day2, rs).violations)
+    assert (only_run.count(), only_direct.count()) == (0, 0)
+    assert res.verdicts.count() == 4 * len(rs.rule_ids())
+
+
 def test_run_incremental_rule_change_revalidates_all(spark, small_df,
                                                      tmp_path):
     from valar_spark.runner import run_incremental

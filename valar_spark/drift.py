@@ -2,10 +2,13 @@
 PSI and two-sample Kolmogorov–Smirnov.
 
 Scale design: both statistics reduce the data to a FIXED-SIZE histogram
-(one aggregation shuffle each side, ≤ ``bins`` rows leave the cluster), so
-they cost the same at 10^12 rows as at 10^4. The exact-KS variant (global
-window over every distinct value) exists for small-scale verification of
-the binned approximation and is clearly marked as non-scalable.
+(one ``groupBy(side, bucket)`` shuffle over baseline ∪ current, ≤ 2·bins
+rows leave the cluster), so they cost the same at 10^12 rows as at 10^4.
+Every binning goes through one of two rules: :func:`edge_bucket` for
+quantile edges and :func:`fixed_bucket` for fixed-width bins. The exact-KS
+variant (global window over every distinct value) exists for small-scale
+verification of the binned approximation and is clearly marked as
+non-scalable.
 
 No built-in 2-sample KS exists in Spark — these are custom aggregation
 pipelines, still pure DataFrame ops (SURVEY.md §2.5).
@@ -13,10 +16,12 @@ pipelines, still pure DataFrame ops (SURVEY.md §2.5).
 
 from __future__ import annotations
 
+import functools
 import math
+from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -39,25 +44,52 @@ def quantile_edges(df: DataFrame, col: str, bins: int = 10,
     return edges
 
 
-def histogram(df: DataFrame, col: str, edges: list[float]) -> list[int]:
-    """Counts per bin (len(edges)+1 bins, (-inf, e1], …, (e_k, inf)).
-    One hash aggregate; the binning stays JVM-side — bucket index = number
-    of edges strictly below the value (Spark's ``width_bucket`` only
-    supports uniform bins, so arbitrary quantile edges use a
-    higher-order-function count)."""
+def edge_bucket(col: str, edges: Sequence[float]) -> Column:
+    """Bin of ``col`` over sorted ``edges``: the number of edges strictly
+    below the value, so bin ``i`` is ``(e_i, e_{i+1}]``. The binning of
+    :func:`histogram`, :func:`psi_by_group`, :func:`psi_timeline` and
+    ``streaming.stream_value_histogram``; ``width_bucket`` only takes
+    uniform bins, so this is a JVM-side higher-order-function count."""
     arr = F.array(*[F.lit(float(e)) for e in edges])
     v = F.col(col).cast("double")
-    bucket = F.size(F.filter(arr, lambda e: v > e))
-    counts = (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(bucket.alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    out = [0] * (len(edges) + 1)
+    return F.size(F.filter(arr, lambda e: v > e))
+
+
+def fixed_bucket(col: str, lo: float, width: float, nbins: int) -> Column:
+    """Fixed-width bin ``floor((v − lo)/width)`` clamped to ``[0, nbins)``:
+    the binning of :func:`emd_by_group` and the entry's fixed-bin gate
+    projections, so a DuckDB oracle bins identically."""
+    v = F.col(col).cast("double")
+    return F.least(F.greatest(F.floor((v - F.lit(lo)) / F.lit(width)),
+                              F.lit(0)),
+                   F.lit(nbins - 1)).cast("int")
+
+
+def _side_counts(sides: Sequence[DataFrame], col: str,
+                 edges: Sequence[float]) -> list[list[int]]:
+    """Per-bin counts of ``col`` for each frame in ``sides`` from ONE
+    ``groupBy(side, bucket)`` over their union: each side drops nulls of
+    the raw column, then bins with :func:`edge_bucket`."""
+    bucket = edge_bucket(col, edges)
+    tagged = [df.filter(F.col(col).isNotNull())
+              .select(F.lit(i).alias("side"), bucket.alias("bucket"))
+              for i, df in enumerate(sides)]
+    counts = (functools.reduce(DataFrame.unionAll, tagged)
+              .groupBy("side", "bucket")
+              .agg(F.count(F.lit(1)).alias("n"))
+              .collect())
+    out = [[0] * (len(edges) + 1) for _ in sides]
     for r in counts:
-        out[int(r["bucket"])] += int(r["n"])
+        out[r["side"]][r["bucket"]] += r["n"]
     return out
+
+
+def histogram(df: DataFrame, col: str, edges: list[float]) -> list[int]:
+    """Counts per bin (len(edges)+1 bins, (-inf, e1], …, (e_k, inf)) of
+    the non-null values, binned by :func:`edge_bucket`. One hash
+    aggregate: the one-frame case of the two-sided count :func:`psi` and
+    :func:`ks_binned` run."""
+    return _side_counts([df], col, edges)[0]
 
 
 @dataclass(frozen=True)
@@ -85,8 +117,7 @@ def psi(
     ``Σ (p−q)·ln(p/q)`` with epsilon smoothing. Conventional thresholds:
     <0.1 stable, 0.1–0.2 moderate, >0.2 drifted."""
     edges = quantile_edges(baseline, col, bins)
-    q_counts = histogram(baseline, col, edges)
-    p_counts = histogram(current, col, edges)
+    q_counts, p_counts = _side_counts([baseline, current], col, edges)
     return psi_from_counts(p_counts, q_counts, threshold, eps)
 
 
@@ -102,10 +133,10 @@ def psi_by_group(
     the WHOLE corpus, fully distributed — ``(group, n_rows, psi)`` with
     one output row per group. The slice monitor :func:`psi` can't give
     you without one driver round-trip per group: which language/source/
-    day slice walked away from the corpus distribution. Binning uses the
-    same strictly-below-edge rule as :func:`histogram` (bucket = #edges
-    < value), with global quantile ``edges`` by default or caller-fixed
-    edges for cross-engine reproducibility.
+    day slice walked away from the corpus distribution. Binning is
+    :func:`edge_bucket` (bucket = #edges < value), with global quantile
+    ``edges`` by default or caller-fixed edges for cross-engine
+    reproducibility.
 
     Shape at scale: one (group, bucket) aggregate (map-side combined;
     result is groups × (bins+1) rows), the global histogram and group
@@ -114,9 +145,8 @@ def psi_by_group(
     shuffle once, everything after is cardinality-sized."""
     if edges is None:
         edges = quantile_edges(df, col, bins)
-    arr = F.array(*[F.lit(float(e)) for e in edges])
     v = F.col(col).cast("double")
-    bucket = F.size(F.filter(arr, lambda e: v > e))
+    bucket = edge_bucket(col, edges)
     base = (df.filter(v.isNotNull() & F.col(group_col).isNotNull())
             .select(F.col(group_col).alias("grp"), bucket.alias("bucket")))
     gb = base.groupBy("grp", "bucket").agg(F.count(F.lit(1)).alias("g_n"))
@@ -161,13 +191,14 @@ def psi_timeline(
     before* — the alert you page on, because a slow week-long migration
     never trips a fixed-baseline threshold until it's already large.
 
-    Binning matches :func:`histogram` / :func:`psi_by_group` exactly
-    (bucket = #edges strictly below the value); pass caller-fixed
-    ``edges`` for cross-engine reproducibility, else global quantile
-    edges are derived once (NOT per bucket — per-bucket edges would make
-    consecutive PSIs incomparable). ``q`` is the previous PRESENT
-    bucket's share (lag over buckets that actually contain rows), so a
-    calendar gap compares across it rather than against an empty day.
+    Binning is :func:`edge_bucket`, as in :func:`histogram` /
+    :func:`psi_by_group` (bucket = #edges strictly below the value); pass
+    caller-fixed ``edges`` for cross-engine reproducibility, else global
+    quantile edges are derived once (NOT per bucket — per-bucket edges
+    would make consecutive PSIs incomparable). ``q`` is the previous
+    PRESENT bucket's share (lag over buckets that actually contain rows),
+    so a calendar gap compares across it rather than against an empty
+    day.
 
     Shape at scale: ONE data-sized (time-bucket, bin) aggregate
     (map-side combined); the per-bucket totals, the (#buckets × #bins)
@@ -180,9 +211,8 @@ def psi_timeline(
     from counts alone (:func:`psi_from_counts` per adjacent pair)."""
     if edges is None:
         edges = quantile_edges(df, col, bins)
-    arr = F.array(*[F.lit(float(e)) for e in edges])
     v = F.col(col).cast("double")
-    bucket = F.size(F.filter(arr, lambda e: v > e))
+    bucket = edge_bucket(col, edges)
     base = (df.filter(v.isNotNull() & F.col(ts_col).isNotNull())
             .select(F.date_trunc(granularity, F.col(ts_col)).alias("tb"),
                     bucket.alias("bucket")))
@@ -404,9 +434,9 @@ def emd_by_group(
     :func:`psi_by_group` / :func:`js_by_group`: PSI/JS tell you a slice's
     mix SHIFTED, W1 tells you by HOW MUCH in the column's own units
     (the "this language's length distribution sits 120 chars above the
-    corpus" alert). Binning is ``floor((v − lo)/width)`` clamped to
-    ``[0, nbins)`` — the same rule both fixed-bin gate projections use,
-    so a DuckDB oracle bins identically.
+    corpus" alert). Binning is :func:`fixed_bucket`
+    (``floor((v − lo)/width)`` clamped to ``[0, nbins)``), the rule the
+    fixed-bin gate projections use, so a DuckDB oracle bins identically.
 
     Shape at scale: one (group, bucket) map-side-combined aggregate over
     the data; everything after — densify (groups × nbins cross join of
@@ -414,9 +444,7 @@ def emd_by_group(
     group), the final per-group sum — is cardinality-sized. Null values
     and null groups drop."""
     v = F.col(col).cast("double")
-    bucket = F.least(F.greatest(F.floor((v - F.lit(lo)) / F.lit(width)),
-                                F.lit(0)),
-                     F.lit(nbins - 1)).cast("int")
+    bucket = fixed_bucket(col, lo, width, nbins)
     base = (df.filter(v.isNotNull() & F.col(group_col).isNotNull())
             .select(F.col(group_col).alias("grp"), bucket.alias("bucket")))
     gb = base.groupBy("grp", "bucket").agg(F.count(F.lit(1)).alias("g_n"))
@@ -596,8 +624,7 @@ def ks_binned(
     critical value ``1.358·sqrt((n+m)/(n·m))``."""
     both = baseline.select(F.col(col)).unionAll(current.select(F.col(col)))
     edges = quantile_edges(both, col, bins)
-    q_counts = histogram(baseline, col, edges)
-    p_counts = histogram(current, col, edges)
+    q_counts, p_counts = _side_counts([baseline, current], col, edges)
     n_p, n_q = sum(p_counts), sum(q_counts)
     d = 0.0
     cp = cq = 0
@@ -657,6 +684,7 @@ def drift_violation_row(spark, result: DriftResult, col: str, kind: str,
     """One violation row when a drift check trips; empty frame otherwise."""
     from . import errors as E
     from .dataset_rules import VIOLATION_COLS
+    from .runner import _local_frame
 
     rule_id = rule_id or f"dataset.drift_{kind}.{col}"
     code = E.CODE_DRIFT_PSI if kind == "psi" else E.CODE_DRIFT_KS
@@ -674,7 +702,7 @@ def drift_violation_row(spark, result: DriftResult, col: str, kind: str,
     schema = ("rule_id string, conv_id string, turn_idx string, "
               "partition_id int, field_path array<string>, message string, "
               "code string, severity string, expected string, actual string")
-    return spark.createDataFrame(rows, schema).select(*VIOLATION_COLS)
+    return _local_frame(spark, rows, schema).select(*VIOLATION_COLS)
 
 
 def token_drift(

@@ -114,21 +114,30 @@ def _fs_delete(spark: SparkSession, path: str) -> None:
         fs.delete(p, True)
 
 
-def _completed_buckets(spark: SparkSession, cfg: RunnerConfig, rsh: str) -> set[int]:
+def _read_state(spark: SparkSession, cfg: RunnerConfig) -> DataFrame:
+    """The state table, read with its known schema (no inference job)."""
+    return spark.read.schema(STATE_SCHEMA).parquet(cfg.state_path)
+
+
+def _completed_buckets(spark: SparkSession, cfg: RunnerConfig, rsh: str,
+                       run_ids: Sequence[str]) -> dict[str, set[int]]:
+    """Buckets done under each of ``run_ids`` for rule set ``rsh``, from
+    one state read."""
+    done: dict[str, set[int]] = {r: set() for r in run_ids}
     if not _fs_exists(spark, cfg.state_path):
-        return set()
-    st = spark.read.parquet(cfg.state_path)
+        return done
     rows = (
-        st.filter(
-            (F.col("run_id") == cfg.run_id)
+        _read_state(spark, cfg).filter(
+            F.col("run_id").isin(list(run_ids))
             & (F.col("rule_set_hash") == rsh)
             & (F.col("status") == "done")
         )
-        .select("partition_id")
-        .distinct()
+        .select("run_id", "partition_id")
         .collect()
     )
-    return {r["partition_id"] for r in rows}
+    for r in rows:
+        done[r["run_id"]].add(r["partition_id"])
+    return done
 
 
 def run_checkpointed(
@@ -139,13 +148,22 @@ def run_checkpointed(
     partition_cols: Sequence[str] = ("conv_id",),
     observer=None,
 ) -> RunResult:
+    rsh = rule_set_hash(ruleset)
+    done = _completed_buckets(df.sparkSession, cfg, rsh, [cfg.run_id])
+    return _run_pending(df, ruleset, cfg, rsh, done[cfg.run_id], keys,
+                        partition_cols, observer)
+
+
+def _run_pending(df: DataFrame, ruleset: RuleSet, cfg: RunnerConfig,
+                 rsh: str, done: set[int], keys: Sequence[str],
+                 partition_cols: Sequence[str], observer) -> RunResult:
+    """Validate every bucket not in ``done`` under ``cfg.run_id``, batch
+    by batch, and return the run's stored result."""
     spark = df.sparkSession
     vcfg = ruleset.config
-    rsh = rule_set_hash(ruleset)
     # repeated ids (same-named leaves) share one verdict row per bucket
     rule_ids = list(dict.fromkeys(ruleset.rule_ids()))
 
-    done = _completed_buckets(spark, cfg, rsh)
     all_buckets = list(range(vcfg.num_buckets))
     pending = [b for b in all_buckets if b not in done]
 
@@ -246,7 +264,7 @@ def run_checkpointed(
                     & (F.col("rule_set_hash") == rsh))
         )
     verdicts = (
-        spark.read.parquet(cfg.state_path)
+        _read_state(spark, cfg)
         .filter((F.col("run_id") == cfg.run_id) & (F.col("rule_set_hash") == rsh))
         .select(
             F.col("partition_id"), "rule_id",
@@ -343,7 +361,9 @@ def run_incremental(
     Requires the same rule set (``rule_set_hash`` guards it — a rule
     change invalidates every carried verdict and everything revalidates)
     and the same ``num_buckets``. First run (``prev_run_id=None`` or no
-    stored fingerprints) degrades to a full :func:`run_checkpointed`."""
+    stored fingerprints) degrades to a full :func:`run_checkpointed`.
+    Running a crashed increment again under the same ``run_id`` resumes
+    it: buckets it already carried or validated are not redone."""
     spark = df.sparkSession
     rsh = rule_set_hash(ruleset)
     nb = ruleset.config.num_buckets
@@ -352,62 +372,60 @@ def run_incremental(
     try:
         prev_path = (_fingerprints_path(cfg, prev_run_id)
                      if prev_run_id else None)
-        carried: list[int] = []
-        if prev_path and _fs_exists(spark, prev_path):
-            prev_fp = spark.read.parquet(prev_path)
+        has_prev = bool(prev_path) and _fs_exists(spark, prev_path)
+        done = _completed_buckets(
+            spark, cfg, rsh,
+            [prev_run_id, cfg.run_id] if has_prev else [cfg.run_id])
+        skip = done[cfg.run_id]
+        if has_prev:
+            prev_fp = spark.read.schema(cur_fp.schema).parquet(prev_path)
             dirty = {r["partition_id"] for r in
                      changed_buckets(cur_fp, prev_fp).collect()}
-            prev_state = (
-                spark.read.parquet(cfg.state_path)
-                .filter((F.col("run_id") == prev_run_id)
-                        & (F.col("rule_set_hash") == rsh)
-                        & (F.col("status") == "done"))
-                .filter(~F.col("partition_id").isin(list(dirty)))
-            )
-            carried = sorted({r["partition_id"] for r in
-                              prev_state.select("partition_id")
-                              .distinct().collect()})
+            # a bucket this run already holds (carried or validated by an
+            # earlier attempt that crashed) is not carried again
+            carried = sorted(done[prev_run_id] - dirty - skip)
             if carried:
-                # seed state: verdicts re-stamped with the new run_id but
-                # keeping their original snapshot_id (honest lineage)
-                state_cols = ["run_id", "rule_set_hash", "partition_id",
-                              "status", "rule_id", "violation_count",
-                              "rows_checked", "snapshot_id", "finished_at"]
-                (prev_state.withColumn("run_id", F.lit(cfg.run_id))
-                 .select(*state_cols)
-                 .coalesce(1).write.mode("append").parquet(cfg.state_path))
-                # re-stamp the carried buckets' violation partitions
-                # (explicit schema: same false-PASS inference hazard as the
-                # run_checkpointed result read)
-                prev_viol = (
-                    spark.read
-                    .schema(_empty_violations(df, keys).schema)
-                    .parquet(cfg.violations_path)
-                    .filter((F.col("run_id") == prev_run_id)
-                            & (F.col("rule_set_hash") == rsh)
-                            & (F.col(BUCKET_COL).isin(carried)))
-                ) if _fs_exists(spark, cfg.violations_path) else None
-                if prev_viol is not None:
-                    (prev_viol.withColumn("run_id", F.lit(cfg.run_id))
-                     .write.mode("append")
-                     .partitionBy("run_id", "rule_set_hash", BUCKET_COL)
-                     .parquet(cfg.violations_path))
-        res = run_checkpointed(df, ruleset, cfg, keys=keys,
-                               partition_cols=partition_cols,
-                               observer=observer)
+                _carry(spark, cfg, rsh, prev_run_id, carried,
+                       _empty_violations(df, keys).schema)
+            skip = skip | set(carried)
+        res = _run_pending(df, ruleset, cfg, rsh, skip, keys,
+                           partition_cols, observer)
         # persist this run's fingerprints for the NEXT increment
         (cur_fp.coalesce(1).write.mode("overwrite")
          .parquet(_fingerprints_path(cfg, cfg.run_id)))
     finally:
         cur_fp.unpersist()
-    return RunResult(
-        violations=res.violations,
-        verdicts=res.verdicts,
-        buckets_processed=[b for b in res.buckets_processed
-                           if b not in carried],
-        buckets_skipped=sorted(set(res.buckets_skipped) | set(carried)),
-        rows_checked=res.rows_checked,
-    )
+    return res
+
+
+def _carry(spark: SparkSession, cfg: RunnerConfig, rsh: str,
+           prev_run_id: str, carried: Sequence[int], viol_schema) -> None:
+    """Copy ``prev_run_id``'s violations and verdicts of the ``carried``
+    buckets under ``cfg.run_id``. Verdicts keep their original
+    ``snapshot_id`` (honest lineage). The state rows are appended last:
+    they are the commit marker, so a crash before them leaves the buckets
+    uncarried and the next attempt clears and rewrites their partitions."""
+    if _fs_exists(spark, cfg.violations_path):
+        _clear_bucket_partitions(spark, cfg, rsh, carried)
+        # explicit schema: same false-PASS inference hazard as the
+        # run_checkpointed result read
+        prev_viol = (
+            spark.read.schema(viol_schema).parquet(cfg.violations_path)
+            .filter((F.col("run_id") == prev_run_id)
+                    & (F.col("rule_set_hash") == rsh)
+                    & (F.col(BUCKET_COL).isin(carried)))
+        )
+        (prev_viol.withColumn("run_id", F.lit(cfg.run_id))
+         .write.mode("append")
+         .partitionBy("run_id", "rule_set_hash", BUCKET_COL)
+         .parquet(cfg.violations_path))
+    (_read_state(spark, cfg)
+     .filter((F.col("run_id") == prev_run_id)
+             & (F.col("rule_set_hash") == rsh)
+             & (F.col("status") == "done")
+             & F.col("partition_id").isin(carried))
+     .withColumn("run_id", F.lit(cfg.run_id))
+     .coalesce(1).write.mode("append").parquet(cfg.state_path))
 
 
 def _clear_bucket_partitions(spark: SparkSession, cfg: RunnerConfig,

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .config import DEFAULT, ValidationConfig
+from .drift import edge_bucket
 from .rules import Rule
 from .validate import BUCKET_COL, RuleSet, bucket_expr, validate
 
@@ -79,20 +80,18 @@ def stream_value_histogram(
     """Windowed fixed-edge histogram of a numeric column — the streaming
     half of drift detection. Emits ``(window, bucket, n)`` per closed
     window (watermarked, append-safe); bucket = number of edges strictly
-    below the value, the same binning as ``drift.histogram``, so a static
-    baseline histogram over the SAME edges compares directly. Only
-    NON-EMPTY buckets are emitted — zero-fill with
-    ``drift.counts_from_pairs(rows, len(edges) + 1)`` before handing the
-    window to ``drift.psi_from_counts``. State is
+    below the value (``drift.edge_bucket``, the binning of
+    ``drift.histogram``), so a static baseline histogram over the SAME
+    edges compares directly. Only NON-EMPTY buckets are emitted —
+    zero-fill with ``drift.counts_from_pairs(rows, len(edges) + 1)``
+    before handing the window to ``drift.psi_from_counts``. State is
     ≤len(edges)+1 counters per open window — O(bins), independent of
     stream volume."""
-    arr = F.array(*[F.lit(float(e)) for e in edges])
-    v = F.col(col).cast("double")
-    bucket = F.size(F.filter(arr, lambda e: v > e))
     return (
         stream_df.filter(F.col(col).isNotNull())
         .withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window), bucket.alias("bucket"))
+        .groupBy(F.window(ts_col, window),
+                 edge_bucket(col, edges).alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
