@@ -2197,12 +2197,10 @@ def _winnow_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(even).select(
             F.col("doc_id").alias("_rep"),
             F.array(F.col("doc_id"), F.col("doc_id") + 100_000)
-            .alias("_members"),
-            F.lit(2).cast("long").alias("_m"))
+            .alias("_members"))
         .unionByName(docs.filter(~even).select(
             F.col("doc_id").alias("_rep"),
-            F.array(F.col("doc_id")).alias("_members"),
-            F.lit(1).cast("long").alias("_m"))))
+            F.array(F.col("doc_id")).alias("_members"))))
     pairs5 = X.winnow_match_pairs(u, min_shared=5, max_df=cap,
                                   prints=prints, exploded=ex, rare=rare,
                                   groups=groups)
@@ -2253,10 +2251,11 @@ def _q_contamination_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     55-char quote ≫ min_shared=2) makes detection exact, so the DuckDB
     oracle is the construction itself."""
     from valar_spark import textops as X
+    from valar_spark.runner import _local_frame
 
     docs = _read(spark, sf_dir, "documents")
-    ev = spark.createDataFrame(list(enumerate(_EVAL_QUOTES)),
-                               "eval_id long, text string")
+    ev = _local_frame(spark, list(enumerate(_EVAL_QUOTES)),
+                      "eval_id long, text string")
     qarr = F.array(*[F.lit(q) for q in _EVAL_QUOTES])
     m = F.col("doc_id") % 37
     contaminated = (m < 5) & F.col("text").isNotNull()

@@ -243,8 +243,8 @@ def test_pair_blob_kernels_count_across_batches_and_buckets():
 
 
 def test_winnow_match_pairs_equals_classic_join(spark):
-    # Differential pin for the r6 pair-counting rewrite (identical-set
-    # dedup + numpy partial aggregation): the new path must reproduce the
+    # Differential pin for the pair-counting path (identical-set groups,
+    # dense group codes, blob-packed pair exchange): it must reproduce the
     # classic exploded self-join bit-for-bit on a fixture exercising
     # every expansion branch — exact-copy groups of size 2 AND 3
     # (intra-group pairs), a partial-overlap doc against a group
@@ -259,16 +259,15 @@ def test_winnow_match_pairs_equals_classic_join(spark):
             (12, base + " with a divergent tail appended"),  # 2-copy group
             (21, "entirely unrelated words occupy this one"),
             (30, ""), (31, None)]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    for min_shared, max_df in [(1, 50), (2, 4), (5, None)]:
-        new = X.winnow_match_pairs(df, min_shared=min_shared, max_df=max_df)
+
+    def classic(df, min_shared, max_df):
         t = X.winnow_fingerprint_table(df)
         ex = t.select("_id", SF.explode("_fp").alias("h"))
         if max_df is not None:
             rare = (ex.groupBy("h").agg(SF.count(SF.lit(1)).alias("_df"))
                     .filter(SF.col("_df") <= max_df).select("h"))
             ex = ex.join(rare, "h", "left_semi")
-        classic = (
+        return (
             ex.alias("a").join(ex.alias("b"),
                                (SF.col("a.h") == SF.col("b.h"))
                                & (SF.col("a._id") < SF.col("b._id")))
@@ -276,41 +275,61 @@ def test_winnow_match_pairs_equals_classic_join(spark):
                      SF.col("b._id").alias("id_b"))
             .agg(SF.count(SF.lit(1)).alias("shared_fp"))
             .filter(SF.col("shared_fp") >= min_shared))
-        got = sorted(map(tuple, new.collect()))
-        want = sorted(map(tuple, classic.collect()))
-        assert got == want, (min_shared, max_df, got, want)
-        new.unpersist()
+
+    # ids ≥ 2^31 and string ids (whose order differs from the integers':
+    # "11" < "2") take the same dense-code path as small integral ids —
+    # codes, not ids, fill the posting lists — and must come back as the
+    # original ids in the input id type
+    big = 1 << 32
+    fixtures = [
+        spark.createDataFrame(rows, "doc_id bigint, text string"),
+        spark.createDataFrame([(i + big, t) for i, t in rows],
+                              "doc_id bigint, text string"),
+        spark.createDataFrame([(str(i), t) for i, t in rows],
+                              "doc_id string, text string"),
+    ]
+    for df in fixtures:
+        for min_shared, max_df in [(1, 50), (2, 4), (5, None)]:
+            new = X.winnow_match_pairs(df, min_shared=min_shared,
+                                       max_df=max_df)
+            ref = classic(df, min_shared, max_df)
+            assert new.dtypes == ref.dtypes
+            got = sorted(map(tuple, new.collect()))
+            want = sorted(map(tuple, ref.collect()))
+            assert got == want, (df.schema, min_shared, max_df, got, want)
+            new.unpersist()
+    df = fixtures[0]
     # the copy groups must actually pair up (expansion branches hit)
     last = {(r["id_a"], r["id_b"]) for r in
             X.winnow_match_pairs(df, min_shared=1, max_df=50).collect()}
     assert {(1, 2), (1, 3), (2, 3), (11, 12), (1, 11)} <= last
-    # force the blob-packed exchange regime (normally gated on >=1M
-    # surviving exploded prints) so its Spark wiring — the mapInPandas
-    # blob schema, repartition(bucket), and the uint32 width selection
-    # for 16-bit-safe ids — is differentially pinned too, not just the
-    # numpy kernels
-    import valar_spark.textops as _t
-    saved = _t.PAIR_BLOB_MIN_EXPLODED
-    _t.PAIR_BLOB_MIN_EXPLODED = 0
-    try:
-        got_blob = sorted(map(tuple, X.winnow_match_pairs(
-            df, min_shared=1, max_df=50).collect()))
-    finally:
-        _t.PAIR_BLOB_MIN_EXPLODED = saved
-    assert got_blob == sorted(map(tuple, X.winnow_match_pairs(
-        df, min_shared=1, max_df=50).collect()))
-    # ids ≥ 2^31 force the lexsort fallback in _pair_count_batches (the
-    # packed int64-key fast path requires unsigned-31-bit ids); the
-    # fallback must produce the identical pair counts
-    big = 1 << 32
-    df_big = spark.createDataFrame(
-        [(i + big, t) for i, t in rows], "doc_id bigint, text string")
-    got_big = sorted((r["id_a"] - big, r["id_b"] - big, r["shared_fp"])
-                     for r in X.winnow_match_pairs(
-                         df_big, min_shared=1, max_df=50).collect())
-    want_big = sorted(map(tuple, X.winnow_match_pairs(
-        df, min_shared=1, max_df=50).collect()))
-    assert got_big == want_big
+    # a caller-supplied grouping handed over as an UNPERSISTED projection
+    # with a shuffle behind it and several partitions (the shape that
+    # __spark_entry__._winnow_pairs_cached passes in): every plan branch
+    # that reads the group codes must see the same numbering, or
+    # inter-group pairs vanish
+    spread = df.repartition(3, "doc_id")
+    groups = (
+        spread.filter(SF.col("doc_id").isin(1, 11)).select(
+            SF.col("doc_id").alias("_rep"),
+            SF.sequence("doc_id", SF.col("doc_id")
+                        + SF.when(SF.col("doc_id") == 1, 2).otherwise(1))
+            .alias("_members"))
+        .unionByName(spread.filter(~SF.col("doc_id").isin(1, 2, 3, 11, 12))
+                     .select(SF.col("doc_id").alias("_rep"),
+                             SF.array("doc_id").alias("_members"))))
+    got = sorted(map(tuple, X.winnow_match_pairs(
+        df, min_shared=1, max_df=50, groups=groups).collect()))
+    assert got == sorted(map(tuple, classic(df, 1, 50).collect()))
+
+
+def test_contamination_screen_plan_has_no_python_rdd(spark):
+    # the eval set reaches the JVM as a local relation, not as a pickled
+    # Python list (an ``ExistingRDD`` scan) feeding the fingerprint UDF
+    import __spark_entry__ as e
+
+    plan = str(e._q_contamination_screen(spark, SF)._jdf.queryExecution())
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan
 
 
 def test_winnow_fingerprints_equal_per_doc_reference(spark):

@@ -2122,98 +2122,21 @@ def winnow_fingerprint_table(df: DataFrame, text_col: str = "text",
                      winnow_fingerprints(F.col(text_col), k, w).alias("_fp"))
 
 
-def _pair_count_batches(it):
-    """mapInPandas kernel for :func:`winnow_match_pairs`' integer fast
-    path: each input row is one fingerprint's (deduped) posting list;
-    emit PARTIALLY AGGREGATED ``(id_a, id_b, _c)`` co-occurrence counts
-    for the whole task in one vectorized pass. Pair generation is
-    ``np.triu_indices`` per posting list (ids sorted so id_a < id_b);
-    per-task aggregation is one sort + run-length count — no Python
-    dict, no per-pair Python. The Σ C(df, 2) candidate volume still
-    exists, but it lives as numpy int64 arrays at memory speed instead
-    of JVM hash-aggregate state (measured 3× faster at 180M candidate
-    rows, and the spill/GC pressure of a 10⁸-entry hash map is gone).
-
-    When every id fits in an unsigned 31-bit slot (any real doc-id
-    domain), each pair packs into ONE int64 key ``id_a << 32 | id_b``
-    whose natural order equals the (id_a, id_b) lexicographic order, so
-    the per-task aggregation is a single-key ``np.sort`` instead of a
-    two-key ``np.lexsort`` — measured 7× faster on the same 58M-event
-    task (3.3s vs 24.3s) and half the peak array footprint. Negative or
-    ≥ 2³¹ ids fall back to the lexsort path; both paths emit identical
-    aggregated rows."""
-    import numpy as np
-    import pandas as pd
-
-    arrs: list = []
-    lo = hi = None  # running id range over the (sorted) posting lists
-    for pdf in it:
-        for ids in pdf["_ids"]:
-            a = np.sort(np.asarray(ids, dtype=np.int64))
-            if a.size < 2:
-                continue
-            arrs.append(a)
-            if lo is None:
-                lo, hi = a[0], a[-1]
-            else:
-                lo = min(lo, a[0])
-                hi = max(hi, a[-1])
-    if not arrs:
-        return
-    if lo >= 0 and hi < (1 << 31):
-        ks = []
-        for a in arrs:
-            ia, ib = np.triu_indices(a.size, k=1)
-            ks.append((a[ia] << 32) | a[ib])
-        kk = np.concatenate(ks)
-        del ks
-        kk.sort()
-        new = np.empty(kk.size, dtype=bool)
-        new[0] = True
-        np.not_equal(kk[1:], kk[:-1], out=new[1:])
-        idx = np.flatnonzero(new)
-        cnt = np.diff(np.append(idx, kk.size))
-        ku = kk[idx]
-        yield pd.DataFrame({"id_a": ku >> 32, "id_b": ku & 0xFFFFFFFF,
-                            "_c": cnt})
-        return
-    ka = []
-    kb = []
-    for a in arrs:
-        ia, ib = np.triu_indices(a.size, k=1)
-        ka.append(a[ia])
-        kb.append(a[ib])
-    A = np.concatenate(ka)
-    B = np.concatenate(kb)
-    order = np.lexsort((B, A))
-    A = A[order]
-    B = B[order]
-    new = np.empty(A.size, dtype=bool)
-    new[0] = True
-    np.not_equal(A[1:], A[:-1], out=new[1:])
-    new[1:] |= B[1:] != B[:-1]
-    idx = np.flatnonzero(new)
-    cnt = np.diff(np.append(idx, A.size))
-    yield pd.DataFrame({"id_a": A[idx], "id_b": B[idx], "_c": cnt})
-
-
-#: surviving-exploded-print row count above which winnow_match_pairs
-#: switches from the classic partial-agg + JVM-combine pair count to the
-#: blob-packed exchange (see the regime comment in winnow_match_pairs).
-#: Module-level so tests can patch it to force the blob regime on small
-#: fixtures.
-PAIR_BLOB_MIN_EXPLODED = 1_000_000
-
-
 def _pair_emit_blob_batches(n_buckets: int, key_bits: int = 64):
     """Kernel factory — packed-key pair GENERATION with blob-packed
-    output: each input row is one fingerprint's posting list of
-    31-bit-safe ids; every co-occurrence event becomes one packed int64
-    ``id_a << 32 | id_b`` (id_a < id_b), events are bucketed by
+    output: each input row is one fingerprint's posting list of dense
+    representative codes in ``[0, n_reps)`` (see
+    :func:`winnow_match_pairs`), not the caller's doc ids; every
+    co-occurrence event becomes one packed key ``id_a << half | id_b``
+    (id_a < id_b; ``half`` = 16 in a uint32 key, 32 in an int64 one).
+    The caller sizes ``key_bits`` from ``n_reps``, so the id-domain
+    ``ValueError`` below only fires for ``n_reps ≥ 2³¹``, which no key
+    width here can pack; it stays as a guard against emitting overflowed
+    keys. Events are bucketed by
     ``pk % n_buckets`` (a pure function of the pair, so every occurrence
     of a pair lands in the same bucket no matter which task emits it),
     and each (input-batch, bucket) slice ships as ONE ``binary`` cell of
-    raw little-endian int64 bytes.  Two measured facts drive this shape:
+    raw little-endian key bytes.  Two measured facts drive this shape:
     per-task partial aggregation combined only 0.6% of events (a pair's
     shared prints land in different tasks — the per-task sort bought
     nothing), and a row-per-event exchange of the same 177M events cost
@@ -2312,6 +2235,22 @@ def _pair_merge_blob_batches(min_shared: int, key_bits: int = 64):
     return merge
 
 
+def _partition_rows(batches):
+    """mapInArrow kernel: one ``(part, rows)`` row per non-empty
+    partition of a frame projected to its ``_mid`` column, where ``part``
+    is the partition index ``monotonically_increasing_id`` packed into
+    ``_mid``'s upper bits."""
+    import pyarrow as pa
+
+    part, rows = None, 0
+    for b in batches:
+        if b.num_rows:
+            part = b.column(0)[0].as_py() >> 33
+            rows += b.num_rows
+    if rows:
+        yield pa.RecordBatch.from_pydict({"part": [part], "rows": [rows]})
+
+
 def winnow_match_pairs(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", k: int = 8, w: int = 4,
                        min_shared: int = 2, max_df: int | None = 50,
@@ -2337,22 +2276,28 @@ def winnow_match_pairs(df: DataFrame, text_col: str = "text",
     cap over-prunes as the corpus — and every template print's df — grows
     10×). ``max_df=None`` disables the cap.
 
-    Execution shape (round-6 rewrite; output unchanged, pinned by the
-    differential test): (1) docs with IDENTICAL fingerprint sets are
-    grouped first (md5 of the sorted print array — a narrow map) and only
-    one representative per group enters pair counting: exact re-uploads
-    are the dominant duplicate class, and k identical docs shrink their
-    every print's posting df by k−1, cutting the Σ C(df, 2) candidate
-    volume quadratically (411M → 180M on the 75k-doc bench corpus);
-    (2) for integral ids, per-print pair generation + per-task partial
-    aggregation run vectorized in numpy (:func:`_pair_count_batches`) —
-    one lexsort instead of a spilling JVM hash aggregate — and only the
-    partially-combined counts cross the final shuffle; (3) the small
-    ≥ ``min_shared`` result is expanded back through group members
-    (inter-group pairs inherit the representative count — identical
-    print sets ⇒ identical intersections; intra-group pairs share their
-    whole surviving set). Non-integral id columns keep the classic
-    exploded self-join path.
+    Execution shape (output unchanged, pinned by the differential test
+    against the classic exploded self-join): (1) docs with IDENTICAL
+    fingerprint sets are grouped first and only one representative per
+    group enters pair counting: exact re-uploads are the dominant
+    duplicate class, and k identical docs shrink their every print's
+    posting df by k−1, cutting the Σ C(df, 2) candidate volume
+    quadratically (411M → 180M on the 75k-doc bench corpus); (2) each
+    group gets a dense code in ``[0, n_reps)`` and the codes, not the
+    ids, fill the posting lists — so integral, ≥ 2³¹ and string ids all
+    take one path, and the packed pair key is uint32 when
+    ``n_reps ≤ 2¹⁶`` and int64 otherwise; (3) pair generation packs every
+    co-occurrence event into per-bucket binary blobs
+    (:func:`_pair_emit_blob_batches`), ``repartition(bucket)`` co-locates
+    each pair's events, and one numpy sort/run-length count per bucket
+    applies ``min_shared`` before anything is emitted
+    (:func:`_pair_merge_blob_batches`) — no JVM hash aggregate over
+    Σ C(df, 2) keys (measured 50s of spill at 1.3M exploded rows);
+    (4) the small ≥ ``min_shared`` result is expanded back through group
+    members by code (inter-group pairs inherit the representative count
+    — identical print sets ⇒ identical intersections; intra-group pairs
+    share their whole surviving set) and emitted as the original ids,
+    cast to the input id type.
 
     ``prints`` supplies a precomputed ``(_id, _fp)`` fingerprint table;
     ``exploded`` additionally supplies the exploded ``(_id, h)`` rows
@@ -2363,15 +2308,18 @@ def winnow_match_pairs(df: DataFrame, text_col: str = "text",
     consumers that need the same df-cap result (e.g. a planted-recall
     gate over the same corpus) share one aggregate instead of re-running
     the corpus-wide groupBy; ``groups`` supplies a precomputed
-    identical-print-set grouping ``(_rep, _members, _m)`` — ANY partition
-    of the corpus into groups of identical-set docs is exact (grouping is
-    a performance device: k identical docs shrink posting dfs k-fold),
-    so a caller that constructed its duplicates (e.g. re-keyed copies)
-    can hand the grouping over as a projection instead of paying the
-    md5/array aggregate — which, fed from an un-persisted prints union,
-    re-evaluated the whole fingerprint pass a second time."""
+    identical-print-set grouping ``(_rep, _members)`` (a representative
+    id and the non-empty id list it stands for) — ANY partition of the
+    corpus into
+    groups of identical-set docs is exact (grouping is a performance
+    device: k identical docs shrink posting dfs k-fold), so a caller that
+    constructed its duplicates (e.g. re-keyed copies) can hand the
+    grouping over as an unpersisted projection instead of paying the
+    array aggregate — which, fed from an un-persisted prints union,
+    re-evaluated the whole fingerprint pass a second time. The group
+    codes are numbered once, on a persisted copy, so every plan branch
+    sees the same numbering."""
     from pyspark import StorageLevel
-    from pyspark.sql import types as T
 
     if max_df_frac is not None:
         max_df = max(2, int(max_df_frac * df.count()))
@@ -2393,24 +2341,6 @@ def winnow_match_pairs(df: DataFrame, text_col: str = "text",
         rare = (rare_agg.filter(F.col("_df") <= max_df).select("h")
                 if max_df is not None else rare_agg.select("h"))
     id_type = t.schema["_id"].dataType
-    integral = isinstance(id_type, (T.LongType, T.IntegerType,
-                                    T.ShortType, T.ByteType))
-    if not integral:
-        ex = ex_cached.join(rare, "h", "left_semi")
-        out = (
-            ex.alias("a").join(ex.alias("b"),
-                               (F.col("a.h") == F.col("b.h"))
-                               & (F.col("a._id") < F.col("b._id")))
-            .groupBy(F.col("a._id").alias("id_a"),
-                     F.col("b._id").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("shared_fp"))
-            .filter(F.col("shared_fp") >= min_shared)
-        )
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()
-        if own_ex:
-            ex_cached.unpersist()
-        return out
     # ---- identical-print-set groups (the _fp array itself is the group
     # key: the fingerprint kernel emits np.unique output, so equal sets ⇒
     # byte-identical arrays — grouping on the array directly drops the
@@ -2418,106 +2348,94 @@ def winnow_match_pairs(df: DataFrame, text_col: str = "text",
     # CPU; the array-keyed exchange is corpus-row-sized and narrow.
     # Empty-set docs form a group that can never pair — no exploded rows,
     # surviving count 0 ----
-    own_groups = groups is None
-    if own_groups:
+    if groups is None:
         groups = (t.select(F.col("_fp").alias("_gk"), "_id")
                   .groupBy("_gk")
                   .agg(F.min("_id").alias("_rep"),
-                       F.collect_list("_id").alias("_members"),
-                       F.count(F.lit(1)).alias("_m"))
-                  .select("_rep", "_members", "_m")
-                  .persist(StorageLevel.MEMORY_AND_DISK))
-    reps = groups.select(F.col("_rep").alias("_id"))
+                       F.collect_list("_id").alias("_members")))
+    # ---- dense group codes in [0, n_reps): monotonically_increasing_id
+    # packs (partition << 33 | row), so one narrow job counting each
+    # partition's rows gives every partition its base. Persisted: an
+    # unpersisted numbering is re-planned per consuming branch (AQE may
+    # coalesce the groups shuffle differently in each), which hands one
+    # group different codes and loses its pairs. Sorted, so a recomputed
+    # partition numbers its rows the same way ----
+    numbered = (groups.sortWithinPartitions("_rep")
+                .withColumn("_mid", F.monotonically_increasing_id())
+                .persist(StorageLevel.MEMORY_AND_DISK))
+    base = {}
+    n_reps = 0
+    for part, rows in sorted(numbered.select("_mid").mapInArrow(
+            _partition_rows, "part long, rows long").collect()):
+        base[part] = (part << 33) - n_reps
+        n_reps += rows
+    shift = F.array(*[F.lit(base.get(p, 0))
+                      for p in range(max(base, default=0) + 1)])
+    coded = numbered.select(
+        "_rep", "_members",
+        (F.col("_mid") - F.element_at(
+            shift, (F.shiftright("_mid", 33) + 1).cast("int")))
+        .alias("_code"))
     # feeds two branches (posting lists + surviving-set counts): persist,
     # or the df-cap semi-join and rare aggregate run once per branch
-    exr_rep = (ex_cached.join(rare, "h", "left_semi")
-               .join(F.broadcast(reps), "_id", "left_semi")
-               .persist(StorageLevel.MEMORY_AND_DISK))
-    # ---- representative pair counts ----
-    posting = exr_rep.groupBy("h").agg(F.collect_list("_id").alias("_ids"))
-    # regime switch on surviving-print volume (the persisted exr_rep is
-    # already materialized by this count): below ~10⁶ exploded rows the
-    # candidate volume is JVM-hash-aggregate-friendly and the blob
-    # exchange's extra stages dominate (interleaved sf0.1 A/B: classic
-    # 9.3-10.8s vs blob 12.3-13.0s for the whole query); above, the
-    # aggregate's key state grows with Σ C(df,2) and spills (measured
-    # 50s at 1.3M exploded rows / 178M events) while the blob exchange
-    # stays event-linear. A data-volume branch, not a core-count one —
-    # the same broadcast-vs-shuffle style of regime choice.
-    n_exr = exr_rep.count()
-    bounds = (exr_rep.agg(F.min("_id"), F.max("_id")).first()
-              if n_exr >= PAIR_BLOB_MIN_EXPLODED else (None, None))
-    if (bounds[0] is not None and bounds[0] >= 0
-            and bounds[1] < (1 << 31)):
-        # packed-key blob path: generation emits every co-occurrence
-        # event as ONE packed key in per-bucket binary blobs (see
-        # _pair_emit_blob_batches — a row-per-event exchange measured
-        # ~35s of pure row overhead for 3.5s of generation), the
-        # exchange moves a few thousand blob rows, and a numpy
-        # sort/run-length count applies min_shared BEFORE emitting.
-        # Key width follows the id domain: 16-bit-safe ids pack into
-        # uint32 (HALF the event bytes through the shuffle and the
-        # kernels; runtime-guarded, larger corpora take the int64 path).
-        # Bucket count = 4× shuffle partitions so hash collisions on the
-        # bucket column still balance the merge tasks (balls-in-bins).
-        key_bits = 32 if bounds[1] < (1 << 16) else 64
-        try:
-            shuffle_parts = int(df.sparkSession.conf.get(
-                "spark.sql.shuffle.partitions"))
-        except ValueError:  # e.g. "auto" on managed platforms
-            shuffle_parts = df.sparkSession.sparkContext.defaultParallelism
-        n_buckets = 4 * max(1, shuffle_parts)
-        pk = posting.mapInPandas(
-            _pair_emit_blob_batches(n_buckets, key_bits),
-            "bucket long, blob binary")
-        rep_pairs = (pk.repartition(F.col("bucket"))
-                     .mapInPandas(
-                         _pair_merge_blob_batches(min_shared, key_bits),
-                         "id_a long, id_b long, shared_fp long"))
-    else:
-        part = posting.mapInPandas(_pair_count_batches,
-                                   "id_a long, id_b long, _c long")
-        rep_pairs = (part.groupBy("id_a", "id_b")
-                     .agg(F.sum("_c").alias("shared_fp"))
-                     .filter(F.col("shared_fp") >= min_shared))
-    # ---- expand through group members ----
-    inter = (
-        rep_pairs
-        .join(groups.select(F.col("_rep").alias("id_a"),
-                            F.col("_members").alias("_ma")), "id_a")
-        .join(groups.select(F.col("_rep").alias("id_b"),
-                            F.col("_members").alias("_mb")), "id_b")
-        .select(F.explode("_ma").alias("_x"), "_mb", "shared_fp")
-        .select("_x", F.explode("_mb").alias("_y"), "shared_fp")
-        .select(F.least("_x", "_y").alias("id_a"),
-                F.greatest("_x", "_y").alias("id_b"), "shared_fp")
-    )
-    # intra-group pairs share their representative's entire surviving
-    # print set (identical sets ⇒ intersection = the set itself)
-    surv = exr_rep.groupBy("_id").agg(F.count(F.lit(1)).alias("_s"))
-    intra = (
-        groups.filter(F.col("_m") >= 2)
-        .join(surv, groups["_rep"] == surv["_id"])
-        .filter(F.col("_s") >= max(min_shared, 1))
-        .select("_members", F.col("_s").alias("shared_fp"))
-        .select(F.explode(F.expr(
-            "flatten(transform(sequence(0, size(_members) - 2), i -> "
-            "transform(slice(_members, i + 2, size(_members) - i - 1), "
-            "y -> struct(least(_members[i], y) AS id_a, "
-            "greatest(_members[i], y) AS id_b))))")).alias("_p"),
-            "shared_fp")
-        .select(F.col("_p.id_a").alias("id_a"),
-                F.col("_p.id_b").alias("id_b"), "shared_fp")
-    )
-    out = (inter.unionByName(intra)
-           .select(F.col("id_a").cast(id_type).alias("id_a"),
-                   F.col("id_b").cast(id_type).alias("id_b"),
-                   "shared_fp"))
+    exr = (ex_cached.join(rare, "h", "left_semi")
+           .join(F.broadcast(coded.select(F.col("_rep").alias("_id"),
+                                          "_code")), "_id")
+           .select("h", "_code")
+           .persist(StorageLevel.MEMORY_AND_DISK))
+    # ---- representative pair counts: packed-key blob exchange (see
+    # _pair_emit_blob_batches — a row-per-event exchange measured ~35s
+    # of pure row overhead for 3.5s of generation). Key width follows
+    # the group count: ≤ 2¹⁶ codes pack into uint32, HALF the event
+    # bytes through the shuffle and the kernels. Bucket count = 4×
+    # shuffle partitions so hash collisions on the bucket column still
+    # balance the merge tasks (balls-in-bins) ----
+    key_bits = 32 if n_reps <= 1 << 16 else 64
+    try:
+        shuffle_parts = int(df.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions"))
+    except ValueError:  # e.g. "auto" on managed platforms
+        shuffle_parts = df.sparkSession.sparkContext.defaultParallelism
+    n_buckets = 4 * max(1, shuffle_parts)
+    rep_pairs = (exr.groupBy("h").agg(F.collect_list("_code").alias("_ids"))
+                 .mapInPandas(_pair_emit_blob_batches(n_buckets, key_bits),
+                              "bucket long, blob binary")
+                 .repartition(F.col("bucket"))
+                 .mapInPandas(_pair_merge_blob_batches(min_shared, key_bits),
+                              "id_a long, id_b long, shared_fp long"))
+    # ---- expand through group members. Intra-group pairs share their
+    # representative's entire surviving print set (identical sets ⇒
+    # intersection = the set itself), so each such group enters as a
+    # self-pair (code, code) carrying that count, and only x < y member
+    # pairs of it are kept ----
+    surv = exr.groupBy("_code").agg(F.count(F.lit(1)).alias("shared_fp"))
+    pairs = rep_pairs.unionByName(
+        surv.filter(F.col("shared_fp") >= min_shared)
+        .select(F.col("_code").alias("id_a"), F.col("_code").alias("id_b"),
+                "shared_fp"))
+    # explode_outer, though no group is empty: an inner explode lets the
+    # optimizer infer a `size(_members) > 0` filter on the member side,
+    # which it takes for a selective predicate and answers with a
+    # runtime bloom-filter subquery (two extra jobs)
+    members = coded.select("_code", "_members")
+    ga, gb = members.alias("ga"), members.alias("gb")
+    out = (
+        pairs
+        .join(ga, F.col("id_a") == F.col("ga._code"))
+        .join(gb, F.col("id_b") == F.col("gb._code"))
+        .select("id_a", "id_b", F.explode_outer("ga._members").alias("_x"),
+                F.col("gb._members").alias("_mb"), "shared_fp")
+        .select("id_a", "id_b", "_x", F.explode_outer("_mb").alias("_y"),
+                "shared_fp")
+        .filter((F.col("id_a") != F.col("id_b"))
+                | (F.col("_x") < F.col("_y")))
+        .select(F.least("_x", "_y").cast(id_type).alias("id_a"),
+                F.greatest("_x", "_y").cast(id_type).alias("id_b"),
+                "shared_fp"))
     out = out.persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
-    if own_groups:
-        groups.unpersist()
-    exr_rep.unpersist()
+    numbered.unpersist()
+    exr.unpersist()
     if own_ex:
         ex_cached.unpersist()
     return out
