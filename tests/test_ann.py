@@ -1,5 +1,5 @@
 """Similarity search: brute-force cosine top-k (exact baseline) and IVF
-(KMeans-partitioned approximate path) over the embeddings table."""
+(k-means-partitioned approximate path) over the embeddings table."""
 
 from __future__ import annotations
 
@@ -56,29 +56,6 @@ def test_brute_force_matches_numpy(spark, emb):
         assert abs(r["cosine_sim"] - s) < 1e-4
 
 
-def test_ivf_recall(spark, emb):
-    queries = emb.filter(F.col("vec_id") < 20)
-    exact = ann.brute_force_topk(emb, queries, k=10)
-    assigned, centroids = ann.ivf_build(emb, nlist=8)
-    n_cells = assigned.select("_cell").distinct().count()
-    assert n_cells == 8
-    # full probe == exhaustive search → exact recall (the algebraic
-    # correctness check: cell pruning is the ONLY approximation)
-    full = ann.ivf_topk(assigned, centroids, queries, k=10, nprobe=8)
-    assert ann.recall_at_k(full, exact, k=10) == 1.0
-    # partial probe: recall at least the probed fraction (embeddings here
-    # are near-random, the worst case for IVF — real clustered data does
-    # far better); must also beat a 2-cell probe
-    r4 = ann.recall_at_k(
-        ann.ivf_topk(assigned, centroids, queries, k=10, nprobe=4),
-        exact, k=10)
-    r1 = ann.recall_at_k(
-        ann.ivf_topk(assigned, centroids, queries, k=10, nprobe=1),
-        exact, k=10)
-    assert r4 >= 0.5, f"IVF recall@10 too low: {r4}"
-    assert r4 > r1, f"recall must grow with nprobe: {r1} -> {r4}"
-
-
 def test_ivf_probe_all_equals_brute_force_rows(spark, emb):
     """nprobe = nlist must reproduce the brute-force result ROW-FOR-ROW
     (ids, rounded sims, ranks) — the gate query
@@ -87,7 +64,7 @@ def test_ivf_probe_all_equals_brute_force_rows(spark, emb):
     queries = emb.filter(F.col("vec_id") < 5)
     exact = ann.brute_force_topk(emb, queries, k=5).orderBy(
         "query_id", "rank").collect()
-    assigned, centroids = ann.ivf_build(emb, nlist=8)
+    assigned, centroids = ann.ivf_build_sampled(emb, nlist=8)
     full = ann.ivf_topk(assigned, centroids, queries, k=5,
                         nprobe=8).orderBy("query_id", "rank").collect()
     assert [tuple(r) for r in full] == [tuple(r) for r in exact]
@@ -96,11 +73,12 @@ def test_ivf_probe_all_equals_brute_force_rows(spark, emb):
 def test_ivf_recall_nlist64_sf01(spark):
     """Centroids-as-table path at production-ish quantizer size: nlist=64
     over the sf0.1 embeddings (2000 x 64-dim). Plan stays a broadcast join
-    + window — no 64-entry literal expression (ann.py ivf_build/ivf_topk)."""
+    + window — no 64-entry literal expression (ann.py
+    ivf_build_sampled/ivf_topk)."""
     emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet").cache()
     queries = emb.filter(F.col("vec_id") < 10)
     exact = ann.brute_force_topk(emb, queries, k=10)
-    assigned, centroids = ann.ivf_build(emb, nlist=64)
+    assigned, centroids = ann.ivf_build_sampled(emb, nlist=64)
     assert centroids.count() == 64  # centroid TABLE, not literals
     full = ann.ivf_topk(assigned, centroids, queries, k=10, nprobe=64)
     assert ann.recall_at_k(full, exact, k=10) == 1.0
@@ -150,20 +128,30 @@ def test_embedding_near_dup_recall(spark, emb):
 
 
 def test_ivf_sampled_matches_contract(spark, emb):
-    """Sampled-numpy quantizer: same (assigned, centroids) contract as the
-    MLlib fit; full probe is exhaustive (recall 1.0), cells cover the
-    corpus, assignment is deterministic across calls."""
+    """Sampled-numpy quantizer: (assigned, centroids) contract; every
+    cell is populated, full probe is exhaustive (recall 1.0), partial
+    recall grows with nprobe, cells cover the corpus, assignment is
+    deterministic across calls."""
     queries = emb.filter(F.col("vec_id") < 20)
     exact = ann.brute_force_topk(emb, queries, k=10)
     assigned, centroids = ann.ivf_build_sampled(emb, nlist=8, max_iter=8)
     assert centroids.count() == 8
+    assert assigned.select("_cell").distinct().count() == 8
     assert assigned.count() == emb.count()
+    # full probe == exhaustive search → exact recall (the algebraic
+    # correctness check: cell pruning is the ONLY approximation)
     full = ann.ivf_topk(assigned, centroids, queries, k=10, nprobe=8)
     assert ann.recall_at_k(full, exact, k=10) == 1.0
+    # partial probe: embeddings here are near-random, the worst case for
+    # IVF — real clustered data does far better
     r4 = ann.recall_at_k(
         ann.ivf_topk(assigned, centroids, queries, k=10, nprobe=4),
         exact, k=10)
+    r1 = ann.recall_at_k(
+        ann.ivf_topk(assigned, centroids, queries, k=10, nprobe=1),
+        exact, k=10)
     assert r4 >= 0.5, f"sampled-IVF recall@10 too low: {r4}"
+    assert r4 > r1, f"recall must grow with nprobe: {r1} -> {r4}"
     # determinism: the hash-sample + seeded init give identical cells
     a2, _ = ann.ivf_build_sampled(emb, nlist=8, max_iter=8)
     diff = (assigned.select("vec_id", "_cell").exceptAll(

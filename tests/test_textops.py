@@ -323,12 +323,17 @@ def test_winnow_match_pairs_equals_classic_join(spark):
     assert got == sorted(map(tuple, classic(df, 1, 50).collect()))
 
 
-def test_contamination_screen_plan_has_no_python_rdd(spark):
-    # the eval set reaches the JVM as a local relation, not as a pickled
-    # Python list (an ``ExistingRDD`` scan) feeding the fingerprint UDF
+@pytest.mark.parametrize("query", [
+    "contamination_screen_documents",
+    "ann_ivf_topk_embeddings",
+    "ann_ivf_probe_all_embeddings",
+])
+def test_contamination_screen_plan_has_no_python_rdd(spark, query):
+    # driver-side tables (the eval set, the IVF centroids) reach the JVM as
+    # local relations, not as pickled Python lists (an ``ExistingRDD`` scan)
     import __spark_entry__ as e
 
-    plan = str(e._q_contamination_screen(spark, SF)._jdf.queryExecution())
+    plan = str(e.queries()[query](spark, SF)._jdf.queryExecution())
     assert "ExistingRDD" not in plan and "LogicalRDD" not in plan
 
 

@@ -5,11 +5,11 @@ against the corpus, dot products via ``zip_with``/``aggregate`` (JVM-side,
 no UDF), per-query top-k via window. Cost O(|queries|·|corpus|) FLOPs as a
 narrow map — the right baseline and the recall oracle.
 
-Scale path: IVF — KMeans coarse quantizer (pyspark.ml) assigns every vector
-to a centroid partition; a query probes only its ``nprobe`` nearest
-centroids, turning the scan into a partition-pruned key join (1/nlist ×
-nprobe of the corpus touched). Recall measured against brute force in
-tests."""
+Scale path: IVF — a k-means coarse quantizer, trained driver-side on a
+bounded hash-sample, assigns every vector to a centroid partition; a query
+probes only its ``nprobe`` nearest centroids, turning the scan into a
+partition-pruned key join (1/nlist × nprobe of the corpus touched).
+Recall measured against brute force in tests."""
 
 from __future__ import annotations
 
@@ -156,50 +156,6 @@ def brute_force_topk(
     )
 
 
-def ivf_build(
-    corpus: DataFrame,
-    nlist: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 20,
-    train_fraction: float | None = None,
-):
-    """Train the coarse quantizer and assign every corpus vector to its
-    nearest centroid. Returns ``(assigned_df, centroids)`` where
-    ``assigned_df`` adds a ``_cell`` column — in production this is the
-    table's partition/bucket key, so a probe is partition pruning.
-
-    ``train_fraction`` fits KMeans on a deterministic sample — the standard
-    IVF recipe (FAISS trains coarse quantizers on ~nlist×39..256 samples,
-    never the corpus): at 10^9+ vectors a full-corpus fit is pure waste,
-    and cell assignment still covers every vector via ``transform``."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = corpus.select(id_col, vec_col,
-                         array_to_vector(F.col(vec_col).cast("array<double>"))
-                         .alias("_features"))
-    train = vecs
-    if train_fraction:
-        sampled = vecs.sample(fraction=train_fraction, seed=seed)
-        # Bernoulli sampling has no size floor — fall back to the full
-        # corpus when the sample can't seed nlist centroids
-        if sampled.limit(nlist).count() >= nlist:
-            train = sampled
-    km = KMeans(k=nlist, seed=seed, featuresCol="_features",
-                predictionCol="_cell", maxIter=max_iter)
-    model = km.fit(train)
-    assigned = model.transform(vecs).drop("_features")
-    # centroids as a TABLE (cell, cvec) rather than literal expressions —
-    # a broadcast-join side that scales to nlist of 10^3-10^4, where an
-    # inlined array-of-structs literal would blow up plan size/compile time
-    centroids = corpus.sparkSession.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cell int, cvec array<double>")
-    return assigned, centroids
-
-
 def ivf_build_sampled(
     corpus: DataFrame,
     nlist: int = 16,
@@ -212,8 +168,12 @@ def ivf_build_sampled(
     """FAISS-style coarse quantizer: train k-means driver-side (numpy
     Lloyd's) on a bounded DETERMINISTIC hash-sample of the corpus, then
     assign every vector in one Arrow pass (argmin L2 against the broadcast
-    centroid matrix via the matmul expansion). Same ``(assigned,
-    centroids)`` contract as :func:`ivf_build`.
+    centroid matrix via the matmul expansion). Returns ``(assigned,
+    centroids)``: ``assigned`` adds a ``_cell`` column — in production the
+    table's partition key (:func:`ivf_write_partitioned`), so a probe is
+    partition pruning — and ``centroids`` is the ``(cell, cvec)`` table,
+    a local relation that scales to nlist of 10^3-10^4 where an inlined
+    literal expression would blow up plan size.
 
     Why this beats a distributed fit: coarse-quantizer quality saturates at
     ~39-256 training points per centroid (the FAISS guideline), so training
@@ -221,6 +181,8 @@ def ivf_build_sampled(
     pass scales with data, and that's a narrow map. The sample is selected
     by ``xxhash64(id)`` so it is reproducible and needs no sort."""
     import numpy as np
+
+    from .runner import _local_frame
 
     # deterministic bounded sample: keep ids whose hash falls under the cap
     n = corpus.count()
@@ -274,9 +236,9 @@ def ivf_build_sampled(
         return pd.Series(d2.argmin(1).astype("int32"))
 
     assigned = corpus.withColumn("_cell", cell_of(F.col(vec_col)))
-    centroids = corpus.sparkSession.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(cmat)],
-        "cell int, cvec array<double>")
+    centroids = _local_frame(corpus.sparkSession,
+                             list(enumerate(cmat.tolist())),
+                             "cell int, cvec array<double>")
     return assigned, centroids
 
 
@@ -326,17 +288,18 @@ def _rank_candidates(cand: DataFrame, k: int, id_col: str,
 def ivf_write_partitioned(assigned: DataFrame, path: str,
                           mode: str = "overwrite") -> None:
     """Persist an IVF-assigned corpus PARTITIONED BY ``_cell`` — the
-    production layout ``ivf_build``'s docstring promises: each cell is its
-    own partition directory, so a probe that filters on ``_cell`` is
-    Catalyst **partition pruning** (the scan lists only nprobe directories
-    out of nlist; `PartitionFilters` in the plan, zero I/O elsewhere)."""
+    production layout :func:`ivf_build_sampled`'s docstring promises: each
+    cell is its own partition directory, so a probe that filters on
+    ``_cell`` is Catalyst **partition pruning** (the scan lists only nprobe
+    directories out of nlist; `PartitionFilters` in the plan, zero I/O
+    elsewhere)."""
     assigned.write.mode(mode).partitionBy("_cell").parquet(path)
 
 
 def ivf_topk_pruned(
     spark,
     path: str,
-    centroids: DataFrame | list[list[float]],
+    centroids: DataFrame,
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 4,
@@ -352,19 +315,17 @@ def ivf_topk_pruned(
     partition directories. Same result contract as :func:`ivf_topk`; the
     difference is demonstrable I/O pruning (see
     tests/test_ann.py::test_ivf_cell_partition_pruning)."""
+    from .runner import _local_frame
+
     qid = query_id_col or id_col
-    if isinstance(centroids, list):
-        centroids = spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "cell int, cvec array<double>")
     # the probe set is query-bounded (≤ |queries|·nprobe rows), so it can
-    # be collected once and re-emitted as a literal frame — no cache to
+    # be collected once and re-emitted as a local relation — no cache to
     # manage, and the cell list becomes a STATIC partition filter
     qc_df = _query_cells(centroids, queries, nprobe, vec_col,
                          query_id_col=qid)
     rows = qc_df.collect()
     cells = sorted({r["_cell"] for r in rows})
-    q_cells = spark.createDataFrame(rows, qc_df.schema)
+    q_cells = _local_frame(spark, rows, qc_df.schema.toDDL())
     assigned = spark.read.parquet(path).where(F.col("_cell").isin(cells))
     cand = assigned.join(F.broadcast(q_cells), "_cell").filter(
         F.col("query_id") != F.col(id_col))
@@ -373,7 +334,7 @@ def ivf_topk_pruned(
 
 def ivf_topk(
     assigned: DataFrame,
-    centroids: DataFrame | list[list[float]],
+    centroids: DataFrame,
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 4,
@@ -385,13 +346,8 @@ def ivf_topk(
     (ranked via a broadcast join against the ``(cell, cvec)`` centroid
     table), then exact cosine within those cells only. The corpus join is a
     key-equality join on ``_cell`` — the candidate set is
-    |corpus|·nprobe/nlist per query instead of |corpus|. ``centroids`` may
-    also be a plain list (converted to a table)."""
+    |corpus|·nprobe/nlist per query instead of |corpus|."""
     qid = query_id_col or id_col
-    if isinstance(centroids, list):
-        centroids = assigned.sparkSession.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "cell int, cvec array<double>")
     q_cells = _query_cells(centroids, queries, nprobe, vec_col,
                            query_id_col=qid)
 

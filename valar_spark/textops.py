@@ -2235,22 +2235,6 @@ def _pair_merge_blob_batches(min_shared: int, key_bits: int = 64):
     return merge
 
 
-def _partition_rows(batches):
-    """mapInArrow kernel: one ``(part, rows)`` row per non-empty
-    partition of a frame projected to its ``_mid`` column, where ``part``
-    is the partition index ``monotonically_increasing_id`` packed into
-    ``_mid``'s upper bits."""
-    import pyarrow as pa
-
-    part, rows = None, 0
-    for b in batches:
-        if b.num_rows:
-            part = b.column(0)[0].as_py() >> 33
-            rows += b.num_rows
-    if rows:
-        yield pa.RecordBatch.from_pydict({"part": [part], "rows": [rows]})
-
-
 def winnow_match_pairs(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", k: int = 8, w: int = 4,
                        min_shared: int = 2, max_df: int | None = 50,
@@ -2317,8 +2301,10 @@ def winnow_match_pairs(df: DataFrame, text_col: str = "text",
     grouping over as an unpersisted projection instead of paying the
     array aggregate — which, fed from an un-persisted prints union,
     re-evaluated the whole fingerprint pass a second time. The group
-    codes are numbered once, on a persisted copy, so every plan branch
-    sees the same numbering."""
+    codes are numbered once, at the driver, so every plan branch sees
+    the same numbering."""
+    import numpy as np
+    import pyarrow as pa
     from pyspark import StorageLevel
 
     if max_df_frac is not None:
@@ -2353,29 +2339,17 @@ def winnow_match_pairs(df: DataFrame, text_col: str = "text",
                   .groupBy("_gk")
                   .agg(F.min("_id").alias("_rep"),
                        F.collect_list("_id").alias("_members")))
-    # ---- dense group codes in [0, n_reps): monotonically_increasing_id
-    # packs (partition << 33 | row), so one narrow job counting each
-    # partition's rows gives every partition its base. Persisted: an
-    # unpersisted numbering is re-planned per consuming branch (AQE may
-    # coalesce the groups shuffle differently in each), which hands one
-    # group different codes and loses its pairs. Sorted, so a recomputed
-    # partition numbers its rows the same way ----
-    numbered = (groups.sortWithinPartitions("_rep")
-                .withColumn("_mid", F.monotonically_increasing_id())
-                .persist(StorageLevel.MEMORY_AND_DISK))
-    base = {}
-    n_reps = 0
-    for part, rows in sorted(numbered.select("_mid").mapInArrow(
-            _partition_rows, "part long, rows long").collect()):
-        base[part] = (part << 33) - n_reps
-        n_reps += rows
-    shift = F.array(*[F.lit(base.get(p, 0))
-                      for p in range(max(base, default=0) + 1)])
-    coded = numbered.select(
-        "_rep", "_members",
-        (F.col("_mid") - F.element_at(
-            shift, (F.shiftright("_mid", 33) + 1).cast("int")))
-        .alias("_code"))
+    # ---- dense group codes in [0, n_reps), numbered at the driver: the
+    # group table (already the build side of the member lookup below)
+    # is collected once as Arrow and re-emitted as one driver-built
+    # frame, so every plan branch reads the same codes. The two member
+    # lookups then plan the same broadcast, which AQE reuses; over a
+    # cached frame they would not (a table-cache query stage has no
+    # canonical form, so two scans of one cache never match) ----
+    tbl = groups.select("_rep", "_members").toArrow()
+    n_reps = tbl.num_rows
+    coded = df.sparkSession.createDataFrame(tbl.append_column(
+        "_code", pa.array(np.arange(n_reps, dtype=np.int64))))
     # feeds two branches (posting lists + surviving-set counts): persist,
     # or the df-cap semi-join and rare aggregate run once per branch
     exr = (ex_cached.join(rare, "h", "left_semi")
@@ -2434,7 +2408,6 @@ def winnow_match_pairs(df: DataFrame, text_col: str = "text",
                 "shared_fp"))
     out = out.persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
-    numbered.unpersist()
     exr.unpersist()
     if own_ex:
         ex_cached.unpersist()
