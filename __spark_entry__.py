@@ -74,6 +74,18 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
+def _spread(df: DataFrame) -> DataFrame:
+    """``df`` repartitioned to the core count. The driver's parquet
+    tables are ONE row group each, so their scan is one task, and every
+    per-row stage before the first exchange (JSON parse, regex battery,
+    tokenize, fingerprint UDF) would otherwise run on a single core
+    (measured 4.2s single-task for salient_terms' tokenize alone at 50k
+    docs, 8.8s vs ~1s for the winnow prints). A production table's
+    row-group layout yields thousands of splits and needs none of this."""
+    spark = df.sparkSession
+    return df.repartition(spark.sparkContext.defaultParallelism)
+
+
 @_per_session
 def _transcripts(spark: SparkSession, total_turns: int = 60_000) -> DataFrame:
     """Synthetic transcript table, persisted per session. The persist is a
@@ -1105,11 +1117,8 @@ def _q_json_contract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(eid % 17 == 0, F.lit('{"j": 1}'))
         .when(eid % 19 == 0, F.lit('{"k": "abc"}'))
         .otherwise(F.col("props")).alias("props"))
-    # single-row-group input: spread the per-row JSON parse (see
-    # _mutated_events note)
-    mut = mut.repartition(spark.sparkContext.defaultParallelism)
     out = D.json_contract_violations(
-        mut, "props",
+        _spread(mut), "props",
         [D.JsonField("$.k", required=True, numeric=True, lo=0, hi=80)],
         keys=("user_id", "event_id"))
     return (out.select(
@@ -1140,10 +1149,7 @@ def _q_json_key_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(eid % 23 == 0, F.lit('[1, 2]'))
         .when(eid % 29 == 0, F.lit('{}'))
         .otherwise(F.col("props")).alias("props"))
-    # single-row-group input: spread the per-row JSON parse (see
-    # _mutated_events note)
-    mut = mut.repartition(spark.sparkContext.defaultParallelism)
-    return D.json_key_profile(mut, "props").orderBy("key")
+    return D.json_key_profile(_spread(mut), "props").orderBy("key")
 
 
 def _near_dup_planted_transcripts(spark: SparkSession) -> DataFrame:
@@ -1242,7 +1248,7 @@ def _mutated_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     eid = F.col("event_id")
     v1 = F.when(eid % 499 == 0, F.col("value") * 25.0).otherwise(F.col("value"))
     v2 = F.when(eid % 887 == 0, -v1).otherwise(v1)
-    return ev.select(
+    return _spread(ev.select(
         F.when(eid % 613 == 0, F.lit(None).cast("long"))
         .otherwise(F.col("user_id")).alias("user_id"),
         "event_id",
@@ -1251,12 +1257,7 @@ def _mutated_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(eid % 751 == 0, F.lit("not_a_number"))
         .otherwise(eid.cast("string")).alias("value_str"),
         F.when(eid % 911 == 0, F.lit(" ")).otherwise(F.col("props"))
-        .alias("props"),
-        # the driver's events.parquet is ONE row group (1 scan task at
-        # sf1.0) — spread the per-row rule evaluation over all cores;
-        # a production table's row-group layout yields thousands of
-        # splits and would skip this (same note as _docs_with_copies)
-    ).repartition(spark.sparkContext.defaultParallelism)
+        .alias("props")))
 
 
 def events_ruleset():
@@ -1325,10 +1326,7 @@ def _q_json_valid_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("event_id") % 17 == 0, F.lit("{'k': 1}"))
         .when(F.col("event_id") % 19 == 0, F.lit(" "))
         .otherwise(F.col("props")))
-    # single-row-group input: spread the per-row JSON parse (see
-    # _mutated_events note)
-    mut = (ev.select("user_id", "event_id", props.alias("props"))
-           .repartition(spark.sparkContext.defaultParallelism))
+    mut = _spread(ev.select("user_id", "event_id", props.alias("props")))
     run = validate(mut, {"props": R.json_parseable()},
                    keys=("user_id", "event_id"),
                    partition_cols=("user_id",))
@@ -1601,15 +1599,7 @@ def _q_heavy_hitters_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents, repartitioned to the core count: the local parquet is
-    ONE row group ⇒ one scan task, so tokenize/explode/regex-heavy
-    per-row stages otherwise run on a single core before their first
-    exchange (measured 4.2s single-task for salient_terms' tokenize
-    alone at 50k docs). A production table's row-group layout yields
-    thousands of splits and skips this — same note as
-    :func:`_docs_with_copies` / ``_mutated_events``."""
-    return _read(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism)
+    return _spread(_read(spark, sf_dir, "documents"))
 
 
 def _docs_with_copies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1620,11 +1610,7 @@ def _docs_with_copies(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies = docs.filter(F.col("doc_id") % 2 == 0).select(
         (F.col("doc_id") + 100_000).alias("doc_id"),
         "text", "lang", "source", "n_chars")
-    # the local parquet is 1-2 splits — spread the (per-doc heavy) shingle /
-    # signature maps over all cores; a real 100-TB scan already has
-    # thousands of splits and would skip this
-    return docs.unionByName(copies).repartition(
-        spark.sparkContext.defaultParallelism)
+    return _spread(docs.unionByName(copies))
 
 
 _DOCS_WITH_COPIES_SQL = """
@@ -2120,8 +2106,6 @@ def _winnow_raw_prints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from valar_spark import textops as X
 
-    # spread scan: the fingerprint UDF ran on ONE core without it
-    # (measured 8.8s single-task vs ~1s — see _docs_spread)
     return (
         X.winnow_fingerprint_table(_docs_spread(spark, sf_dir))
         .persist(StorageLevel.MEMORY_AND_DISK))
@@ -2161,23 +2145,20 @@ def _winnow_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5(F.col("doc_id").cast("string")),
             F.lit("zz")))
         .otherwise(F.col("text")).alias("text"))
-    u = suffixed.unionByName(
+    u = _spread(suffixed.unionByName(
         suffixed.filter(even).select(
-            (F.col("doc_id") + 100_000).alias("doc_id"), "text")
-    ).repartition(spark.sparkContext.defaultParallelism)
+            (F.col("doc_id") + 100_000).alias("doc_id"), "text")))
     # fingerprint ONLY the modified subset (the suffixed even docs —
     # their +100000 copies have identical text, so their prints are
     # the same rows re-keyed); untouched docs reuse the shared raw
     # print pass. One UDF pass over n/2 docs instead of 3n/2.
-    # repartition: the one-row-group scan would otherwise feed the
-    # fingerprint UDF from a single task (see _winnow_raw_prints).
     # Persisted: BOTH union branches below (the suffixed docs and
     # their re-keyed +100000 copies) reference this subtree, and a
     # pandas-UDF projection is not exchange-reusable — without the
     # persist the UDF ran once per branch (review finding, r6).
     fp_even = (X.winnow_fingerprint_table(
-        suffixed.join(docs.filter(even).select("doc_id"), "doc_id")
-        .repartition(spark.sparkContext.defaultParallelism))
+        _spread(suffixed.join(docs.filter(even).select("doc_id"),
+                              "doc_id")))
         .persist(StorageLevel.MEMORY_AND_DISK))
     prints = (
         _winnow_raw_prints(spark, sf_dir)
@@ -2287,10 +2268,9 @@ def _q_contamination_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         _winnow_raw_prints(spark, sf_dir)
         .join(docs.filter(~contaminated)
               .select(F.col("doc_id").alias("_id")), "_id")
-        .unionByName(X.winnow_fingerprint_table(
+        .unionByName(X.winnow_fingerprint_table(_spread(
             planted.join(docs.filter(contaminated).select("doc_id"),
-                         "doc_id")
-            .repartition(spark.sparkContext.defaultParallelism))))
+                         "doc_id")))))
     return (X.winnow_contamination(planted, ev, min_shared=2,
                                    max_df_frac=0.05, prints=prints)
             .select("doc_id", "eval_id").orderBy("doc_id"))
@@ -2978,11 +2958,8 @@ def _q_semantic_types_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from valar_spark import dataset_rules as D
 
     ev = _read(spark, sf_dir, "events")
-    # single-row-group input: spread the per-row regex battery (see
-    # _mutated_events note)
     return D.semantic_type_profile(
-        ev.select(_semantic_plant(ev).alias("v"))
-        .repartition(spark.sparkContext.defaultParallelism), "v")
+        _spread(ev.select(_semantic_plant(ev).alias("v"))), "v")
 
 
 def _q_semantic_types_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

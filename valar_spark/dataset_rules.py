@@ -19,7 +19,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 from . import errors as E
 
@@ -3543,6 +3543,63 @@ def conversation_cadence_profile(
                 & (F.col("n_distinct_gaps") == 1)))
 
 
+def _turn_pairs(df: DataFrame, conv_col: str, idx_col: str, role_col: str,
+                text_col: str, *extra: Column) -> tuple[DataFrame, WindowSpec]:
+    """Pairing layer of the "previous turn → this turn" analyzers, the
+    batch twin of :func:`valar_spark.streaming._turn_pairs`: projects
+    ``(conv, _i, _role, _text, *extra)`` and returns it with THE
+    content-closed window over it, ``PARTITION BY conv ORDER BY _i NULLS
+    FIRST, _role NULLS FIRST, md5(coalesce(_text, ''))``. Closing the sort
+    with content makes index-tied duplicates interchangeable, so every
+    lag/lead/running frame over it is partition-layout-independent and
+    replayable by the DuckDB oracles. Cost: one conv-keyed shuffle."""
+    base = df.select(
+        F.col(conv_col).alias("conv"),
+        F.col(idx_col).cast("long").alias("_i"),
+        F.col(role_col).alias("_role"),
+        F.col(text_col).alias("_text"),
+        *extra)
+    return base, Window.partitionBy("conv").orderBy(
+        F.col("_i").asc_nulls_first(),
+        F.col("_role").asc_nulls_first(),
+        F.md5(F.coalesce(F.col("_text"), F.lit(""))).asc())
+
+
+# digit-run numeric token: shared verbatim with the DuckDB oracle; inside
+# the Java-regex ∩ RE2 intersection (non-capturing group only)
+NUMBER_TOKEN_PATTERN = r"\d+(?:\.\d+)?"
+
+
+# Pair classifications over a :func:`_turn_pairs` frame and the previous
+# turn's role/text: the echo, grounding and parrot analyzers filter on
+# them and the quarantine rollup sums them, so they never disagree.
+def _reply_to(role: str, prev_role: Column, prev_text: Column) -> Column:
+    """A non-null assistant turn right after a non-null ``role`` turn."""
+    return ((F.col("_role") == "assistant") & (prev_role == role)
+            & prev_text.isNotNull() & F.col("_text").isNotNull())
+
+
+def _tool_echo(prev_role: Column, prev_text: Column,
+               min_chars: int) -> Column:
+    """A reply pasting a tool output of >= ``min_chars`` verbatim."""
+    return (_reply_to("tool", prev_role, prev_text)
+            & (F.length(prev_text) >= int(min_chars))
+            & F.col("_text").contains(prev_text))
+
+
+def _numbers(text: Column | str) -> Column:
+    """Distinct :data:`NUMBER_TOKEN_PATTERN` tokens of ``text``."""
+    return F.array_distinct(
+        F.regexp_extract_all(text, F.lit(NUMBER_TOKEN_PATTERN), 0))
+
+
+def _ungrounded(prev_role: Column, prev_text: Column) -> Column:
+    """A reply to a tool turn stating numbers the tool output lacks."""
+    nums = _numbers("_text")
+    return (_reply_to("tool", prev_role, prev_text) & (F.size(nums) > 0)
+            & (F.size(F.array_except(nums, _numbers(prev_text))) > 0))
+
+
 def tool_output_echo(
     df: DataFrame,
     conv_col: str = "conv_id",
@@ -3557,41 +3614,25 @@ def tool_output_echo(
     near-zero training signal at full token cost — across a corpus this
     is one of the larger silent token sinks, and no per-turn rule can see
     it because each turn is individually well-formed. ``min_chars``
-    guards against trivial echoes ("ok", a number) that are legitimate.
+    (>= 1) guards against trivial echoes ("ok", a number) that are
+    legitimate.
 
-    Ordering discipline: turns pair via ONE lag over
-    ``(idx_col ASC NULLS FIRST, role, md5(text))`` — the sort closes with
-    content so index-tied duplicate rows pair deterministically (same
-    contract as :func:`degenerate_runs`). Cost at 10^12 turns: one window
-    shuffle on the conversation key, then a pure filter projection —
-    ``contains`` is a JVM substring scan bounded by the two turns'
-    lengths, no explode, no Python.
+    ONE lag over :func:`_turn_pairs`, then a pure filter — ``contains``
+    is a JVM substring scan bounded by the two turns' lengths, no
+    explode, no Python.
 
     Columns: ``(conv, turn_idx, echo_chars, turn_chars,
     echo_share_pct)`` — one row per echoing assistant turn."""
-    base = df.select(
-        F.col(conv_col).alias("conv"),
-        F.col(idx_col).cast("long").alias("_i"),
-        F.col(role_col).alias("_role"),
-        F.col(text_col).alias("_text"))
-    w = Window.partitionBy("conv").orderBy(
-        F.col("_i").asc_nulls_first(),
-        F.col("_role").asc_nulls_first(),
-        F.md5(F.coalesce(F.col("_text"), F.lit(""))).asc())
-    prev_role = F.lag("_role").over(w)
-    prev_text = F.lag("_text").over(w)
+    if min_chars < 1:
+        raise ValueError(f"min_chars must be >= 1, got {min_chars}")
+    base, w = _turn_pairs(df, conv_col, idx_col, role_col, text_col)
     out = (base
-           .withColumn("_prev_role", prev_role)
-           .withColumn("_prev_text", prev_text)
-           .filter((F.col("_role") == "assistant")
-                   & (F.col("_prev_role") == "tool")
-                   & F.col("_prev_text").isNotNull()
-                   & (F.length("_prev_text") >= int(min_chars))
-                   & F.col("_text").isNotNull()
-                   & F.col("_text").contains(F.col("_prev_text"))))
+           .withColumn("_prev_role", F.lag("_role").over(w))
+           .withColumn("_prev_text", F.lag("_text").over(w))
+           .filter(_tool_echo(F.col("_prev_role"), F.col("_prev_text"),
+                              min_chars)))
     return out.select(
-        "conv",
-        F.col("_i").alias("turn_idx"),
+        "conv", F.col("_i").alias("turn_idx"),
         F.length("_prev_text").cast("long").alias("echo_chars"),
         F.length("_text").cast("long").alias("turn_chars"),
         F.round(F.length("_prev_text") * 100.0 / F.length("_text"), 4)
@@ -3804,11 +3845,6 @@ def prompt_injection_census(
             .orderBy("pattern", "role"))
 
 
-# digit-run numeric token: shared verbatim with the DuckDB oracle; inside
-# the Java-regex ∩ RE2 intersection (non-capturing group only)
-NUMBER_TOKEN_PATTERN = r"\d+(?:\.\d+)?"
-
-
 def tool_grounding_check(
     df: DataFrame,
     conv_col: str = "conv_id",
@@ -3834,43 +3870,24 @@ def tool_grounding_check(
     auditability for recall, and a validation engine reports what is
     checkable; route hits to review, don't auto-drop.
 
-    Ordering discipline and cost: the SAME single lag over the
-    content-closed sort ``(idx ASC NULLS FIRST, role, md5(text))`` as
-    :func:`tool_output_echo` — one window shuffle on the conversation
-    key, then regexp extraction + array set ops all JVM-side
-    (``regexp_extract_all`` / ``array_except`` — no explode, no Python);
-    only assistant-after-tool turns that contain at least one number
-    reach the output.
+    Cost: the echo's lag over :func:`_turn_pairs`, then regexp
+    extraction + array set ops all JVM-side (``regexp_extract_all`` /
+    ``array_except`` — no explode, no Python); only replies to a tool
+    turn that contain at least one number reach the output.
 
     Columns: ``(conv, turn_idx, n_numbers, n_ungrounded, ungrounded_csv,
     grounded_share_pct)`` — one row per checked assistant turn;
     ``ungrounded_csv`` is the sorted comma-joined offending tokens
     (a string, so hash oracles compare it byte-exact)."""
-    base = df.select(
-        F.col(conv_col).alias("conv"),
-        F.col(idx_col).cast("long").alias("_i"),
-        F.col(role_col).alias("_role"),
-        F.col(text_col).alias("_text"))
-    w = Window.partitionBy("conv").orderBy(
-        F.col("_i").asc_nulls_first(),
-        F.col("_role").asc_nulls_first(),
-        F.md5(F.coalesce(F.col("_text"), F.lit(""))).asc())
-    pat = F.lit(NUMBER_TOKEN_PATTERN)
+    base, w = _turn_pairs(df, conv_col, idx_col, role_col, text_col)
     checked = (base
                .withColumn("_prev_role", F.lag("_role").over(w))
                .withColumn("_prev_text", F.lag("_text").over(w))
-               .filter((F.col("_role") == "assistant")
-                       & (F.col("_prev_role") == "tool")
-                       & F.col("_prev_text").isNotNull()
-                       & F.col("_text").isNotNull())
-               .select(
-                   "conv", F.col("_i").alias("turn_idx"),
-                   F.array_distinct(
-                       F.regexp_extract_all("_text", pat, 0))
-                   .alias("_nums"),
-                   F.array_distinct(
-                       F.regexp_extract_all("_prev_text", pat, 0))
-                   .alias("_tnums"))
+               .filter(_reply_to("tool", F.col("_prev_role"),
+                                 F.col("_prev_text")))
+               .select("conv", F.col("_i").alias("turn_idx"),
+                       _numbers("_text").alias("_nums"),
+                       _numbers("_prev_text").alias("_tnums"))
                .filter(F.size("_nums") > 0))
     ung = F.array_sort(F.array_except("_nums", "_tnums"))
     return checked.select(
@@ -4069,54 +4086,36 @@ def conversation_quarantine(
     injection-bait turns (user/tool surfaces,
     :data:`INJECTION_PATTERNS`), special-token-leaking assistant turns
     (:data:`SPECIAL_TOKEN_PATTERNS`), verbatim tool echoes, and
-    ungrounded-number turns (both via the shared content-closed lag
-    contract of :func:`tool_output_echo` /
-    :func:`tool_grounding_check`), plus ``quarantine`` = any SECURITY
-    hit (injection or token leak — the two classes that must never
-    train) and a canonical-order ``reasons`` csv covering all four.
-    Shares every classification Column with the censuses / rules /
+    ungrounded-number turns (the :func:`_tool_echo` /
+    :func:`_ungrounded` predicates :func:`tool_output_echo` /
+    :func:`tool_grounding_check` filter on), plus ``quarantine`` = any
+    SECURITY hit (injection or token leak — the two classes that must
+    never train) and a canonical-order ``reasons`` csv covering all
+    four. Shares every classification Column with the censuses / rules /
     streams, so this rollup can never disagree with them.
 
     Cost: ONE shuffle-free per-turn classification projection, ONE
-    conv-keyed window (the same lag the engine already pays for
-    echo/grounding), ONE conv aggregate. Output is one row per
+    conv-keyed window (the :func:`_turn_pairs` lag the engine already
+    pays for echo/grounding), ONE conv aggregate. Output is one row per
     conversation.
 
     Columns: ``(conv, n_turns, n_injection_turns, n_special_turns,
     n_echo_turns, n_ungrounded_turns, quarantine, reasons)``."""
-    base = df.select(
-        F.col(conv_col).alias("conv"),
-        F.col(idx_col).cast("long").alias("_i"),
-        F.col(role_col).alias("_role"),
-        F.col(text_col).alias("_text"),
+    base, w = _turn_pairs(
+        df, conv_col, idx_col, role_col, text_col,
         ((F.size(injection_label_array(text_col)) > 0)
          & F.col(role_col).isin("user", "tool")
          & F.col(text_col).isNotNull()).cast("int").alias("_inj"),
         ((F.size(special_token_label_array(text_col)) > 0)
          & F.col(role_col).eqNullSafe("assistant")
          & F.col(text_col).isNotNull()).cast("int").alias("_tok"))
-    w = Window.partitionBy("conv").orderBy(
-        F.col("_i").asc_nulls_first(),
-        F.col("_role").asc_nulls_first(),
-        F.md5(F.coalesce(F.col("_text"), F.lit(""))).asc())
     prev_role = F.lag("_role").over(w)
     prev_text = F.lag("_text").over(w)
-    after_tool = ((F.col("_role") == "assistant")
-                  & (prev_role == "tool")
-                  & prev_text.isNotNull()
-                  & F.col("_text").isNotNull())
-    echo = (after_tool
-            & (F.length(prev_text) >= int(echo_min_chars))
-            & F.col("_text").contains(prev_text))
-    pat = F.lit(NUMBER_TOKEN_PATTERN)
-    nums = F.array_distinct(F.regexp_extract_all("_text", pat, 0))
-    tnums = F.array_distinct(F.regexp_extract_all(prev_text, pat, 0))
-    ungrounded = (after_tool & (F.size(nums) > 0)
-                  & (F.size(F.array_except(nums, tnums)) > 0))
     turns = base.select(
         "conv", "_inj", "_tok",
-        echo.cast("int").alias("_echo"),
-        ungrounded.cast("int").alias("_ung"))
+        _tool_echo(prev_role, prev_text, echo_min_chars)
+        .cast("int").alias("_echo"),
+        _ungrounded(prev_role, prev_text).cast("int").alias("_ung"))
     agg = turns.groupBy("conv").agg(
         F.count(F.lit(1)).cast("long").alias("n_turns"),
         F.sum("_inj").cast("long").alias("n_injection_turns"),
@@ -4292,38 +4291,29 @@ def parrot_census(
     verbatim substring; parroting is sloppier, so the test is TOKEN-SET
     containment: the share of the user's distinct lowercased tokens
     that reappear in the reply). A reply containing ≥
-    ``min_containment`` of a ≥ ``min_user_tokens``-token prompt adds
-    near-zero training signal at full token cost, and RLHF-style
+    ``min_containment`` of a ≥ ``min_user_tokens``-token prompt (>= 1)
+    adds near-zero training signal at full token cost, and RLHF-style
     length-reward artifacts make this failure mode common enough to
     budget for at corpus scale.
 
-    Ordering discipline: the SAME lag contract as ``tool_output_echo``
-    (idx ASC NULLS FIRST, role, md5(text)) so index-tied duplicates
-    pair identically across every operator and engine. Cost at 10^12
-    turns: the conv-keyed window shuffle the engine already pays, then
-    a JVM ``array_intersect`` projection bounded by the two turns'
-    lengths — no explode, no Python, and the output carries HITS only.
+    Cost at 10^12 turns: the :func:`_turn_pairs` window shuffle the
+    engine already pays, then a JVM ``array_intersect`` projection
+    bounded by the two turns' lengths — no explode, no Python, and the
+    output carries HITS only.
 
     Columns: ``(conv, turn_idx, user_tokens, overlap_tokens,
     containment_pct)`` — one row per parroting assistant turn."""
     from valar_spark.textops import tokens
 
-    base = df.select(
-        F.col(conv_col).alias("conv"),
-        F.col(idx_col).cast("long").alias("_i"),
-        F.col(role_col).alias("_role"),
-        F.col(text_col).alias("_text"))
-    w = Window.partitionBy("conv").orderBy(
-        F.col("_i").asc_nulls_first(),
-        F.col("_role").asc_nulls_first(),
-        F.md5(F.coalesce(F.col("_text"), F.lit(""))).asc())
+    if min_user_tokens < 1:
+        raise ValueError(
+            f"min_user_tokens must be >= 1, got {min_user_tokens}")
+    base, w = _turn_pairs(df, conv_col, idx_col, role_col, text_col)
     cand = (base
             .withColumn("_prev_role", F.lag("_role").over(w))
             .withColumn("_prev_text", F.lag("_text").over(w))
-            .filter((F.col("_role") == "assistant")
-                    & (F.col("_prev_role") == "user")
-                    & F.col("_prev_text").isNotNull()
-                    & F.col("_text").isNotNull()))
+            .filter(_reply_to("user", F.col("_prev_role"),
+                              F.col("_prev_text"))))
     u = F.array_distinct(tokens(F.lower(F.col("_prev_text"))))
     a = F.array_distinct(tokens(F.lower(F.col("_text"))))
     cand = (cand.withColumn("_ut", F.size(u).cast("long"))
@@ -4375,11 +4365,10 @@ def correction_pairs(
     keeps BOTH turn indices, not just a count.
 
     Matching contract is the refusal census's (``lower(trim())`` with
-    U+2019 normalized, first matching pattern wins); pairing is the
-    shared lag contract of :func:`tool_output_echo` — one conv-keyed
-    window the engine already pays, then a pure filter projection, hits
-    only. A correction after a tool/user turn does NOT pair (no reply to
-    attribute).
+    U+2019 normalized, first matching pattern wins); pairing is one lag
+    over :func:`_turn_pairs` — the conv-keyed window the engine already
+    pays, then a pure filter projection, hits only. A correction after
+    a tool/user turn does NOT pair (no reply to attribute).
 
     Columns: ``(conv, asst_turn_idx, user_turn_idx, pattern)`` — one row
     per corrected reply."""
@@ -4387,16 +4376,8 @@ def correction_pairs(
     label: Column = F.lit(None).cast("string")
     for key, pat in reversed(CORRECTION_PATTERNS):
         label = F.when(t.rlike(pat), F.lit(key)).otherwise(label)
-    base = df.select(
-        F.col(conv_col).alias("conv"),
-        F.col(idx_col).cast("long").alias("_i"),
-        F.col(role_col).alias("_role"),
-        F.col(text_col).alias("_text"),
-        label.alias("pattern"))
-    w = Window.partitionBy("conv").orderBy(
-        F.col("_i").asc_nulls_first(),
-        F.col("_role").asc_nulls_first(),
-        F.md5(F.coalesce(F.col("_text"), F.lit(""))).asc())
+    base, w = _turn_pairs(df, conv_col, idx_col, role_col, text_col,
+                          label.alias("pattern"))
     out = (base
            .withColumn("_prev_role", F.lag("_role").over(w))
            .withColumn("_prev_i", F.lag("_i").over(w))
@@ -4497,37 +4478,24 @@ def false_callbacks(
 
     Each battery class names the role whose earlier content it
     references; the callback is FALSE exactly when the running count of
-    PRIOR turns of that role (under the engine's shared content-closed
-    total order) is zero. Cost: the one conv-keyed window the engine
-    already pays (two running counts over a rows frame), a shuffle-free
-    battery projection, hits-only output.
+    PRIOR turns of that role (over :func:`_turn_pairs`' order) is zero.
+    Cost: the one conv-keyed window the engine already pays (two running
+    counts over a rows frame), a shuffle-free battery projection,
+    hits-only output.
 
     Columns: ``(conv, turn_idx, pattern, prior_assistant_turns,
     prior_user_turns)`` — one row per false callback."""
     t = F.lower(F.translate(F.col(text_col), "’", "'"))
-    base = df.select(
-        F.col(conv_col).alias("conv"),
-        F.col(idx_col).cast("long").alias("_i"),
-        F.col(role_col).alias("_role"),
-        F.col(text_col).alias("_text"),
-        *[t.rlike(pat).alias(f"_m_{key}")
-          for key, _, pat in CALLBACK_PATTERNS])
-    w = (Window.partitionBy("conv")
-         .orderBy(F.col("_i").asc_nulls_first(),
-                  F.col("_role").asc_nulls_first(),
-                  F.md5(F.coalesce(F.col("_text"), F.lit(""))).asc())
-         .rowsBetween(Window.unboundedPreceding, -1))
-    base = (base
-            .withColumn("_prev_a", F.coalesce(
-                F.sum((F.col("_role") == "assistant").cast("long"))
-                .over(w), F.lit(0)))
-            .withColumn("_prev_u", F.coalesce(
-                F.sum((F.col("_role") == "user").cast("long"))
-                .over(w), F.lit(0))))
+    base, w = _turn_pairs(df, conv_col, idx_col, role_col, text_col,
+                          *[t.rlike(pat).alias(f"_m_{key}")
+                            for key, _, pat in CALLBACK_PATTERNS])
+    w = w.rowsBetween(Window.unboundedPreceding, -1)
+    for name, role in (("_prev_a", "assistant"), ("_prev_u", "user")):
+        base = base.withColumn(name, F.coalesce(
+            F.sum((F.col("_role") == role).cast("long")).over(w), F.lit(0)))
     label: Column = F.lit(None).cast("string")
     for key, ref_role, _ in reversed(CALLBACK_PATTERNS):
-        prior = F.col("_prev_a") if ref_role == "assistant" \
-            else F.col("_prev_u")
+        prior = F.col("_prev_a" if ref_role == "assistant" else "_prev_u")
         label = F.when(F.col(f"_m_{key}") & (prior == 0),
                        F.lit(key)).otherwise(label)
     return (base
@@ -4558,7 +4526,7 @@ def response_variants(
     distribution merits an audit. ``min_user_tokens`` floors out
     degenerate buckets ("ok", "yes") whose variants mean nothing.
 
-    Pairing uses the shared total order's ``lead``; bucketing keys on
+    Pairing is one ``lead`` over :func:`_turn_pairs`; bucketing keys on
     ``md5(user text)`` so the shuffle carries a fixed-width key, never
     the text. Cost: one conv-keyed window + one md5-keyed aggregate
     (map-side combined; output bounded by distinct repeated prompts).
@@ -4568,15 +4536,7 @@ def response_variants(
     replies."""
     from valar_spark.textops import token_count
 
-    base = df.select(
-        F.col(conv_col).alias("conv"),
-        F.col(idx_col).cast("long").alias("_i"),
-        F.col(role_col).alias("_role"),
-        F.col(text_col).alias("_text"))
-    w = Window.partitionBy("conv").orderBy(
-        F.col("_i").asc_nulls_first(),
-        F.col("_role").asc_nulls_first(),
-        F.md5(F.coalesce(F.col("_text"), F.lit(""))).asc())
+    base, w = _turn_pairs(df, conv_col, idx_col, role_col, text_col)
     pairs = (base
              .withColumn("_next_role", F.lead("_role").over(w))
              .withColumn("_next_text", F.lead("_text").over(w))

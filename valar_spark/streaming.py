@@ -9,7 +9,8 @@ reuses the exact Column expressions, so parity holds by construction.
 The per-conversation stateful monitors (integrity, transition grammar,
 tool echo/grounding, parrot, corrections, verbosity) all run on one
 state-store walker, ``_per_conversation``; the four "previous turn → this
-turn" checks share its pairing layer ``_turn_pairs``.
+turn" checks share its pairing layer ``_turn_pairs``, the twin of the
+batch analyzers' ``valar_spark.dataset_rules._turn_pairs``.
 """
 
 from __future__ import annotations
@@ -465,11 +466,12 @@ _PAIR_STATE_DDL = {"text": "last_role string, last_text string",
 def _turn_pairs(stream_df, conv_col, order_col, role_col, text_col,
                 pair, carry, check, out_ddl, close_after):
     """Shared walker of the "previous turn → this turn" monitors: sorts
-    each conversation's micro-batch by the batch operators'
-    content-closed order ``(order_col NULLS FIRST, role, md5(text))``,
-    normalises null role/idx/text to None, and calls ``check(conv, idx,
-    text, prev)`` for every turn of role ``pair[1]`` whose predecessor
-    had role ``pair[0]`` — ``prev`` being that predecessor's text
+    each conversation's micro-batch by the content-closed order
+    ``(order_col NULLS FIRST, role, md5(text))`` of its batch twin
+    :func:`valar_spark.dataset_rules._turn_pairs`, normalises null
+    role/idx/text to None, and calls ``check(conv, idx, text, prev)``
+    for every turn of role ``pair[1]`` whose predecessor had role
+    ``pair[0]`` — ``prev`` being that predecessor's text
     (``carry="text"``) or idx (``carry="idx"``), carried across
     micro-batches in the state store. ``check`` returns one output row
     ``(conv, <out_ddl columns>)`` or None."""
@@ -810,6 +812,9 @@ def stream_tool_echo(
 
     Output rows mirror the batch operator: ``(conv, turn_idx,
     echo_chars, turn_chars, echo_share_pct)``."""
+    if min_chars < 1:
+        raise ValueError(f"min_chars must be >= 1, got {min_chars}")
+
     def check(conv, idx, text, last_text):
         if (last_text is not None and len(last_text) >= min_chars
                 and text is not None and last_text in text):
@@ -958,6 +963,9 @@ def stream_parrot(
     user_tokens, overlap_tokens, containment_pct)``."""
     import re
 
+    if min_user_tokens < 1:
+        raise ValueError(
+            f"min_user_tokens must be >= 1, got {min_user_tokens}")
     ws = re.compile(r"\S+", re.ASCII)
 
     def check(conv, idx, text, last_text):
