@@ -1,5 +1,6 @@
 """The fixed cost a session's queries pay: the warm Python worker daemon,
-its zipimport guard, the daemon selection, and schema-once entry reads."""
+its zipimport guard, the daemon selection, the driver JVM's JIT options,
+and schema-once entry reads."""
 
 from __future__ import annotations
 
@@ -17,7 +18,13 @@ from pyspark.sql import functions as F
 
 from tests.test_ann import SF
 from valar_spark import worker_daemon
-from valar_spark.session import SPARK_DAEMON, WARM_DAEMON, python_daemon_module
+from valar_spark.session import (SPARK_DAEMON, WARM_DAEMON,
+                                 driver_jit_options, python_daemon_module)
+
+#: the tier-4 (C2) thresholds of a local driver: 10x the JDK 17 defaults
+LOCAL_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000")
 
 #: Spark jobs of each curation query, run in the curate_docs pass order
 #: on a cold session cache at sf0.001
@@ -116,6 +123,30 @@ def test_python_daemon_module_selection(master, cwd, pythonpath, site_dirs,
 def test_py_files_zip_keeps_the_spark_daemon():
     assert python_daemon_module("local[4]", "/w/deps.zip", "/w", "/w",
                                 ["/py/site-packages"]) == SPARK_DAEMON
+
+
+@pytest.mark.parametrize("master,options", [
+    ("local[4]", LOCAL_JIT_OPTIONS),
+    ("local[*]", LOCAL_JIT_OPTIONS),
+    ("local", LOCAL_JIT_OPTIONS),
+    # cluster masters, whose driver options belong to the deployment
+    ("spark://h:7077", None),
+    ("yarn", None),
+    ("local-cluster[2,1,1024]", None),
+])
+def test_driver_jit_options(master, options):
+    assert driver_jit_options(master) == options
+
+
+def test_local_driver_raises_the_c2_threshold(spark):
+    """The session's driver JVM runs with the raised tier-4 threshold
+    (HotSpot's default is 5000)."""
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName(
+            "com.sun.management.HotSpotDiagnosticMXBean"))
+    got = bean.getVMOption("Tier4InvocationThreshold").getValue()
+    assert got == "50000"
 
 
 def test_udfs_run_on_the_package_daemon(spark):

@@ -4,6 +4,7 @@ parroting census, PMI collocations."""
 from __future__ import annotations
 
 import math
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -457,6 +458,19 @@ def test_session_o_plan_shapes(spark):
     # ...and response_variants adds the md5-keyed aggregate and its
     # countDistinct expansion
     assert shape(D.response_variants(df)) == (0, 0, 3, 0)
+
+    def conv_sorts_and_windows(q):
+        q.collect()
+        final = q._jdf.queryExecution().executedPlan().executedPlan()
+        s = final.toString()
+        return (len(re.findall(r"Sort \[conv#", s)),
+                len(re.findall(r"(?m)^[\s:+\-*]*Window \[", s)))
+
+    # every turn-pair analyzer sorts each conversation once and takes all
+    # its window columns in one Window over that sort (response_variants'
+    # other sorts feed its string-min SortAggregates)
+    for name in _TURN_PAIR_ANALYZERS:
+        assert conv_sorts_and_windows(getattr(D, name)(df)) == (1, 1), name
     # verbosity: ONE conv aggregate (partial + final share the same
     # hashpartitioning key; Spark prints it once per Exchange)
     assert shape(D.verbosity_trend(df)) == (0, 0, 1, 0)
@@ -537,13 +551,16 @@ def test_turn_pair_analyzers_layout_independent(spark, name):
 @pytest.mark.parametrize("module, name, param", [
     ("dataset_rules", "tool_output_echo", "min_chars"),
     ("dataset_rules", "parrot_census", "min_user_tokens"),
+    ("dataset_rules", "conversation_quarantine", "echo_min_chars"),
     ("streaming", "stream_tool_echo", "min_chars"),
     ("streaming", "stream_parrot", "min_user_tokens"),
 ])
 def test_pair_thresholds_below_one_rejected(spark, module, name, param):
     """A zero threshold would pass an empty turn into the share's
     denominator (DIVIDE_BY_ZERO under ANSI, ZeroDivisionError in the
-    stream), so both paths reject it when called."""
+    stream), so both paths reject it when called; the quarantine rollup
+    rejects the echo threshold its census refuses rather than count an
+    empty reply to an empty tool turn as an echo."""
     import importlib
 
     op = getattr(importlib.import_module(f"valar_spark.{module}"), name)

@@ -3552,7 +3552,10 @@ def _turn_pairs(df: DataFrame, conv_col: str, idx_col: str, role_col: str,
     FIRST, _role NULLS FIRST, md5(coalesce(_text, ''))``. Closing the sort
     with content makes index-tied duplicates interchangeable, so every
     lag/lead/running frame over it is partition-layout-independent and
-    replayable by the DuckDB oracles. Cost: one conv-keyed shuffle."""
+    replayable by the DuckDB oracles. Cost: one conv-keyed shuffle, and
+    one sort per projection of window columns (each projection derives
+    its own md5 key, which Spark cannot match to another's), so callers
+    take all of theirs in one ``withColumns``."""
     base = df.select(
         F.col(conv_col).alias("conv"),
         F.col(idx_col).cast("long").alias("_i"),
@@ -3627,8 +3630,8 @@ def tool_output_echo(
         raise ValueError(f"min_chars must be >= 1, got {min_chars}")
     base, w = _turn_pairs(df, conv_col, idx_col, role_col, text_col)
     out = (base
-           .withColumn("_prev_role", F.lag("_role").over(w))
-           .withColumn("_prev_text", F.lag("_text").over(w))
+           .withColumns({"_prev_role": F.lag("_role").over(w),
+                         "_prev_text": F.lag("_text").over(w)})
            .filter(_tool_echo(F.col("_prev_role"), F.col("_prev_text"),
                               min_chars)))
     return out.select(
@@ -3881,8 +3884,8 @@ def tool_grounding_check(
     (a string, so hash oracles compare it byte-exact)."""
     base, w = _turn_pairs(df, conv_col, idx_col, role_col, text_col)
     checked = (base
-               .withColumn("_prev_role", F.lag("_role").over(w))
-               .withColumn("_prev_text", F.lag("_text").over(w))
+               .withColumns({"_prev_role": F.lag("_role").over(w),
+                             "_prev_text": F.lag("_text").over(w)})
                .filter(_reply_to("tool", F.col("_prev_role"),
                                  F.col("_prev_text")))
                .select("conv", F.col("_i").alias("turn_idx"),
@@ -4099,8 +4102,13 @@ def conversation_quarantine(
     pays for echo/grounding), ONE conv aggregate. Output is one row per
     conversation.
 
+    ``echo_min_chars`` (>= 1) is :func:`tool_output_echo`'s ``min_chars``.
+
     Columns: ``(conv, n_turns, n_injection_turns, n_special_turns,
     n_echo_turns, n_ungrounded_turns, quarantine, reasons)``."""
+    if echo_min_chars < 1:
+        raise ValueError(
+            f"echo_min_chars must be >= 1, got {echo_min_chars}")
     base, w = _turn_pairs(
         df, conv_col, idx_col, role_col, text_col,
         ((F.size(injection_label_array(text_col)) > 0)
@@ -4310,8 +4318,8 @@ def parrot_census(
             f"min_user_tokens must be >= 1, got {min_user_tokens}")
     base, w = _turn_pairs(df, conv_col, idx_col, role_col, text_col)
     cand = (base
-            .withColumn("_prev_role", F.lag("_role").over(w))
-            .withColumn("_prev_text", F.lag("_text").over(w))
+            .withColumns({"_prev_role": F.lag("_role").over(w),
+                          "_prev_text": F.lag("_text").over(w)})
             .filter(_reply_to("user", F.col("_prev_role"),
                               F.col("_prev_text"))))
     u = F.array_distinct(tokens(F.lower(F.col("_prev_text"))))
@@ -4379,8 +4387,8 @@ def correction_pairs(
     base, w = _turn_pairs(df, conv_col, idx_col, role_col, text_col,
                           label.alias("pattern"))
     out = (base
-           .withColumn("_prev_role", F.lag("_role").over(w))
-           .withColumn("_prev_i", F.lag("_i").over(w))
+           .withColumns({"_prev_role": F.lag("_role").over(w),
+                         "_prev_i": F.lag("_i").over(w)})
            .filter((F.col("_role") == "user")
                    & F.col("pattern").isNotNull()
                    & (F.col("_prev_role") == "assistant")))
@@ -4490,9 +4498,9 @@ def false_callbacks(
                           *[t.rlike(pat).alias(f"_m_{key}")
                             for key, _, pat in CALLBACK_PATTERNS])
     w = w.rowsBetween(Window.unboundedPreceding, -1)
-    for name, role in (("_prev_a", "assistant"), ("_prev_u", "user")):
-        base = base.withColumn(name, F.coalesce(
-            F.sum((F.col("_role") == role).cast("long")).over(w), F.lit(0)))
+    base = base.withColumns({name: F.coalesce(
+        F.sum((F.col("_role") == role).cast("long")).over(w), F.lit(0))
+        for name, role in (("_prev_a", "assistant"), ("_prev_u", "user"))})
     label: Column = F.lit(None).cast("string")
     for key, ref_role, _ in reversed(CALLBACK_PATTERNS):
         prior = F.col("_prev_a" if ref_role == "assistant" else "_prev_u")
@@ -4538,8 +4546,8 @@ def response_variants(
 
     base, w = _turn_pairs(df, conv_col, idx_col, role_col, text_col)
     pairs = (base
-             .withColumn("_next_role", F.lead("_role").over(w))
-             .withColumn("_next_text", F.lead("_text").over(w))
+             .withColumns({"_next_role": F.lead("_role").over(w),
+                           "_next_text": F.lead("_text").over(w)})
              .filter((F.col("_role") == "user")
                      & F.col("_text").isNotNull()
                      & (F.col("_next_role") == "assistant")

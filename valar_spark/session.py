@@ -16,7 +16,27 @@ importers). Python-worker CPU of one perfbench ``curate_docs`` pass (seed
 1, 4 vCPUs, utime+stime of the daemon and its workers from ``/proc``):
 8.3-9.4 s on Spark's daemon, 8.0 s with the imports alone, 4.0-4.4 s
 with the guard alone, 2.9-3.2 s with both. Elsewhere the session keeps
-Spark's ``pyspark.daemon``."""
+Spark's ``pyspark.daemon``.
+
+C2 compiles only hot code. A ``local[...]`` driver JVM starts with
+HotSpot's tier-4 (C2) compile thresholds at 10x the JDK 17 defaults
+(:func:`driver_jit_options`, through ``spark.driver.defaultJavaOptions``,
+which Spark puts ahead of ``spark.driver.extraJavaOptions``). A short job
+runs Spark's planner, Janino, ASM, Java serialization and most generated
+classes only a few thousand times, and at the default thresholds C2 spent
+more CPU compiling them than the job spent in its tasks. C1 (tiers 1-3)
+is cheap to compile and fast enough for that code, so its thresholds stay;
+per-row loops reach the raised C2 thresholds within milliseconds, so large
+runs still get C2 code. Stopping at C1 (``TieredStopAtLevel=1``) was
+rejected: it cut the 2M-turn flagship's throughput by 30-40%. One
+perfbench ``validate_batch`` pass (seed 1, 4 vCPUs, per-thread CPU from
+``/proc``, 3 passes each): C2 compiler threads 32-37 s -> 12-15 s,
+executor tasks 9.4-10.1 s -> 10.5-11.5 s, host-busy CPU 65-73 s ->
+50-56 s; JFR counted 3906 -> 1790 tier-4 compiles over the run's JVM.
+Over 10 interleaved pairs (seed 1), ``rows_per_cpu_s`` went 151.6 ->
+203.2 on ``validate_batch`` and 13.5 -> 15.5 on ``curate_docs`` (10/10
+wins each); the 2M-turn flagship's median went 332k -> 348k turns/s over
+5 pairs (3 wins, all on a throttling host)."""
 
 from __future__ import annotations
 
@@ -49,6 +69,20 @@ def python_daemon_module(master: str, package_parent: str, cwd: str,
     if os.path.normpath(package_parent) in on_path:
         return WARM_DAEMON
     return SPARK_DAEMON
+
+
+def driver_jit_options(master: str) -> str | None:
+    """The JVM options a ``local[...]`` driver starts with: HotSpot's
+    tier-4 (C2) compile thresholds at 10x the JDK 17 defaults, so only
+    code hot enough for C2 to pay off gets it (see the module docstring).
+    ``None`` for any other master, whose driver options belong to its
+    deployment."""
+    if master != "local" and not master.startswith("local["):
+        return None
+    return ("-XX:Tier4InvocationThreshold=50000"
+            " -XX:Tier4MinInvocationThreshold=6000"
+            " -XX:Tier4CompileThreshold=150000"
+            " -XX:Tier4BackEdgeThreshold=400000")
 
 
 def _worker_launch_path() -> tuple[str, str]:
@@ -113,6 +147,11 @@ def get_spark(
                                   *_worker_launch_path(), _site_dirs())
     if daemon == WARM_DAEMON:
         b = b.config("spark.python.daemon.module", daemon)
+    # defaultJavaOptions go ahead of extraJavaOptions on the driver's
+    # command line, so a caller's extra options still apply
+    jit = driver_jit_options(master)
+    if jit is not None:
+        b = b.config("spark.driver.defaultJavaOptions", jit)
     # RAM-backed shuffle dir (VALAR_SHM_SHUFFLE=1): a single shared local
     # disk is a single-box artifact — real clusters have per-node disks —
     # so local-mode scaling runs use tmpfs to remove it.
