@@ -78,13 +78,13 @@ def build_ruleset(n_leaves: int):
 
 
 def run_cell(n_leaves: int, mode: str) -> None:
-    if mode == "wscg_off":
-        os.environ["VALAR_WSCG"] = "0"
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from valar_spark import validate
     from valar_spark.session import get_spark
 
     extra = {}
+    if mode == "wscg_off":
+        extra["spark.sql.codegen.wholeStage"] = "false"
     if mode == "wscg_on":
         extra["spark.sql.codegen.hugeMethodLimit"] = "65535"
     spark = get_spark(app_name=f"wscg_{mode}_{n_leaves}",

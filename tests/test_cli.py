@@ -5,7 +5,9 @@ invocation (VERDICT r3 next-round item 8)."""
 from __future__ import annotations
 
 import json
+import re
 
+import pytest
 from pyspark.sql import SparkSession
 
 
@@ -815,3 +817,87 @@ def test_cli_quarantine(spark, tmp_path, monkeypatch, capsys):
     kept = spark.read.parquet(j["quarantine_path"]).collect()
     assert len(kept) == 1 and kept[0]["conv"] == "c1"
     assert kept[0]["reasons"] == "injection"
+
+
+@pytest.mark.parametrize("flag, inp, key, analyzer", [
+    ("--parrot", "synth:3000", "parrot_turns", "dataset_rules.parrot_census"),
+    ("--pmi", "/root/testdata/sf0.001/documents.parquet", "collocations",
+     "textops.pmi_collocations"),
+    ("--false-callbacks", "synth:3000", "false_callbacks",
+     "dataset_rules.false_callbacks"),
+    ("--response-variants", "synth:3000", "variant_buckets",
+     "dataset_rules.response_variants"),
+    ("--pii-roles", "synth:3000", "pii_cells",
+     "dataset_rules.pii_role_census"),
+    ("--corrections", "synth:3000", "corrected_turns",
+     "dataset_rules.correction_pairs"),
+    ("--conv-leakage", "synth:3000", "leaked_convs",
+     "dataset_rules.conversation_split_leakage"),
+    ("--verbosity-trend", "synth:3000", "regressed",
+     "dataset_rules.verbosity_trend"),
+    ("--suggest", "synth:3000", None, None),
+])
+def test_cli_mode_counts_match_analyzers(spark, tmp_path, monkeypatch,
+                                         capsys, flag, inp, key, analyzer):
+    """Each mode exits 0 on these inputs and its JSON count is the
+    analyzer's own row count on the same input; --suggest prints no JSON
+    line, only its evidence report."""
+    import importlib
+
+    from valar_spark.synth import synth_transcripts
+
+    rc, out = _run_cli(monkeypatch, capsys, [
+        "--input", inp, "--work-dir", str(tmp_path), "--run-id", "m1",
+        flag])
+    assert rc == 0
+    if key is None:
+        assert re.search(r"^\|column\s*\|rule\s*\|params\s*\|reason\s*\|$",
+                         out, re.M)
+        return
+    if inp.startswith("synth:"):
+        df = synth_transcripts(spark, total_turns=int(inp[6:]), seed=42)
+    else:
+        df = spark.read.parquet(inp)
+    module, name = analyzer.split(".")
+    fn = getattr(importlib.import_module(f"valar_spark.{module}"), name)
+    assert _json_line(out)[key] == fn(df).count()
+
+
+@pytest.mark.parametrize("extra, errors", [
+    (["--canned", "--latency"], ["--canned", "--latency"]),
+    (["--curate", "--containment", "--pmi"], ["--curate", "--pmi"]),
+    (["--budget", "text.non_empty"], ["--budget", "'text.non_empty'"]),
+    (["--budget", "text.non_empty=lots"], ["--budget", "=lots'"]),
+    (["--ri-bloom"], ["--ri-bloom requires --registry"]),
+])
+def test_cli_invalid_invocation_is_a_parser_error(tmp_path, monkeypatch,
+                                                  capsys, extra, errors):
+    """Two analysis modes, a malformed --budget pair or --ri-bloom without
+    --registry exit 2 before any session starts."""
+    from valar_spark import cli, session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("get_spark called for an invalid invocation")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with pytest.raises(SystemExit) as exc:
+        cli.main(["--input", "synth:10", "--work-dir", str(tmp_path),
+                  *extra])
+    assert exc.value.code == 2
+    err = capsys.readouterr().err
+    assert all(e in err for e in errors), err
+
+
+def test_cli_stops_the_session_when_a_mode_raises(spark, tmp_path,
+                                                  monkeypatch):
+    from pyspark.errors import AnalysisException
+
+    from valar_spark import cli
+
+    stopped = []
+    monkeypatch.setattr(SparkSession, "stop",
+                        lambda self: stopped.append(self))
+    with pytest.raises(AnalysisException):
+        cli.main(["--input", str(tmp_path / "missing"),
+                  "--work-dir", str(tmp_path), "--canned"])
+    assert stopped == [spark]

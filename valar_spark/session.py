@@ -130,9 +130,7 @@ def get_spark(
         # session-wide codegen=off (which de-optimized every join/agg in
         # the session, ~2x on the dedup/ANN suite) to just the wide rule
         # projections that genuinely overflow the JIT.
-        # VALAR_WSCG=0 restores the round-1 behavior for A/B measurement.
-        .config("spark.sql.codegen.wholeStage",
-                "false" if os.environ.get("VALAR_WSCG") == "0" else "true")
+        .config("spark.sql.codegen.wholeStage", "true")
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -152,13 +150,6 @@ def get_spark(
     jit = driver_jit_options(master)
     if jit is not None:
         b = b.config("spark.driver.defaultJavaOptions", jit)
-    # RAM-backed shuffle dir (VALAR_SHM_SHUFFLE=1): a single shared local
-    # disk is a single-box artifact — real clusters have per-node disks —
-    # so local-mode scaling runs use tmpfs to remove it.
-    if os.environ.get("VALAR_SHM_SHUFFLE"):
-        shm = "/dev/shm/spark-local"
-        os.makedirs(shm, exist_ok=True)
-        b = b.config("spark.local.dir", shm)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
