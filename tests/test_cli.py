@@ -888,6 +888,46 @@ def test_cli_invalid_invocation_is_a_parser_error(tmp_path, monkeypatch,
     assert all(e in err for e in errors), err
 
 
+@pytest.mark.parametrize("extra, error", [
+    (["--canned", "--budget", "text.non_empty=0"],
+     "--budget does not apply to the analysis mode --canned"),
+    (["--parrot", "--estimate", "0.5"],
+     "--estimate does not apply to the analysis mode --parrot"),
+    (["--latency", "--rules", "suite.json"],
+     "--rules does not apply to the analysis mode --latency"),
+    (["--suggest", "--auto"],
+     "--auto does not apply to the analysis mode --suggest"),
+    (["--corrections", "--prev-run", "r0"],
+     "--prev-run does not apply to the analysis mode --corrections"),
+    (["--curate", "--containment", "--report"],
+     "--report does not apply to the analysis mode --curate"),
+    (["--containment", "--history-anomalies"],
+     "--history-anomalies does not apply to the analysis mode "
+     "--containment"),
+    (["--cap", "10"], "--cap requires --curate"),
+    (["--canned", "--minhash"], "--minhash requires --curate"),
+    (["--semantic", "emb.parquet"], "--semantic requires --curate"),
+    (["--rules-out", "suite.json"], "--rules-out requires --auto"),
+])
+def test_cli_ignored_option_is_a_parser_error(tmp_path, monkeypatch, capsys,
+                                              extra, error):
+    """An option that no branch of the invocation reads (a validation-
+    tail option next to an analysis mode, a curation option without
+    --curate, --rules-out without --auto) exits 2 naming it, before any
+    session starts, instead of being dropped silently."""
+    from valar_spark import cli, session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("get_spark called for an invalid invocation")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with pytest.raises(SystemExit) as exc:
+        cli.main(["--input", "synth:10", "--work-dir", str(tmp_path),
+                  *extra])
+    assert exc.value.code == 2
+    assert error in capsys.readouterr().err
+
+
 def test_cli_stops_the_session_when_a_mode_raises(spark, tmp_path,
                                                   monkeypatch):
     from pyspark.errors import AnalysisException

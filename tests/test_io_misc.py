@@ -763,16 +763,21 @@ def test_stream_tool_echo_across_batches(spark, tmp_path):
     from valar_spark.streaming import stream_tool_echo
 
     tool_out = "result: 42 items found in the index at position seven"
+    # a rounding tie: 105 * 100 / 128 = 82.03125 exactly
+    tie_out = ("0123456789" * 11)[:105]
     schema = "conv_id string, turn_idx int, role string, text string"
     b1 = spark.createDataFrame(
         [("A", 0, "user", "please search"),
          ("A", 1, "tool", tool_out),
-         ("B", 0, "tool", tool_out)], schema)
+         ("B", 0, "tool", tool_out),
+         ("T", 0, "tool", tie_out)], schema)
     b2 = spark.createDataFrame(
         [("A", 2, "assistant", "The tool said: " + tool_out),  # echo
          ("B", 1, "assistant", "Summary: 42 items."),          # no echo
          ("B", 2, "tool", "short"),                            # < min_chars
-         ("B", 3, "assistant", "short")], schema)
+         ("B", 3, "assistant", "short"),
+         ("T", 1, "assistant", ("see: " + tie_out).ljust(128, "."))],
+        schema)
     src = str(tmp_path / "echo_src")
     b1.coalesce(1).write.mode("overwrite").parquet(f"{src}/b1")
     _time.sleep(1.1)
@@ -792,8 +797,9 @@ def test_stream_tool_echo_across_batches(spark, tmp_path):
     want = {(r["conv"], r["turn_idx"], r["echo_chars"], r["turn_chars"],
              r["echo_share_pct"])
             for r in tool_output_echo(b1.unionByName(b2)).collect()}
-    assert got == want and len(got) == 1
-    assert next(iter(got))[:2] == ("A", 2)
+    assert got == want and len(got) == 2
+    assert {g[:2] for g in got} == {("A", 2), ("T", 1)}
+    assert ("T", 1, 105, 128, 82.0313) in got   # Spark HALF_UP
 
 
 def test_stream_injection_flags_matches_batch_census(spark, tmp_path):

@@ -212,16 +212,20 @@ def test_stream_parrot_across_batches(spark, tmp_path):
     from valar_spark.streaming import stream_parrot
 
     schema = "conv_id string, turn_idx int, role string, text string"
+    # a rounding tie: 105 of 128 user tokens = 82.03125% exactly
+    words = [f"w{i}" for i in range(128)]
     b1 = spark.createDataFrame(
         [("A", 0, "user",
           "please summarize the quarterly acme revenue numbers"),
-         ("B", 0, "user", "short one")], schema)
+         ("B", 0, "user", "short one"),
+         ("T", 0, "user", " ".join(words))], schema)
     b2 = spark.createDataFrame(
         [("A", 1, "assistant",
           "the quarterly acme revenue numbers please summarize now"),
          ("B", 1, "assistant", "short one indeed"),   # < 5 user tokens
          ("B", 2, "user", "tell me something entirely new"),
-         ("B", 3, "assistant", "unrelated fresh content here")], schema)
+         ("B", 3, "assistant", "unrelated fresh content here"),
+         ("T", 1, "assistant", " ".join(words[:105]))], schema)
     src = str(tmp_path / "parrot_src")
     b1.coalesce(1).write.mode("overwrite").parquet(f"{src}/b1")
     _time.sleep(1.1)
@@ -241,8 +245,9 @@ def test_stream_parrot_across_batches(spark, tmp_path):
     want = {(r["conv"], r["turn_idx"], r["user_tokens"],
              r["overlap_tokens"], r["containment_pct"])
             for r in D.parrot_census(b1.unionByName(b2)).collect()}
-    assert got == want and len(got) == 1
-    assert next(iter(got))[:2] == ("A", 1)
+    assert got == want and len(got) == 2
+    assert {g[:2] for g in got} == {("A", 1), ("T", 1)}
+    assert ("T", 1, 128, 105, 82.0313) in got   # Spark HALF_UP
 
 
 def test_correction_pairs_attribution(spark):
@@ -736,11 +741,17 @@ def test_stream_verbosity_mergeable_state(spark, tmp_path):
     b1 = spark.createDataFrame(
         [("A", 1, "assistant", "a b c d e f g h i j k"),   # (1,11)
          ("A", 2, "user", "x"),
-         ("B", 1, "assistant", "one two")], schema)
+         ("B", 1, "assistant", "one two"),
+         # T's slope is a rounding tie: 273 / 1664 = 0.1640625 exactly
+         ("T", 0, "assistant", "a"),
+         ("T", 1, "assistant", "a"),
+         ("T", 2, "assistant", "a b c")], schema)
     b2 = spark.createDataFrame(
         [("A", 3, "assistant", "a b c d e f g h i"),        # (3,9)
          ("A", 5, "assistant", "a b c d e f g"),            # (5,7)
-         ("B", 3, "assistant", "one two three")], schema)
+         ("B", 3, "assistant", "one two three"),
+         ("T", 6, "assistant", "a b"),
+         ("T", 22, "assistant", "a b c d e")], schema)
     src = str(tmp_path / "verb_src")
     b1.coalesce(1).write.mode("overwrite").parquet(f"{src}/b1")
     _time.sleep(1.1)
@@ -763,3 +774,4 @@ def test_stream_verbosity_mergeable_state(spark, tmp_path):
             for r in D.verbosity_trend(b1.unionByName(b2)).collect()}
     assert last == want
     assert last["A"] == (3, -1.0, True) and "B" not in last
+    assert last["T"] == (5, 0.164063, False)   # Spark HALF_UP

@@ -13,7 +13,9 @@ interrupted run resumes where it stopped.
 Exactly one analysis mode runs per invocation in place of the validation
 run; ``--curate --containment`` is the one composition (the subsumption
 drop set feeds the ledger's near-dup stage). ``python -m valar_spark.cli
---help`` lists the modes.
+--help`` lists the modes. An option the invocation would not read (a
+validation-run option next to a mode, a ``--curate`` option without it,
+``--rules-out`` without ``--auto``) is a parser error.
 """
 
 from __future__ import annotations
@@ -481,6 +483,25 @@ def main(argv: list[str] | None = None) -> int:
                 "modes; run one per invocation")
     if args.ri_bloom and not args.registry:
         p.error("--ri-bloom requires --registry")
+
+    def given(*flags: str) -> list[str]:
+        """The ``flags`` this invocation set away from their defaults."""
+        dests = [f[2:].replace("-", "_") for f in flags]
+        return [f for f, d in zip(flags, dests)
+                if getattr(args, d) != p.get_default(d)]
+
+    # an option no branch of this invocation reads would drop silently
+    # (a budget gate added to a census run would gate nothing)
+    if chosen:
+        for flag in given("--budget", "--estimate", "--rules", "--auto",
+                          "--prev-run", "--report", "--history-anomalies"):
+            p.error(f"{flag} does not apply to the analysis mode "
+                    f"{chosen[0].option_strings[0]}")
+    if not args.curate:
+        for flag in given("--cap", "--minhash", "--semantic"):
+            p.error(f"{flag} requires --curate")
+    if args.rules_out and not args.auto:
+        p.error("--rules-out requires --auto")
 
     from valar_spark.session import get_spark
 

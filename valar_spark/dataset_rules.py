@@ -3568,6 +3568,17 @@ def _turn_pairs(df: DataFrame, conv_col: str, idx_col: str, role_col: str,
         F.md5(F.coalesce(F.col("_text"), F.lit(""))).asc())
 
 
+def _lagged_pairs(df: DataFrame, conv_col: str, idx_col: str,
+                  role_col: str, text_col: str, prev: str) -> DataFrame:
+    """:func:`_turn_pairs` plus the previous turn's role and ``prev``
+    column (``"_text"`` or ``"_i"``) as ``_prev_role`` / ``_prev<prev>``:
+    the pair frame whose rows :func:`valar_spark.streaming._turn_pairs`
+    emits too, so each analyzer's post-lag function serves both."""
+    base, w = _turn_pairs(df, conv_col, idx_col, role_col, text_col)
+    return base.withColumns(
+        {f"_prev{c}": F.lag(c).over(w) for c in ("_role", prev)})
+
+
 # digit-run numeric token: shared verbatim with the DuckDB oracle; inside
 # the Java-regex ∩ RE2 intersection (non-capturing group only)
 NUMBER_TOKEN_PATTERN = r"\d+(?:\.\d+)?"
@@ -3626,14 +3637,16 @@ def tool_output_echo(
 
     Columns: ``(conv, turn_idx, echo_chars, turn_chars,
     echo_share_pct)`` — one row per echoing assistant turn."""
+    return _echo_rows(_lagged_pairs(df, conv_col, idx_col, role_col,
+                                    text_col, "_text"), min_chars)
+
+
+def _echo_rows(pairs: DataFrame, min_chars: int) -> DataFrame:
+    """:func:`tool_output_echo` over a :func:`_lagged_pairs` frame."""
     if min_chars < 1:
         raise ValueError(f"min_chars must be >= 1, got {min_chars}")
-    base, w = _turn_pairs(df, conv_col, idx_col, role_col, text_col)
-    out = (base
-           .withColumns({"_prev_role": F.lag("_role").over(w),
-                         "_prev_text": F.lag("_text").over(w)})
-           .filter(_tool_echo(F.col("_prev_role"), F.col("_prev_text"),
-                              min_chars)))
+    out = pairs.filter(_tool_echo(F.col("_prev_role"), F.col("_prev_text"),
+                                  min_chars))
     return out.select(
         "conv", F.col("_i").alias("turn_idx"),
         F.length("_prev_text").cast("long").alias("echo_chars"),
@@ -3882,10 +3895,13 @@ def tool_grounding_check(
     grounded_share_pct)`` — one row per checked assistant turn;
     ``ungrounded_csv`` is the sorted comma-joined offending tokens
     (a string, so hash oracles compare it byte-exact)."""
-    base, w = _turn_pairs(df, conv_col, idx_col, role_col, text_col)
-    checked = (base
-               .withColumns({"_prev_role": F.lag("_role").over(w),
-                             "_prev_text": F.lag("_text").over(w)})
+    return _grounding_rows(_lagged_pairs(df, conv_col, idx_col, role_col,
+                                         text_col, "_text"))
+
+
+def _grounding_rows(pairs: DataFrame) -> DataFrame:
+    """:func:`tool_grounding_check` over a :func:`_lagged_pairs` frame."""
+    checked = (pairs
                .filter(_reply_to("tool", F.col("_prev_role"),
                                  F.col("_prev_text")))
                .select("conv", F.col("_i").alias("turn_idx"),
@@ -4262,18 +4278,32 @@ def verbosity_trend(
     per-turn shuffle rows carry (conv, 5 ints). Columns: ``(conv,
     n_turns, slope, declining)`` with ``declining`` = slope below
     ``declining_floor`` tokens/turn."""
-    from valar_spark.textops import token_count
-
-    x = F.col(idx_col).cast("long")
-    y = token_count(F.col(text_col)).cast("long")
-    rows = (df.filter((F.col(role_col) == role) & F.col(idx_col).isNotNull())
-            .select(F.col(conv_col).alias("conv"), x.alias("_x"),
-                    y.alias("_y")))
+    rows = _verbosity_points(df, conv_col, idx_col, role_col, text_col, role)
     agg = rows.groupBy("conv").agg(
         F.count(F.lit(1)).cast("long").alias("_n"),
         F.sum("_x").alias("_sx"), F.sum("_y").alias("_sy"),
         F.sum(F.col("_x") * F.col("_y")).alias("_sxy"),
         F.sum(F.col("_x") * F.col("_x")).alias("_sxx"))
+    return _verbosity_slope(agg, min_turns, declining_floor)
+
+
+def _verbosity_points(df: DataFrame, conv_col: str, idx_col: str,
+                      role_col: str, text_col: str, role: str) -> DataFrame:
+    """``(conv, _x, _y)``: turn index and token count of each ``role``
+    turn with a non-null index, the points :func:`verbosity_trend`
+    regresses."""
+    from valar_spark.textops import token_count
+
+    return (df.filter((F.col(role_col) == role) & F.col(idx_col).isNotNull())
+            .select(F.col(conv_col).alias("conv"),
+                    F.col(idx_col).cast("long").alias("_x"),
+                    token_count(F.col(text_col)).cast("long").alias("_y")))
+
+
+def _verbosity_slope(agg: DataFrame, min_turns: int,
+                     declining_floor: float) -> DataFrame:
+    """:func:`verbosity_trend` over per-conversation sums ``(conv, _n,
+    _sx, _sy, _sxy, _sxx)``."""
     num = F.col("_n") * F.col("_sxy") - F.col("_sx") * F.col("_sy")
     den = F.col("_n") * F.col("_sxx") - F.col("_sx") * F.col("_sx")
     return (agg.filter((F.col("_n") >= int(min_turns)) & (den > 0))
@@ -4311,17 +4341,21 @@ def parrot_census(
 
     Columns: ``(conv, turn_idx, user_tokens, overlap_tokens,
     containment_pct)`` — one row per parroting assistant turn."""
+    return _parrot_rows(_lagged_pairs(df, conv_col, idx_col, role_col,
+                                      text_col, "_text"),
+                        min_user_tokens, min_containment)
+
+
+def _parrot_rows(pairs: DataFrame, min_user_tokens: int,
+                 min_containment: float) -> DataFrame:
+    """:func:`parrot_census` over a :func:`_lagged_pairs` frame."""
     from valar_spark.textops import tokens
 
     if min_user_tokens < 1:
         raise ValueError(
             f"min_user_tokens must be >= 1, got {min_user_tokens}")
-    base, w = _turn_pairs(df, conv_col, idx_col, role_col, text_col)
-    cand = (base
-            .withColumns({"_prev_role": F.lag("_role").over(w),
-                          "_prev_text": F.lag("_text").over(w)})
-            .filter(_reply_to("user", F.col("_prev_role"),
-                              F.col("_prev_text"))))
+    cand = pairs.filter(_reply_to("user", F.col("_prev_role"),
+                                  F.col("_prev_text")))
     u = F.array_distinct(tokens(F.lower(F.col("_prev_text"))))
     a = F.array_distinct(tokens(F.lower(F.col("_text"))))
     cand = (cand.withColumn("_ut", F.size(u).cast("long"))
@@ -4380,18 +4414,21 @@ def correction_pairs(
 
     Columns: ``(conv, asst_turn_idx, user_turn_idx, pattern)`` — one row
     per corrected reply."""
-    t = F.lower(F.trim(F.translate(F.col(text_col), "’", "'")))
+    return _correction_rows(_lagged_pairs(df, conv_col, idx_col, role_col,
+                                          text_col, "_i"))
+
+
+def _correction_rows(pairs: DataFrame) -> DataFrame:
+    """:func:`correction_pairs` over a :func:`_lagged_pairs` frame."""
+    t = F.lower(F.trim(F.translate(F.col("_text"), "’", "'")))
     label: Column = F.lit(None).cast("string")
     for key, pat in reversed(CORRECTION_PATTERNS):
         label = F.when(t.rlike(pat), F.lit(key)).otherwise(label)
-    base, w = _turn_pairs(df, conv_col, idx_col, role_col, text_col,
-                          label.alias("pattern"))
-    out = (base
-           .withColumns({"_prev_role": F.lag("_role").over(w),
-                         "_prev_i": F.lag("_i").over(w)})
+    out = (pairs
            .filter((F.col("_role") == "user")
-                   & F.col("pattern").isNotNull()
-                   & (F.col("_prev_role") == "assistant")))
+                   & (F.col("_prev_role") == "assistant"))
+           .withColumn("pattern", label)
+           .filter(F.col("pattern").isNotNull()))
     return out.select(
         "conv", F.col("_prev_i").alias("asst_turn_idx"),
         F.col("_i").alias("user_turn_idx"), "pattern")

@@ -8,9 +8,13 @@ reuses the exact Column expressions, so parity holds by construction.
 
 The per-conversation stateful monitors (integrity, transition grammar,
 tool echo/grounding, parrot, corrections, verbosity) all run on one
-state-store walker, ``_per_conversation``; the four "previous turn → this
-turn" checks share its pairing layer ``_turn_pairs``, the twin of the
-batch analyzers' ``valar_spark.dataset_rules._turn_pairs``.
+state-store walker, ``_per_conversation``. The four "previous turn → this
+turn" monitors share its pairing layer ``_turn_pairs``, which keeps only
+the previous turn in state and emits raw pair rows in the shape of the
+batch analyzers' ``valar_spark.dataset_rules._lagged_pairs``; those
+analyzers' own post-lag Columns then finish the job, as the batch
+analyzer's sums finish the verbosity monitor, so each rule has one
+definition.
 """
 
 from __future__ import annotations
@@ -22,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import dataset_rules as D
 from .config import DEFAULT, ValidationConfig
 from .drift import edge_bucket
 from .rules import Rule
@@ -464,17 +469,17 @@ _PAIR_STATE_DDL = {"text": "last_role string, last_text string",
 
 
 def _turn_pairs(stream_df, conv_col, order_col, role_col, text_col,
-                pair, carry, check, out_ddl, close_after):
+                pair, carry, close_after):
     """Shared walker of the "previous turn → this turn" monitors: sorts
     each conversation's micro-batch by the content-closed order
     ``(order_col NULLS FIRST, role, md5(text))`` of its batch twin
-    :func:`valar_spark.dataset_rules._turn_pairs`, normalises null
-    role/idx/text to None, and calls ``check(conv, idx, text, prev)``
-    for every turn of role ``pair[1]`` whose predecessor had role
-    ``pair[0]`` — ``prev`` being that predecessor's text
-    (``carry="text"``) or idx (``carry="idx"``), carried across
-    micro-batches in the state store. ``check`` returns one output row
-    ``(conv, <out_ddl columns>)`` or None."""
+    :func:`valar_spark.dataset_rules._turn_pairs` and emits, for every
+    turn of role ``pair[1]`` whose predecessor had role ``pair[0]``, one
+    row ``(conv, _i, _role, _text, _prev_role, _prev_i, _prev_text)`` —
+    the batch ``_lagged_pairs`` frame. Only the predecessor's role and
+    its text (``carry="text"``) or idx (``carry="idx"``) are carried
+    across micro-batches in the state store; the other ``_prev_`` column
+    stays null."""
     import hashlib
 
     prev_role, cur_role = pair
@@ -502,15 +507,17 @@ def _turn_pairs(stream_df, conv_col, order_col, role_col, text_col,
             idx = None if pd.isna(idx) else int(idx)
             text = None if pd.isna(text) else text
             if role == cur_role and last_role == prev_role:
-                row = check(conv, idx, text, last)
-                if row is not None:
-                    rows.append(row)
+                rows.append((conv, idx, role, text, last_role)
+                            + ((None, last) if carry == "text"
+                               else (last, None)))
             last_role, last = role, (text if carry == "text" else idx)
         return (last_role, last), rows
 
-    return _per_conversation(stream_df, conv_col, step,
-                             f"conv {conv_t}, {out_ddl}",
-                             _PAIR_STATE_DDL[carry], _close_ms(close_after))
+    return _per_conversation(
+        stream_df, conv_col, step,
+        f"conv {conv_t}, _i bigint, _role string, _text string, "
+        "_prev_role string, _prev_i bigint, _prev_text string",
+        _PAIR_STATE_DDL[carry], _close_ms(close_after))
 
 
 def stream_integrity_stateful(
@@ -810,22 +817,13 @@ def stream_tool_echo(
     standard late-arrival caveat). Default ``None`` = NoTimeout
     (bounded-input jobs and tests).
 
-    Output rows mirror the batch operator: ``(conv, turn_idx,
-    echo_chars, turn_chars, echo_share_pct)``."""
-    if min_chars < 1:
-        raise ValueError(f"min_chars must be >= 1, got {min_chars}")
-
-    def check(conv, idx, text, last_text):
-        if (last_text is not None and len(last_text) >= min_chars
-                and text is not None and last_text in text):
-            return (conv, idx, len(last_text), len(text),
-                    round(len(last_text) * 100.0 / len(text), 4))
-
-    return _turn_pairs(
+    Parity with the batch operator holds by construction: the state
+    step only pairs turns, and the batch operator's own Columns match
+    and round the pairs. Output rows: ``(conv, turn_idx, echo_chars,
+    turn_chars, echo_share_pct)``."""
+    return D._echo_rows(_turn_pairs(
         stream_df, conv_col, order_col, role_col, text_col,
-        ("tool", "assistant"), "text", check,
-        "turn_idx bigint, echo_chars bigint, "
-        "turn_chars bigint, echo_share_pct double", close_after)
+        ("tool", "assistant"), "text", close_after), min_chars)
 
 
 def stream_injection_flags(
@@ -870,46 +868,19 @@ def stream_tool_grounding(
     the same state design as :func:`stream_tool_echo`: each open
     conversation's last (role, text) survives in the state store, so an
     assistant turn in batch k+1 is still checked against the tool output
-    that arrived in batch k. Number extraction uses the SAME digit-run
-    token contract (:data:`~valar_spark.dataset_rules.NUMBER_TOKEN_PATTERN`,
-    string-exact comparison) as the batch operator; per-conversation
-    ordering/eviction semantics, state bounds, and the ``close_after``
-    caveats are exactly :func:`stream_tool_echo`'s (one turn × active
-    conversations; processing-time timeouts keep the engine scheduling
-    sweep batches, so poll the sink instead of ``processAllAvailable``).
+    that arrived in batch k. Per-conversation ordering/eviction
+    semantics, state bounds, and the ``close_after`` caveats are exactly
+    :func:`stream_tool_echo`'s (one turn × active conversations;
+    processing-time timeouts keep the engine scheduling sweep batches,
+    so poll the sink instead of ``processAllAvailable``).
 
-    Rounding note: ``grounded_share_pct`` is computed with Python
-    ``round`` (banker's) vs the batch operator's Java HALF_UP — they
-    differ only on exact 5e-5 float ties, which the quotient
-    ``k*100/n`` cannot exactly represent in binary for any realistic
-    (k, n); the batch-parity test pins agreement.
-
-    Output rows mirror the batch operator: ``(conv, turn_idx,
+    Parity with the batch operator holds by construction: the state
+    step only pairs turns, and the batch operator's own Columns extract,
+    compare and round the numbers. Output rows: ``(conv, turn_idx,
     n_numbers, n_ungrounded, ungrounded_csv, grounded_share_pct)``."""
-    import re
-
-    from valar_spark.dataset_rules import NUMBER_TOKEN_PATTERN
-
-    # re.ASCII pins \d to [0-9]: Python's default Unicode \d would match
-    # e.g. Arabic-Indic digits that Java regex and RE2 \d do NOT
-    num_re = re.compile(NUMBER_TOKEN_PATTERN, re.ASCII)
-
-    def check(conv, idx, text, last_text):
-        if last_text is None or text is None:
-            return None
-        nums = list(dict.fromkeys(num_re.findall(text)))
-        if nums:
-            tnums = set(num_re.findall(last_text))
-            ung = sorted(x for x in nums if x not in tnums)
-            return (conv, idx, len(nums), len(ung), ",".join(ung),
-                    round((len(nums) - len(ung)) * 100.0 / len(nums), 4))
-
-    return _turn_pairs(
+    return D._grounding_rows(_turn_pairs(
         stream_df, conv_col, order_col, role_col, text_col,
-        ("tool", "assistant"), "text", check,
-        "turn_idx bigint, n_numbers bigint, "
-        "n_ungrounded bigint, ungrounded_csv string, "
-        "grounded_share_pct double", close_after)
+        ("tool", "assistant"), "text", close_after))
 
 
 def stream_special_token_flags(
@@ -953,35 +924,18 @@ def stream_parrot(
     state design as :func:`stream_tool_echo`: each open conversation's
     last (role, text) survives in the state store, so an assistant reply
     in batch k+1 is still checked against the user prompt that arrived
-    in batch k. Token-set containment uses the SAME contract as the
-    batch operator (distinct lowercased maximal non-whitespace runs over
-    the ASCII whitespace class); per-conversation ordering/eviction
-    semantics, state bounds, and the ``close_after`` processing-time
-    caveats are exactly :func:`stream_tool_echo`'s.
+    in batch k. Per-conversation ordering/eviction semantics, state
+    bounds, and the ``close_after`` processing-time caveats are exactly
+    :func:`stream_tool_echo`'s.
 
-    Output rows mirror the batch operator: ``(conv, turn_idx,
-    user_tokens, overlap_tokens, containment_pct)``."""
-    import re
-
-    if min_user_tokens < 1:
-        raise ValueError(
-            f"min_user_tokens must be >= 1, got {min_user_tokens}")
-    ws = re.compile(r"\S+", re.ASCII)
-
-    def check(conv, idx, text, last_text):
-        if last_text is None or text is None:
-            return None
-        u = set(ws.findall(last_text.lower()))
-        ut = len(u)
-        ov = len(u & set(ws.findall(text.lower())))
-        if ut >= min_user_tokens and ov * 1.0 >= min_containment * ut:
-            return (conv, idx, ut, ov, round(ov * 100.0 / ut, 4))
-
-    return _turn_pairs(
+    Parity with the batch operator holds by construction: the state
+    step only pairs turns, and the batch operator's own Columns
+    tokenize, compare and round the pairs. Output rows: ``(conv,
+    turn_idx, user_tokens, overlap_tokens, containment_pct)``."""
+    return D._parrot_rows(_turn_pairs(
         stream_df, conv_col, order_col, role_col, text_col,
-        ("user", "assistant"), "text", check,
-        "turn_idx bigint, user_tokens bigint, "
-        "overlap_tokens bigint, containment_pct double", close_after)
+        ("user", "assistant"), "text", close_after),
+        min_user_tokens, min_containment)
 
 
 def stream_corrections(
@@ -999,36 +953,17 @@ def stream_corrections(
     correction arriving in batch k+1 still attributes to the assistant
     reply from batch k. At ingest time this is a LIVE model-failure-rate
     signal (corrections/minute per deployment), available before any
-    batch job runs. Battery and precedence are compiled from the SAME
-    :data:`~valar_spark.dataset_rules.CORRECTION_PATTERNS` constants via
-    Python ``re`` (patterns live in the Java∩RE2∩Python intersection);
-    ordering/eviction semantics and the ``close_after`` caveats are
-    exactly :func:`stream_tool_echo`'s.
+    batch job runs. Ordering/eviction semantics and the ``close_after``
+    caveats are exactly :func:`stream_tool_echo`'s, but the state holds
+    the reply's turn_idx, not its text.
 
-    Output rows mirror the batch operator: ``(conv, asst_turn_idx,
-    user_turn_idx, pattern)``."""
-    import re
-
-    from valar_spark.dataset_rules import CORRECTION_PATTERNS
-
-    compiled = [(k, re.compile(p)) for k, p in CORRECTION_PATTERNS]
-
-    def check(conv, idx, text, last_idx):
-        if not isinstance(text, str):
-            return None
-        # .strip(" ") not .strip(): Spark's trim() removes ASCII spaces
-        # only, and the batch-parity contract must match it exactly on
-        # tab/newline-padded corrections
-        tl = text.replace("’", "'").strip(" ").lower()
-        for k, pat in compiled:
-            if pat.search(tl):
-                return (conv, last_idx, idx, k)
-
-    return _turn_pairs(
+    Parity with the batch operator holds by construction: the state
+    step only pairs turns, and the batch operator's own Columns match
+    the battery. Output rows: ``(conv, asst_turn_idx, user_turn_idx,
+    pattern)``."""
+    return D._correction_rows(_turn_pairs(
         stream_df, conv_col, order_col, role_col, text_col,
-        ("assistant", "user"), "idx", check,
-        "asst_turn_idx bigint, user_turn_idx bigint, pattern string",
-        close_after)
+        ("assistant", "user"), "idx", close_after))
 
 
 def stream_verbosity(
@@ -1050,41 +985,36 @@ def stream_verbosity(
     across micro-batches, so the slope after batch k+1 is EXACTLY the
     batch operator's slope over all turns seen so far — no
     approximation, no window buffer, state = 5 BIGINTs per open
-    conversation. Token counting replicates the batch tokenizer
-    contract (maximal ASCII-whitespace-separated runs; null/blank ⇒ 0).
+    conversation.
 
-    Emits one row per conversation per micro-batch THAT TOUCHED IT,
-    carrying the updated cumulative trend (append mode — a snapshot
-    stream; the LAST row per conversation equals the batch result).
-    Eviction semantics per ``close_after`` are
+    Emits one row per conversation per micro-batch that brought it a
+    ``role`` turn, carrying the updated cumulative trend (append mode —
+    a snapshot stream; the LAST row per conversation equals the batch
+    result). Eviction semantics per ``close_after`` are
     :func:`stream_tool_echo`'s.
 
-    Columns: ``(conv, n_turns, slope, declining)``."""
-    import re
-
-    conv_t = stream_df.schema[conv_col].dataType.simpleString()
-    ws = re.compile(r"\S+", re.ASCII)
+    Parity with the batch operator holds by construction: the turn
+    index and token count are the batch operator's own Columns, the
+    state step only adds up the five sums, and the batch operator's own
+    Columns take the slope from them. Columns: ``(conv, n_turns, slope,
+    declining)``."""
+    points = D._verbosity_points(stream_df, conv_col, order_col, role_col,
+                                 text_col, role)
+    conv_t = points.schema["conv"].dataType.simpleString()
 
     def step(conv, st, pdf):
-        n, sx, sy, sxy, sxx = st or (0, 0, 0, 0, 0)
-        sel = pdf[(pdf[role_col] == role) & pdf[order_col].notna()]
-        for idx, text in zip(sel[order_col], sel[text_col]):
-            x = int(idx)
-            y = len(ws.findall(text)) if isinstance(text, str) else 0
-            n += 1
-            sx += x
-            sy += y
-            sxy += x * y
-            sxx += x * x
-        den = n * sxx - sx * sx
-        rows = None
-        if n >= min_turns and den > 0:
-            slope = round((n * sxy - sx * sy) / den, 6)
-            rows = [(conv, n, slope, slope < declining_floor)]
-        return (n, sx, sy, sxy, sxx), rows
+        # Python ints, never int64 arrays: a sum past BIGINT fails the
+        # state update instead of wrapping
+        xs, ys = pdf["_x"].tolist(), pdf["_y"].tolist()
+        sums = tuple(a + b for a, b in zip(st or (0, 0, 0, 0, 0), (
+            len(xs), sum(xs), sum(ys), sum(x * y for x, y in zip(xs, ys)),
+            sum(x * x for x in xs))))
+        return sums, [(conv, *sums)]
 
-    return _per_conversation(
-        stream_df, conv_col, step,
-        f"conv {conv_t}, n_turns bigint, slope double, declining boolean",
+    sums = _per_conversation(
+        points, "conv", step,
+        f"conv {conv_t}, _n bigint, _sx bigint, _sy bigint, _sxy bigint, "
+        "_sxx bigint",
         "n bigint, sx bigint, sy bigint, sxy bigint, sxx bigint",
         _close_ms(close_after))
+    return D._verbosity_slope(sums, min_turns, declining_floor)
