@@ -221,6 +221,32 @@ def test_two_sided_drift_equals_one_sided_histograms(spark):
     assert len(drift.quantile_edges(ties_base, "v", 10)) < 9
 
 
+def test_edge_bucket_binds_the_value_once(spark):
+    """``edge_bucket`` counts the edges strictly below the value exactly as
+    the per-edge lambda over the column did: 0 for null, ``len(edges)`` for
+    NaN, on ±inf and on values equal to an edge, with 0, 1 and 50 edges;
+    and its plan evaluates the input expression once."""
+    inf = float("inf")
+    values = [None, float("nan"), inf, -inf, -1.0, 0.0, 0.5, 1.0, 2.5,
+              3.0, 24.5, 49.0, 49.5, 50.0, 1e300]
+    df = spark.createDataFrame([(v,) for v in values], "v double")
+    for edges in ([], [1.0], [float(i) for i in range(50)]):
+        arr = F.array(*[F.lit(float(e)) for e in edges])
+        per_edge = F.size(F.filter(arr, lambda e: F.col("v") > e))
+        got = [(r["a"], r["b"]) for r in df.select(
+            per_edge.alias("a"),
+            drift.edge_bucket("v", edges).alias("b")).collect()]
+        assert all(a == b for a, b in got), (edges, got)
+        assert got[0][1] == 0 and got[1][1] == len(edges)
+
+    # length(text) appears once in the optimized projection, not per edge
+    text = spark.createDataFrame([("abc",)], "text string")
+    q = (text.select(F.length("text").alias("n"))
+         .select(drift.edge_bucket("n", [float(i) for i in range(39)])))
+    plan = q._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("length(text") == 1, plan
+
+
 def test_psi_from_counts_length_guard():
     import pytest as _pt
 

@@ -79,7 +79,7 @@ def test_resume_after_partial_state(spark, small_df, tmp_path):
     rsh = rule_set_hash(rs)
 
     done = [0, 1, 2, 3]
-    rows = [("r1", rsh, b, "done", rid, 0, 0, None, 0.0)
+    rows = [("r1", rsh, b, "done", rid, 0, 0, None, 0.0, None)
             for b in done for rid in rs.rule_ids()]
     from valar_spark.runner import STATE_SCHEMA
 
@@ -216,9 +216,9 @@ def test_history_anomalies_flags_spiked_run(spark):
     rows = []
     for i, rate in enumerate([0.010, 0.011, 0.009, 0.010, 0.10]):
         rows.append(("r%d" % i, "h", 0, "done", "text.non_empty",
-                     int(rate * 10_000), 10_000, None, float(i)))
+                     int(rate * 10_000), 10_000, None, float(i), None))
         rows.append(("r%d" % i, "h", 0, "done", "turn_idx.non_negative",
-                     100, 10_000, None, float(i)))
+                     100, 10_000, None, float(i), None))
     st = spark.createDataFrame(rows, STATE_SCHEMA)
     got = {(r["rule_id"], r["run_id"]): r["anomalous"]
            for r in history_anomalies(st, k_sigma=3.0).collect()}
@@ -387,3 +387,207 @@ def test_repeated_rule_ids_one_verdict_per_bucket(spark, tmp_path):
     assert validate(df, rs).violations.count() == 24
     assert len(events) == 64
     assert len({(e.partition_id, e.rule_id) for e in events}) == 64
+
+
+def _blank_one_conv_per_bucket(df, buckets, num_buckets):
+    """``df`` with the text of one conversation in each of ``buckets``
+    blanked (a violation of ``text.non_empty`` per turn)."""
+    from valar_spark.validate import bucket_expr
+
+    firsts = (df.select("conv_id", bucket_expr(["conv_id"], num_buckets)
+                        .alias("b"))
+              .filter(F.col("b").isin(list(buckets)))
+              .groupBy("b").agg(F.min("conv_id").alias("c")).collect())
+    assert len(firsts) == len(buckets)
+    targets = [r["c"] for r in firsts]
+    return df.withColumn(
+        "text", F.when(F.col("conv_id").isin(targets), F.lit(""))
+        .otherwise(F.col("text")))
+
+
+def _sink_files(rc, run_id, bucket):
+    d = os.path.join(rc.violations_path, f"run_id={run_id}")
+    return [f for root, _, fs in os.walk(d)
+            if root.endswith(f"partition_id={bucket}")
+            for f in fs if f.endswith(".parquet")]
+
+
+def _owners(spark, rc, run_id):
+    """``{bucket: source_run_id}`` of ``run_id``'s state rows."""
+    from valar_spark.runner import _read_state
+
+    rows = (_read_state(spark, rc).filter(F.col("run_id") == run_id)
+            .select("partition_id", "source_run_id").distinct().collect())
+    owners = {}
+    for r in rows:
+        assert owners.setdefault(r["partition_id"],
+                                 r["source_run_id"]) == r["source_run_id"]
+    return owners
+
+
+def test_run_incremental_chain_carries_by_reference(spark, small_df,
+                                                    tmp_path):
+    """a → b → c, where c carries a bucket b carried from a: c's result
+    equals a from-scratch validation, its carried rows point at the run
+    that owns the violations (a, not b), and no carried bucket has a
+    violation file under c."""
+    from valar_spark.runner import diff_runs, run_incremental
+
+    cfg = ValidationConfig(num_buckets=4, salt=2)
+    rs = RuleSet(RULES, cfg)
+    work = str(tmp_path / "w")
+
+    def rc(run_id):
+        return RunnerConfig(work_dir=work, run_id=run_id, buckets_per_job=2)
+
+    day2 = _blank_one_conv_per_bucket(small_df, [0], 4)
+    day3 = _blank_one_conv_per_bucket(day2, [1], 4)
+    run_incremental(small_df, rs, rc("a"))
+    b = run_incremental(day2, rs, rc("b"), prev_run_id="a")
+    c = run_incremental(day3, rs, rc("c"), prev_run_id="b")
+    assert b.buckets_processed == [0] and c.buckets_processed == [1]
+
+    assert _owners(spark, rc("b"), "b") == {0: None, 1: "a", 2: "a", 3: "a"}
+    assert _owners(spark, rc("c"), "c") == {0: "b", 1: None, 2: "a", 3: "a"}
+    for bucket in (0, 2, 3):
+        assert _sink_files(rc("c"), "c", bucket) == []
+    for bucket in (1, 2, 3):
+        assert _sink_files(rc("b"), "b", bucket) == []
+
+    for run_id, res, day in (("b", b, day2), ("c", c, day3)):
+        only_run, only_direct = diff_runs(res.violations,
+                                          validate(day, rs).violations)
+        assert (only_run.count(), only_direct.count()) == (0, 0)
+        assert res.verdicts.count() == 4 * len(rs.rule_ids())
+        # carried rows are relabelled to the reading run
+        got = {r["run_id"] for r in
+               res.violations.select("run_id").distinct().collect()}
+        assert got == {run_id}
+
+
+def test_state_without_source_run_id_resumes_and_carries(spark, small_df,
+                                                         tmp_path):
+    """A state table written before ``source_run_id`` existed reads it as
+    null (the row's own run): its run resumes with nothing to redo, and an
+    increment carries its buckets by reference."""
+    import shutil
+
+    from valar_spark.runner import STATE_SCHEMA, diff_runs, run_incremental
+
+    cfg = ValidationConfig(num_buckets=4, salt=2)
+    rs = RuleSet(RULES, cfg)
+    work = str(tmp_path / "w")
+    rc_a = RunnerConfig(work_dir=work, run_id="a", buckets_per_job=4)
+    first = run_incremental(small_df, rs, rc_a)
+    n_first = first.violations.count()
+
+    old_cols = [c.split()[0] for c in STATE_SCHEMA.split(", ")][:9]
+    legacy = str(tmp_path / "legacy_state")
+    spark.read.parquet(rc_a.state_path).select(*old_cols) \
+        .write.parquet(legacy)
+    shutil.rmtree(rc_a.state_path)
+    shutil.move(legacy, rc_a.state_path)
+    assert "source_run_id" not in spark.read.parquet(rc_a.state_path).columns
+
+    again = run_checkpointed(small_df, rs, rc_a)
+    assert again.buckets_processed == []
+    assert again.violations.count() == n_first
+
+    day2 = _blank_one_conv_per_bucket(small_df, [2], 4)
+    rc_b = RunnerConfig(work_dir=work, run_id="b", buckets_per_job=4)
+    b = run_incremental(day2, rs, rc_b, prev_run_id="a")
+    assert b.buckets_processed == [2]
+    assert _owners(spark, rc_b, "b") == {0: "a", 1: "a", 2: None, 3: "a"}
+    only_run, only_direct = diff_runs(b.violations,
+                                      validate(day2, rs).violations)
+    assert (only_run.count(), only_direct.count()) == (0, 0)
+
+
+def test_expire_runs_keeps_referenced_runs(spark, small_df, tmp_path):
+    """``expire_runs`` refuses to drop a run a remaining run refers to,
+    deletes nothing when it refuses, and drops it once the referring run
+    is gone."""
+    from valar_spark.runner import _read_state, expire_runs, run_incremental
+
+    cfg = ValidationConfig(num_buckets=4, salt=2)
+    rs = RuleSet(RULES, cfg)
+    work = str(tmp_path / "w")
+    rc_a = RunnerConfig(work_dir=work, run_id="a", buckets_per_job=4)
+    rc_b = RunnerConfig(work_dir=work, run_id="b", buckets_per_job=4)
+    run_incremental(small_df, rs, rc_a)
+    day2 = _blank_one_conv_per_bucket(small_df, [0], 4)
+    b = run_incremental(day2, rs, rc_b, prev_run_id="a")
+    n_b = b.violations.count()
+
+    def runs():
+        return {r["run_id"] for r in
+                _read_state(spark, rc_a).select("run_id").distinct()
+                .collect()}
+
+    with pytest.raises(ValueError, match=r"a \(by b\)"):
+        expire_runs(spark, work, ["a"])
+    assert runs() == {"a", "b"}
+    assert os.path.isdir(os.path.join(rc_a.violations_path, "run_id=a"))
+    assert run_checkpointed(day2, rs, rc_b).violations.count() == n_b
+
+    expire_runs(spark, work, ["b"])
+    assert runs() == {"a"}
+    assert not os.path.exists(os.path.join(rc_a.violations_path, "run_id=b"))
+    assert not os.path.exists(os.path.join(work, "fingerprints", "run_id=b"))
+
+    expire_runs(spark, work, ["a"])
+    assert runs() == set()
+    assert not os.path.exists(os.path.join(rc_a.violations_path, "run_id=a"))
+    # a run of the emptied work_dir starts from scratch
+    assert run_checkpointed(small_df, rs, rc_a).buckets_processed == [0, 1,
+                                                                       2, 3]
+
+
+def test_carried_read_prunes_by_owner_partition(spark, small_df, tmp_path):
+    """The result of an increment reads the sink with the carried-owner
+    predicate among the scan's partition filters, so pruning still
+    skips every other run's partitions."""
+    from valar_spark.runner import run_incremental
+
+    cfg = ValidationConfig(num_buckets=4, salt=2)
+    rs = RuleSet(RULES, cfg)
+    work = str(tmp_path / "w")
+    run_incremental(small_df, rs, RunnerConfig(work_dir=work, run_id="a",
+                                               buckets_per_job=4))
+    day2 = _blank_one_conv_per_bucket(small_df, [3], 4)
+    b = run_incremental(day2, rs, RunnerConfig(work_dir=work, run_id="b",
+                                               buckets_per_job=4),
+                        prev_run_id="a")
+    leaves = b.violations._jdf.queryExecution().sparkPlan().collectLeaves()
+    assert leaves.size() == 1
+    scan = leaves.apply(0)
+    assert scan.nodeName().startswith("Scan parquet")
+    filters = scan.partitionFilters().mkString(" AND ")
+    assert "run_id" in filters and "partition_id" in filters, filters
+    assert " = a)" in filters and "IN (0,1,2)" in filters, filters
+    assert " = b)" in filters, filters
+
+
+def test_sink_write_leaves_the_session_conf_alone(spark, small_df, tmp_path,
+                                                  monkeypatch):
+    """The runner's dynamic partition overwrite is an option of its one
+    write: it never sets the session's ``partitionOverwriteMode``."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    keys = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    cfg = ValidationConfig(num_buckets=4, salt=2)
+    res = run_checkpointed(small_df, RuleSet(RULES, cfg),
+                           RunnerConfig(work_dir=str(tmp_path / "w"),
+                                        run_id="r1", buckets_per_job=2))
+    assert res.violations.count() > 0
+    assert key not in keys
+    assert spark.conf.get(key) == before

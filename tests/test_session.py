@@ -19,7 +19,8 @@ from pyspark.sql import functions as F
 from tests.test_ann import SF
 from valar_spark import worker_daemon
 from valar_spark.session import (SPARK_DAEMON, WARM_DAEMON,
-                                 driver_jit_options, python_daemon_module)
+                                 driver_jit_options, get_spark,
+                                 python_daemon_module)
 
 #: the tier-4 (C2) thresholds of a local driver: 10x the JDK 17 defaults
 LOCAL_JIT_OPTIONS = (
@@ -147,6 +148,33 @@ def test_local_driver_raises_the_c2_threshold(spark):
             "com.sun.management.HotSpotDiagnosticMXBean"))
     got = bean.getVMOption("Tier4InvocationThreshold").getValue()
     assert got == "50000"
+
+
+def test_origin_capture_is_off_unless_asked(spark, monkeypatch):
+    """The session skips PySpark's per-call origin capture; a caller's
+    ``extra_conf`` turns it back on (checked on the builder's options, so
+    no second session starts)."""
+    from pyspark.sql import SparkSession
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"
+
+    built = []
+
+    class Stub:
+        class sparkContext:
+            @staticmethod
+            def setLogLevel(level):
+                pass
+
+    def get_or_create(builder):
+        built.append(dict(builder._options))
+        return Stub()
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
+    get_spark(master="local[4]")
+    get_spark(master="local[4]", extra_conf={key: "true"})
+    assert [b[key] for b in built] == ["false", "true"]
 
 
 def test_udfs_run_on_the_package_daemon(spark):

@@ -49,10 +49,18 @@ def edge_bucket(col: str, edges: Sequence[float]) -> Column:
     below the value, so bin ``i`` is ``(e_i, e_{i+1}]``. The binning of
     :func:`histogram`, :func:`psi_by_group`, :func:`psi_timeline` and
     ``streaming.stream_value_histogram``; ``width_bucket`` only takes
-    uniform bins, so this is a JVM-side higher-order-function count."""
+    uniform bins, so this is a JVM-side higher-order-function count.
+
+    The value is bound once per row by ``transform`` over a one-element
+    array: a lambda over the column itself would evaluate the input
+    expression once per edge after ``CollapseProject`` inlines it (for
+    ``length(text)``, a full scan of the text per edge). Higher-order
+    functions run interpreted, so the edges stay out of generated code and
+    a new edge set compiles no new class."""
     arr = F.array(*[F.lit(float(e)) for e in edges])
     v = F.col(col).cast("double")
-    return F.size(F.filter(arr, lambda e: v > e))
+    return F.transform(F.array(v),
+                       lambda x: F.size(F.filter(arr, lambda e: x > e)))[0]
 
 
 def fixed_bucket(col: str, lo: float, width: float, nbins: int) -> Column:

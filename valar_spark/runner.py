@@ -11,7 +11,12 @@ cluster sizes. A run processes pending buckets in batches; per batch it
 3. evaluates the compiled rule projection ONCE (persisted for the batch),
 4. writes violations with idempotent per-partition overwrite (a re-run of
    a crashed bucket replaces, never duplicates),
-5. appends per-bucket verdict + metrics rows to the state table.
+5. appends per-bucket verdict + metrics rows to the state table. The
+   state rows are the commit marker: a bucket is done once its rows are
+   in. An incremental run's carried buckets (see :func:`run_incremental`)
+   go into the same append as its first batch's rows; their violations
+   are not copied, because each carried row's ``source_run_id`` names
+   the run whose sink partitions hold them.
 
 Violation rows are STAMPED with ``(run_id, rule_set_hash)`` and the sink is
 partitioned by ``(run_id, rule_set_hash, partition_id)``: reads filter on
@@ -28,6 +33,13 @@ Resume = read the state table, anti-select completed buckets for the same
 ``(run_id, rule_set_hash)``, process only the rest. The rule-set hash
 guards against resuming across a rule change; the table snapshot id is
 recorded for lineage.
+
+A run's result reads the sink once: its own partitions plus, for each
+carried bucket, the ``(source_run_id, bucket)`` partition it refers to,
+relabelled to the run's ``run_id`` by projection — the snapshot model of
+Iceberg, where a new snapshot refers to the data files it keeps instead of
+rewriting them. :func:`expire_runs` deletes a run only when no remaining
+run refers to it.
 """
 
 from __future__ import annotations
@@ -39,7 +51,7 @@ import time
 from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from .validate import (BUCKET_COL, RuleSet, bucket_expr, verdicts_from,
@@ -48,7 +60,7 @@ from .validate import (BUCKET_COL, RuleSet, bucket_expr, verdicts_from,
 STATE_SCHEMA = (
     "run_id string, rule_set_hash string, partition_id int, status string, "
     "rule_id string, violation_count long, rows_checked long, "
-    "snapshot_id string, finished_at double"
+    "snapshot_id string, finished_at double, source_run_id string"
 )
 
 
@@ -114,16 +126,25 @@ def _fs_delete(spark: SparkSession, path: str) -> None:
         fs.delete(p, True)
 
 
+def _fs_rename(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename through the Hadoop FileSystem; raises if it fails."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(src)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.rename(p, jvm.org.apache.hadoop.fs.Path(dst)):
+        raise OSError(f"could not rename {src} to {dst}")
+
+
 def _read_state(spark: SparkSession, cfg: RunnerConfig) -> DataFrame:
     """The state table, read with its known schema (no inference job)."""
     return spark.read.schema(STATE_SCHEMA).parquet(cfg.state_path)
 
 
-def _completed_buckets(spark: SparkSession, cfg: RunnerConfig, rsh: str,
-                       run_ids: Sequence[str]) -> dict[str, set[int]]:
-    """Buckets done under each of ``run_ids`` for rule set ``rsh``, from
-    one state read."""
-    done: dict[str, set[int]] = {r: set() for r in run_ids}
+def _done_rows(spark: SparkSession, cfg: RunnerConfig, rsh: str,
+               run_ids: Sequence[str]) -> dict[str, list[Row]]:
+    """The done state rows of each of ``run_ids`` for rule set ``rsh``,
+    from one state read."""
+    done: dict[str, list[Row]] = {r: [] for r in run_ids}
     if not _fs_exists(spark, cfg.state_path):
         return done
     rows = (
@@ -132,12 +153,26 @@ def _completed_buckets(spark: SparkSession, cfg: RunnerConfig, rsh: str,
             & (F.col("rule_set_hash") == rsh)
             & (F.col("status") == "done")
         )
-        .select("run_id", "partition_id")
         .collect()
     )
     for r in rows:
-        done[r["run_id"]].add(r["partition_id"])
+        done[r["run_id"]].append(r)
     return done
+
+
+def _owner(row: Row) -> str:
+    """The run whose sink partitions hold a state row's violations: its
+    ``source_run_id``, or its own run when that is null (rows of validated
+    buckets, and every row of a state table written before the column)."""
+    return row["source_run_id"] or row["run_id"]
+
+
+def _carried(row: Row, run_id: str) -> Row:
+    """Another run's state row as ``run_id``'s: the same verdict, metrics
+    and ``snapshot_id`` (the snapshot it was computed on), pointing at the
+    run that owns the violations, so a chain a → b → c points at a."""
+    return Row(**{**row.asDict(), "run_id": run_id,
+                  "source_run_id": _owner(row)})
 
 
 def run_checkpointed(
@@ -149,98 +184,105 @@ def run_checkpointed(
     observer=None,
 ) -> RunResult:
     rsh = rule_set_hash(ruleset)
-    done = _completed_buckets(df.sparkSession, cfg, rsh, [cfg.run_id])
-    return _run_pending(df, ruleset, cfg, rsh, done[cfg.run_id], keys,
+    done = _done_rows(df.sparkSession, cfg, rsh, [cfg.run_id])
+    return _run_pending(df, ruleset, cfg, rsh, done[cfg.run_id], [], keys,
                         partition_cols, observer)
 
 
 def _run_pending(df: DataFrame, ruleset: RuleSet, cfg: RunnerConfig,
-                 rsh: str, done: set[int], keys: Sequence[str],
-                 partition_cols: Sequence[str], observer) -> RunResult:
-    """Validate every bucket not in ``done`` under ``cfg.run_id``, batch
-    by batch, and return the run's stored result."""
+                 rsh: str, committed: Sequence[Row], carry: Sequence[Row],
+                 keys: Sequence[str], partition_cols: Sequence[str],
+                 observer) -> RunResult:
+    """Validate every bucket that neither the ``committed`` state rows of
+    ``cfg.run_id`` nor the ``carry`` rows cover, batch by batch, and
+    return the run's stored result. The ``carry`` rows are committed with
+    the first batch's state rows (alone when no bucket is pending)."""
     spark = df.sparkSession
     vcfg = ruleset.config
     # repeated ids (same-named leaves) share one verdict row per bucket
     rule_ids = list(dict.fromkeys(ruleset.rule_ids()))
 
-    all_buckets = list(range(vcfg.num_buckets))
-    pending = [b for b in all_buckets if b not in done]
+    held = [*committed, *carry]
+    done = {r["partition_id"] for r in held}
+    # bucket -> the other run whose sink partition holds its violations
+    referred = {r["partition_id"]: _owner(r) for r in held
+                if _owner(r) != cfg.run_id}
+    pending = [b for b in range(vcfg.num_buckets) if b not in done]
 
     base = df.withColumn(BUCKET_COL, bucket_expr(list(partition_cols), vcfg.num_buckets))
     errors_col = ruleset.errors_column(df)
     total_rows = 0
 
-    # dynamic partition overwrite is needed for idempotent bucket re-writes;
-    # save the session's prior setting and restore it when the run ends so
-    # unrelated writes in the same session keep their overwrite semantics
-    _POM = "spark.sql.sources.partitionOverwriteMode"
-    prior_pom = spark.conf.get(_POM, "static")
+    def commit(state_rows):
+        (_local_frame(spark, state_rows, STATE_SCHEMA)
+         .coalesce(1).write.mode("append").parquet(cfg.state_path))
 
-    try:
-        for i in range(0, len(pending), cfg.buckets_per_job):
-            batch = pending[i:i + cfg.buckets_per_job]
-            sub = base.filter(F.col(BUCKET_COL).isin(batch))
-            # salted repartition: hot conv_ids spread over `salt` tasks while the
-            # logical bucket stays the verdict/lineage key
-            salt = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(vcfg.salt))
-            sub = sub.repartition(len(batch) * vcfg.salt, F.col(BUCKET_COL), salt)
+    uncommitted = list(carry)
+    for i in range(0, len(pending), cfg.buckets_per_job):
+        batch = pending[i:i + cfg.buckets_per_job]
+        sub = base.filter(F.col(BUCKET_COL).isin(batch))
+        # salted repartition: hot conv_ids spread over `salt` tasks while the
+        # logical bucket stays the verdict/lineage key
+        salt = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(vcfg.salt))
+        sub = sub.repartition(len(batch) * vcfg.salt, F.col(BUCKET_COL), salt)
 
-            errs = sub.select(*keys, BUCKET_COL, errors_col.alias("_errors"))
-            errs = errs.persist()
-            try:
-                viol = violations_from(errs, keys).withColumns({
-                    "run_id": F.lit(cfg.run_id),
-                    "rule_set_hash": F.lit(rsh),
-                })
-                if vcfg.max_violations_per_rule is not None:
-                    from pyspark.sql.window import Window
+        errs = sub.select(*keys, BUCKET_COL, errors_col.alias("_errors"))
+        errs = errs.persist()
+        try:
+            viol = violations_from(errs, keys).withColumns({
+                "run_id": F.lit(cfg.run_id),
+                "rule_set_hash": F.lit(rsh),
+            })
+            if vcfg.max_violations_per_rule is not None:
+                from pyspark.sql.window import Window
 
-                    w = (Window.partitionBy(BUCKET_COL, "rule_id")
-                         .orderBy(*[F.col(k) for k in keys]))
-                    viol = (viol.withColumn("_rn", F.row_number().over(w))
-                            .filter(F.col("_rn") <= vcfg.max_violations_per_rule)
-                            .drop("_rn"))
-                # idempotent: re-running a crashed bucket replaces its partition.
-                # Clear the batch's partition dirs first — a re-run that now
-                # yields ZERO violations for a bucket writes no partition, and
-                # dynamic overwrite alone would leave the crashed attempt's rows.
-                _clear_bucket_partitions(spark, cfg, rsh, batch)
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-                (viol.write.mode("overwrite")
-                 .partitionBy("run_id", "rule_set_hash", BUCKET_COL)
-                 .parquet(cfg.violations_path))
+                w = (Window.partitionBy(BUCKET_COL, "rule_id")
+                     .orderBy(*[F.col(k) for k in keys]))
+                viol = (viol.withColumn("_rn", F.row_number().over(w))
+                        .filter(F.col("_rn") <= vcfg.max_violations_per_rule)
+                        .drop("_rn"))
+            # idempotent: re-running a crashed bucket replaces its partition.
+            # Clear the batch's partition dirs first — a re-run that now
+            # yields ZERO violations for a bucket writes no partition, and
+            # dynamic overwrite alone would leave the crashed attempt's rows.
+            # The overwrite mode is a write option, so the session's conf
+            # (and every other query in it) is left alone.
+            _clear_bucket_partitions(spark, cfg, rsh, batch)
+            (viol.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("run_id", "rule_set_hash", BUCKET_COL)
+             .parquet(cfg.violations_path))
 
-                verd = verdicts_from(errs, rule_ids).collect()
-            finally:
-                errs.unpersist()
+            verd = verdicts_from(errs, rule_ids).collect()
+        finally:
+            errs.unpersist()
 
-            rows_by_bucket = {r[BUCKET_COL]: r["rows_checked"] for r in verd}
-            state_rows = [
-                (cfg.run_id, rsh, r[BUCKET_COL], "done", r["rule_id"],
-                 r["violation_count"], r["rows_checked"],
-                 cfg.snapshot_id, time.time())
-                for r in verd
-            ] + [
-                # buckets with zero rows in this batch are still complete
-                (cfg.run_id, rsh, b, "done", rid, 0, 0, cfg.snapshot_id,
-                 time.time())
-                for b in batch if b not in rows_by_bucket for rid in rule_ids
-            ]
-            total_rows += sum(rows_by_bucket.values())
-            (_local_frame(spark, state_rows, STATE_SCHEMA)
-             .coalesce(1).write.mode("append").parquet(cfg.state_path))
-            if observer is not None:
-                from .observer import VerdictEvent
+        rows_by_bucket = {r[BUCKET_COL]: r["rows_checked"] for r in verd}
+        state_rows = [
+            (cfg.run_id, rsh, r[BUCKET_COL], "done", r["rule_id"],
+             r["violation_count"], r["rows_checked"],
+             cfg.snapshot_id, time.time(), None)
+            for r in verd
+        ] + [
+            # buckets with zero rows in this batch are still complete
+            (cfg.run_id, rsh, b, "done", rid, 0, 0, cfg.snapshot_id,
+             time.time(), None)
+            for b in batch if b not in rows_by_bucket for rid in rule_ids
+        ]
+        total_rows += sum(rows_by_bucket.values())
+        commit(state_rows + uncommitted)
+        uncommitted = []
+        if observer is not None:
+            from .observer import VerdictEvent
 
-                observer([
-                    VerdictEvent(run_id=cfg.run_id, partition_id=r[2],
-                                 rule_id=r[4], passed=r[5] == 0,
-                                 violation_count=r[5], rows_checked=r[6])
-                    for r in state_rows
-                ])
-    finally:
-        spark.conf.set(_POM, prior_pom)
+            observer([
+                VerdictEvent(run_id=cfg.run_id, partition_id=r[2],
+                             rule_id=r[4], passed=r[5] == 0,
+                             violation_count=r[5], rows_checked=r[6])
+                for r in state_rows
+            ])
+    if uncommitted:
+        commit(uncommitted)
 
     if not _fs_exists(spark, cfg.violations_path):
         # sink never created (zero buckets pending and no prior run)
@@ -257,11 +299,19 @@ def _run_pending(df: DataFrame, ruleset: RuleSet, cfg: RunnerConfig,
         # an UNABLE_TO_INFER_SCHEMA error, so there is deliberately NO
         # except here: any read exception is real infra failure and must
         # propagate rather than become a silent zero-violation PASS.
+        # A carried bucket is read from its owner's partition only: rows
+        # a crashed attempt may have left under this run_id are not its.
+        stamp = F.col("run_id") == cfg.run_id
+        if referred:
+            stamp &= ~F.col(BUCKET_COL).isin(sorted(referred))
+        for owner in sorted(set(referred.values())):
+            stamp |= (F.col("run_id") == owner) & F.col(BUCKET_COL).isin(
+                sorted(b for b, o in referred.items() if o == owner))
         violations = (
             spark.read.schema(_empty_violations(df, keys).schema)
             .parquet(cfg.violations_path)
-            .filter((F.col("run_id") == cfg.run_id)
-                    & (F.col("rule_set_hash") == rsh))
+            .filter(stamp & (F.col("rule_set_hash") == rsh))
+            .withColumn("run_id", F.lit(cfg.run_id))
         )
     verdicts = (
         _read_state(spark, cfg)
@@ -348,8 +398,18 @@ def run_incremental(
     """Snapshot-over-snapshot revalidation that pays only for what
     changed: fingerprint the current table per lineage bucket, diff
     against ``prev_run_id``'s stored fingerprints, CARRY FORWARD the
-    previous run's verdicts and violations for unchanged buckets, and
-    run the rule pass only on added/changed (and newly-empty) buckets.
+    previous run's verdicts for unchanged buckets BY REFERENCE, and run
+    the rule pass only on added/changed (and newly-empty) buckets.
+
+    A carried bucket costs one state row per rule and no sink write: the
+    row's ``source_run_id`` names the run whose violation partitions hold
+    the bucket (the owner, followed through chains, so a → b → c points
+    at a), and the result reads them there. The carried rows are
+    committed in the same state append as the first validated batch (or
+    alone when nothing is pending), so a crash before that append leaves
+    nothing carried. Observer events cover validated buckets only. Keep
+    an owner run while later runs refer to it: :func:`expire_runs`
+    refuses to drop it.
 
     This is the daily-snapshot operating mode at 100 TB: if 2% of
     conversations changed since yesterday, the engine hashes one pass
@@ -373,22 +433,21 @@ def run_incremental(
         prev_path = (_fingerprints_path(cfg, prev_run_id)
                      if prev_run_id else None)
         has_prev = bool(prev_path) and _fs_exists(spark, prev_path)
-        done = _completed_buckets(
+        done = _done_rows(
             spark, cfg, rsh,
             [prev_run_id, cfg.run_id] if has_prev else [cfg.run_id])
-        skip = done[cfg.run_id]
+        committed = done[cfg.run_id]
+        carry = []
         if has_prev:
             prev_fp = spark.read.schema(cur_fp.schema).parquet(prev_path)
             dirty = {r["partition_id"] for r in
                      changed_buckets(cur_fp, prev_fp).collect()}
             # a bucket this run already holds (carried or validated by an
             # earlier attempt that crashed) is not carried again
-            carried = sorted(done[prev_run_id] - dirty - skip)
-            if carried:
-                _carry(spark, cfg, rsh, prev_run_id, carried,
-                       _empty_violations(df, keys).schema)
-            skip = skip | set(carried)
-        res = _run_pending(df, ruleset, cfg, rsh, skip, keys,
+            skip = dirty | {r["partition_id"] for r in committed}
+            carry = [_carried(r, cfg.run_id) for r in done[prev_run_id]
+                     if r["partition_id"] not in skip]
+        res = _run_pending(df, ruleset, cfg, rsh, committed, carry, keys,
                            partition_cols, observer)
         # persist this run's fingerprints for the NEXT increment
         (cur_fp.coalesce(1).write.mode("overwrite")
@@ -398,34 +457,45 @@ def run_incremental(
     return res
 
 
-def _carry(spark: SparkSession, cfg: RunnerConfig, rsh: str,
-           prev_run_id: str, carried: Sequence[int], viol_schema) -> None:
-    """Copy ``prev_run_id``'s violations and verdicts of the ``carried``
-    buckets under ``cfg.run_id``. Verdicts keep their original
-    ``snapshot_id`` (honest lineage). The state rows are appended last:
-    they are the commit marker, so a crash before them leaves the buckets
-    uncarried and the next attempt clears and rewrites their partitions."""
-    if _fs_exists(spark, cfg.violations_path):
-        _clear_bucket_partitions(spark, cfg, rsh, carried)
-        # explicit schema: same false-PASS inference hazard as the
-        # run_checkpointed result read
-        prev_viol = (
-            spark.read.schema(viol_schema).parquet(cfg.violations_path)
-            .filter((F.col("run_id") == prev_run_id)
-                    & (F.col("rule_set_hash") == rsh)
-                    & (F.col(BUCKET_COL).isin(carried)))
-        )
-        (prev_viol.withColumn("run_id", F.lit(cfg.run_id))
-         .write.mode("append")
-         .partitionBy("run_id", "rule_set_hash", BUCKET_COL)
-         .parquet(cfg.violations_path))
-    (_read_state(spark, cfg)
-     .filter((F.col("run_id") == prev_run_id)
-             & (F.col("rule_set_hash") == rsh)
-             & (F.col("status") == "done")
-             & F.col("partition_id").isin(carried))
-     .withColumn("run_id", F.lit(cfg.run_id))
-     .coalesce(1).write.mode("append").parquet(cfg.state_path))
+def expire_runs(spark: SparkSession, work_dir: str,
+                run_ids: Sequence[str]) -> None:
+    """Delete the runs ``run_ids`` of ``work_dir``: their state rows, sink
+    partitions and stored fingerprints (Iceberg's snapshot expiry). A run
+    that a remaining run still refers to — it owns violations of a bucket
+    that run carried — cannot go: ``ValueError`` names both, and nothing
+    is deleted. Expire the referring runs first, or in the same call.
+
+    The state table is rewritten without the runs' rows before their sink
+    partitions go, so an interrupted expiry never leaves a done verdict
+    whose violations are gone; at worst it leaves unreferenced sink files,
+    or (between the state delete and the rename) no state, after which
+    every bucket is validated again."""
+    if isinstance(run_ids, str):
+        raise TypeError("run_ids is a sequence of run ids, not one string")
+    cfg = RunnerConfig(work_dir=work_dir)
+    drop = list(dict.fromkeys(run_ids))
+    if _fs_exists(spark, cfg.state_path):
+        state = _read_state(spark, cfg)
+        refs = (state.filter(~F.col("run_id").isin(drop)
+                             & F.col("source_run_id").isin(drop))
+                .select("source_run_id", "run_id").distinct()
+                .orderBy("source_run_id", "run_id").collect())
+        if refs:
+            raise ValueError(
+                "cannot expire runs that remaining runs refer to: "
+                + ", ".join(f"{r['source_run_id']} (by {r['run_id']})"
+                            for r in refs))
+        fresh = f"{cfg.state_path}.expiring"
+        (state.filter(~F.col("run_id").isin(drop))
+         .coalesce(1).write.mode("overwrite").parquet(fresh))
+        _fs_delete(spark, cfg.state_path)
+        _fs_rename(spark, fresh, cfg.state_path)
+    esc = spark._jvm.org.apache.spark.sql.catalyst.catalog \
+        .ExternalCatalogUtils.escapePathName
+    for r in drop:
+        _fs_delete(spark, os.path.join(cfg.violations_path,
+                                       f"run_id={esc(r)}"))
+        _fs_delete(spark, _fingerprints_path(cfg, r))
 
 
 def _clear_bucket_partitions(spark: SparkSession, cfg: RunnerConfig,

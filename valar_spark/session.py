@@ -36,7 +36,18 @@ executor tasks 9.4-10.1 s -> 10.5-11.5 s, host-busy CPU 65-73 s ->
 Over 10 interleaved pairs (seed 1), ``rows_per_cpu_s`` went 151.6 ->
 203.2 on ``validate_batch`` and 13.5 -> 15.5 on ``curate_docs`` (10/10
 wins each); the 2M-turn flagship's median went 332k -> 348k turns/s over
-5 pairs (3 wins, all on a throttling host)."""
+5 pairs (3 wins, all on a throttling host).
+
+PySpark's per-call origin capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``; ``extra_conf``
+can turn it back on). With it on, every ``functions`` and ``Column`` call
+walks the Python stack, tries ``import IPython`` and makes several extra
+py4j round trips to record its call site: on a 4-vCPU VM ``F.col("x")``
+took 1.45-1.78 ms instead of 0.48-0.52 ms, and the calls of one perfbench
+``validate_batch`` pass (seed 1) made 25.6k-25.8k instead of 12.8k round
+trips. Errors keep their class,
+condition and message; only the call site in a DataFrame error's query
+context names a JVM frame instead of the Python ``file:line``."""
 
 from __future__ import annotations
 
@@ -140,6 +151,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("VALAR_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     daemon = python_daemon_module(master, _PACKAGE_PARENT,
                                   *_worker_launch_path(), _site_dirs())
